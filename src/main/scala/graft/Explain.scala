@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
   * codegen spans after every operator change.
   *
   * Usage: graft.Explain <queryKey> [run|plan|fmt] [sfDir] [outFile]
+  *        graft.Explain <pagerank|dupclusters|kcore> iter [sfDir] [outFile]
   *
   * `fmt` materializes through noop (so AQE finalizes), then prints the
   * FORMATTED plan (`explain("formatted")` — numbered operators, pushed
@@ -33,16 +34,17 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (mode == "iter") {
-      // ITERATION-level plan for the fixpoint operators (round 16 —
-      // VERDICT r15 item 7): the declared-query dumps only show the
-      // post-checkpoint final stage, so the broadcast-vs-shuffle
-      // iteration join (PageRank) and the fused zero-exchange
-      // convergence probe (dupClusters) were code-verified only.
-      // Builds ONE round's pre-checkpoint frame from the same edge
-      // pipeline the consumer keys use and dumps its executed plan.
-      // Keys: `pagerank` (q115's edge set) | `dupclusters` (q123's).
+      // ITERATION-level plan for the fixpoint operators: the
+      // declared-query dumps only show the post-checkpoint final stage.
+      // Builds the first round from the same edge pipeline the consumer
+      // keys use — through the operator's own seed and round functions —
+      // and dumps its executed plan. Keys: `pagerank` (q115's edge set)
+      // | `dupclusters` | `kcore` (the LSH pairs of q123 and q225).
       import org.apache.spark.sql.functions._
+      import graft.operators.{Checkpoints, TextDedup}
       val out = if (args.length > 3) Some(args(3)) else None
+      lazy val pairs = TextDedup.lshCandidatePairs(TextDedup.minhashSignatures(
+        Tables.documents(spark, sfDir), "doc_id", "text"), "doc_id")
       val frame = key match {
         case "pagerank" =>
           // q115's bipartite customer–supplier edge set
@@ -51,22 +53,19 @@ object Explain {
               col("o_orderkey") === col("l_orderkey"))
             .select((col("o_custkey").cast("long") * 2).as("src"),
               (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          val edges = dir
-            .unionAll(dir.select(col("dst").as("src"), col("src").as("dst")))
-            .distinct()
+          val edges = TextDedup.undirectedEdges(dir, "src", "dst").distinct()
           // the real loop runs with AQE off (PageRank.run default)
           spark.conf.set("spark.sql.adaptive.enabled", "false")
           graft.operators.PageRank.iterationFrame(edges)
         case "dupclusters" =>
-          // q123's LSH candidate-pair edge set
-          val sigs = graft.operators.TextDedup.minhashSignatures(
-            Tables.documents(spark, sfDir)
-              .select(col("doc_id"), col("text")), "doc_id", "text")
-          val pairs = graft.operators.TextDedup
-            .lshCandidatePairs(sigs, "doc_id")
-          graft.operators.TextDedup.dupClustersRoundFrame(pairs)
+          val edges = Checkpoints.truncate(TextDedup.undirectedEdges(pairs))
+          TextDedup.dupClustersRound(edges)(
+            Checkpoints.truncate(TextDedup.dupClustersSeed(edges)))._1
+        case "kcore" =>
+          TextDedup.kCoreRound(2)(
+            Checkpoints.truncate(TextDedup.kCoreSeed(pairs)))._1
         case other => sys.error(s"iter mode: unknown operator '$other' " +
-          "(expected pagerank | dupclusters)")
+          "(expected pagerank | dupclusters | kcore)")
       }
       frame.write.format("noop").mode("overwrite").save()
       val txt = frame.queryExecution.explainString(

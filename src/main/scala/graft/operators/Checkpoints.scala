@@ -65,24 +65,17 @@ object Checkpoints {
     }
   }
 
-  /** Release a frame [[truncate]] returned and the loop has
-    * SUPERSEDED: unpin its blocks AND delete its reliable recovery
-    * files. `Dataset.unpersist` cannot do the first half:
-    * localCheckpoint pins its RDD blocks outside the SQL cache
-    * manager, so the Dataset-level call is a silent no-op and every
-    * propagation round leaks one labels-sized pinned frame (the
-    * round-13 scale stress measured rounds degrading from ~3 s to
-    * >2 min as the block manager filled — at cluster scale that is
-    * an executor OOM on pinned garbage). Reaches the checkpointed
-    * RDD through the frame's LogicalRDD leaf. For RELIABLE
-    * checkpoints the recovery files are deleted too (round 14
-    * ADVICE): a superseded round can never be recovered FROM — its
-    * successor was checkpointed eagerly and recovers from its own
-    * files — so keeping them accumulates one full frame copy per
-    * round on the checkpoint store for the lifetime of exactly the
-    * long unattended runs the reliable knob targets. Only call on
-    * frames no later round reads (truncate is eager, so a successor
-    * built from this frame holds no reference back). */
+  /** Release a frame [[truncate]] returned once nothing reads it any
+    * more — [[Fixpoint]] does so for every superseded round: unpin its
+    * blocks AND delete its reliable recovery files. `Dataset.unpersist`
+    * is a silent no-op here (localCheckpoint pins its RDD outside the
+    * SQL cache manager), and without this each round leaks one pinned
+    * frame: the round-13 scale stress saw rounds slow from ~3 s to
+    * >2 min as the block manager filled. A superseded round's reliable
+    * files are never recovered from (its successor was checkpointed
+    * eagerly), so keeping them would store one frame copy per round.
+    * Reaches the checkpointed RDD through the frame's LogicalRDD leaf;
+    * truncate is eager, so a successor holds no reference back. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

@@ -38,8 +38,7 @@ object PageRank {
     val e = edges
       .select(concat(lit(aPrefix), col(aCol).cast("string")).as("src"),
         concat(lit(bPrefix), col(bCol).cast("string")).as("dst"))
-    e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    TextDedup.undirectedEdges(e, "src", "dst").distinct()
   }
 
   /** `iters` power iterations at damping `d` over (src, dst) edges.

@@ -268,121 +268,100 @@ object TextDedup {
       .select(col(idCol), expr(s"simhash64($textCol)").as("simhash"))
   }
 
-  /** ONE propagation round's label frame (pre-checkpoint, carrying the
-    * fused `__chg` convergence flag) — the exact loop body of
-    * [[dupClusters]], exposed for plan tooling (`graft.Explain <…>
-    * iter`, VERDICT r15 item 7): the round-level plan shows the fused
-    * probe (the flag computed inside the round's projection, so the
-    * convergence check is a zero-exchange filter over the checkpointed
-    * blocks) that the final-answer dump cannot. */
-  def dupClustersRoundFrame(pairs: DataFrame, idA: String = "a_id",
-      idB: String = "b_id"): DataFrame = {
-    val edges = Checkpoints.truncate(
-      pairs.select(explode(array(
-          struct(col(idA).as("src"), col(idB).as("dst")),
-          struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val labels = Checkpoints.truncate(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster", col("id")))
-    val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-      .groupBy(col("dst").as("id")).agg(min("cluster").as("nl"))
-    labels.join(prop, Seq("id"), "left")
-      .select(col("id"),
-        least(col("cluster"), coalesce(col("nl"), col("cluster"))).as("cluster"),
-        (col("nl") < col("cluster")).as("__chg"))
+  /** Both directions of every (idA, idB) pair as (src, dst), in ONE
+    * pass over the pair pipeline — a two-arm union runs whatever
+    * produced the pairs once per arm. The edge build of [[dupClusters]],
+    * [[kCore]], [[PageRank.undirected]] and q186's recursive reach. */
+  def undirectedEdges(pairs: DataFrame, idA: String = "a_id",
+      idB: String = "b_id"): DataFrame =
+    pairs.select(explode(array(
+        struct(col(idA).as("src"), col(idB).as("dst")),
+        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** Round one's labels: each id its own cluster, all to be sent. */
+  def dupClustersSeed(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id")).withColumn("__chg", lit(true))
+
+  /** One min-label propagation round of [[dupClusters]] over `edges`
+    * (src, dst) and `labels` (id, cluster, __chg):
+    * `union(own labels, edges ⋈ labels)` grouped by id, so the round's
+    * one shuffle is that aggregate's. Only the labels the previous
+    * round changed (`__chg`) are sent along edges — an unchanged label
+    * already reached every neighbour — so the join side shrinks as
+    * components settle (broadcast while it fits). The probe counts the
+    * ids whose label dropped. `graft.Explain dupclusters iter` dumps it. */
+  def dupClustersRound(edges: DataFrame)(labels: DataFrame): (DataFrame, Column) = {
+    val sent = edges.join(labels.where(col("__chg"))
+        .select(col("id").as("src"), col("cluster")), "src")
+      .select(col("dst").as("id"), col("cluster"), lit(false).as("__self"))
+    val next = labels.select(col("id"), col("cluster"), lit(true).as("__self"))
+      .unionByName(sent)
+      .groupBy("id")
+      .agg(min("cluster").as("cluster"),
+        min(when(col("__self"), col("cluster"))).as("__was"))
+      .select(col("id"), col("cluster"), (col("cluster") < col("__was")).as("__chg"))
+    (next, count_if(col("__chg")))
   }
 
-  /** Connected components over candidate pairs — duplicate CLUSTERS.
-    * Dropping each pair's higher id (the naive rule) can retain two
+  /** Connected components over candidate pairs — duplicate CLUSTERS:
+    * (id, cluster) with cluster = the min id of the component.
+    * Dropping each pair's higher id (the naive rule) can keep two
     * transitively-linked docs: pairs (7,9) and (5,9) never list 7 as a
-    * b_id, so both 5 and 7 survive although they share a cluster via
-    * 9. Min-label propagation converges to one label per component in
-    * O(diameter) rounds (dup clusters are shallow); every round is two
-    * bucket-keyed shuffles, and the loop exits on a fixpoint check
-    * (one scalar per round — the AQE-style driver decision, not a data
-    * collect). Lineage is truncated each round via
-    * [[Checkpoints.truncate]] — localCheckpoint by default (no
-    * fault tolerance: an executor loss on a real cluster fails the
-    * job), a RELIABLE checkpoint when the session sets
-    * `spark.graft.checkpoint.dir` (Checkpoints.ReliableDirKey) —
-    * the knob long unattended cluster runs should set.
-    * Returns (id, cluster) with cluster = min id of the component.
-    * `onRound` (observability, default no-op) fires after each
-    * propagation round with (round index, wall millis) — what the
-    * scale-stress recording (NOTES round 13) and a production
-    * progress monitor hook into. */
+    * b_id, so 5 and 7 both survive although 9 links them.
+    * [[dupClustersRound]] runs on the [[Fixpoint]] loop for O(diameter)
+    * rounds (dup clusters are shallow). The edge set is truncated once,
+    * since every round reads it, and released on return. Truncation is
+    * [[Checkpoints.truncate]]: localCheckpoint by default (an executor
+    * loss on a real cluster fails the job), reliable when the session
+    * sets `spark.graft.checkpoint.dir`. A component needing more than
+    * `maxIter` rounds throws instead of breaking the min-id contract;
+    * `onRound` receives (round, wall ms). */
   def dupClusters(pairs: DataFrame, idA: String = "a_id",
       idB: String = "b_id", maxIter: Int = 20,
       onRound: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
-    // Pin the edge set before iterating: every propagation round joins
-    // against it, and without the checkpoint each round re-executes
-    // whatever pipeline produced the pairs (for the LSH path, the full
-    // shingle→minhash→bucket cascade — measured 3x the whole
-    // operator's cost at sf0.1). The pair set is LSH-bounded (far
-    // smaller than the corpus), so materializing it is the cheap side.
-    // both directions in ONE pass over the pair pipeline (round 16):
-    // the union form executed whatever produced the pairs once per arm
-    // (the final distinct's exchange is reused, but its reduce-side
-    // aggregation and everything above it ran twice)
-    val edges = Checkpoints.truncate(
-      pairs.select(explode(array(
-          struct(col(idA).as("src"), col(idB).as("dst")),
-          struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    var labels = Checkpoints.truncate(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster", col("id")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min("cluster").as("nl"))
-      // the changed-this-round flag rides INSIDE the checkpointed frame
-      // (round 15): the convergence probe then scans the already
-      // materialized blocks instead of re-joining next against the old
-      // labels — one label-keyed shuffle join fewer per round, and the
-      // probe job is a checkpoint-local filter with zero exchanges
-      val next = Checkpoints.truncate(
-        labels.join(prop, Seq("id"), "left")
-          .select(col("id"),
-            least(col("cluster"), coalesce(col("nl"), col("cluster"))).as("cluster"),
-            (col("nl") < col("cluster")).as("__chg")))
-      converged = next.where(col("__chg")).isEmpty
-      // drop the SUPERSEDED round's pinned blocks: truncate is eager,
-      // so `next` holds no reference to the old lineage, and the
-      // convergence check above was the old frame's last read. Without
-      // this every round leaks one labels-sized pinned frame — at the
-      // round-13 scale stress (1M edges, 30 chain rounds) the leak
-      // grew round times from ~3 s to >2 min as the block manager
-      // filled (NOTES round-21 table) — a deep-graph cluster run
-      // would OOM its executors on pinned garbage. Dataset.unpersist
-      // is a silent no-op for checkpointed frames — Checkpoints.release
-      // reaches the pinned RDD itself.
-      Checkpoints.release(labels)
-      labels = next.select("id", "cluster")
-      i += 1
-      onRound(i, (System.nanoTime() - t0) / 1000000L)
-    }
-    // The edge set had its last read inside the loop, and the labels
-    // frame being returned is itself checkpointed (self-contained, no
-    // reference back) — release the edge checkpoint here or every
-    // dupClusters call leaks one edge-set-sized pinned frame for the
-    // session's lifetime, the same block-manager pressure class the
-    // round-13 per-round fix targeted (round 14 ADVICE). Released on
-    // the non-converged path too: the throw below aborts the OPERATOR,
-    // not the session that catches it.
-    Checkpoints.release(edges)
-    // A component with diameter > maxIter would exit here NON-converged
-    // and silently violate the 'cluster = min id of component' contract
-    // (the same transitivity class the propagation exists to fix) —
-    // fail loudly instead; real dup clusters are shallow, so hitting
-    // this means maxIter is set far too low for the corpus.
-    if (!converged) throw new IllegalStateException(
-      s"dupClusters: label propagation not converged after $maxIter rounds " +
-        "(component diameter exceeds maxIter); raise maxIter")
-    labels
+    val edges = Checkpoints.truncate(undirectedEdges(pairs, idA, idB))
+    try Fixpoint.run(dupClustersSeed(edges), "dupClusters", maxIter, onRound)(
+        dupClustersRound(edges))
+      .select("id", "cluster")
+    finally Checkpoints.release(edges)
+  }
+
+  /** Round one's edges: [[undirectedEdges]], none flagged. */
+  def kCoreSeed(pairs: DataFrame): DataFrame =
+    undirectedEdges(pairs).withColumn("__drop", lit(false))
+
+  /** One peel round of [[kCore]] over `edges` (src, dst, __drop), both
+    * directions of every edge: drop the rows the previous round flagged,
+    * then flag each row with an end of degree < k — the degree
+    * aggregate's low nodes joined back on src and on dst (broadcast
+    * while they fit), so both directions of an edge go together. The
+    * probe counts the flagged rows. `graft.Explain kcore iter` dumps it. */
+  def kCoreRound(k: Int)(edges: DataFrame): (DataFrame, Column) = {
+    val live = edges.where(!col("__drop")).select("src", "dst")
+    val low = live.groupBy(col("src").as("__low"))
+      .agg(count(lit(1)).as("__deg")).where(col("__deg") < k)
+    val next = live
+      .join(low.as("a"), col("src") === col("a.__low"), "left")
+      .join(low.as("b"), col("dst") === col("b.__low"), "left")
+      .select(col("src"), col("dst"),
+        (col("a.__low").isNotNull || col("b.__low").isNotNull).as("__drop"))
+    (next, count_if(col("__drop")))
+  }
+
+  /** K-CORE of the pair graph: the largest subgraph in which every node
+    * keeps at least `k` neighbours — on a near-dup graph, the
+    * high-confidence duplication nucleus. [[kCoreRound]] peels on the
+    * [[Fixpoint]] loop until a round flags no edge. Pairs (a_id, b_id)
+    * must be distinct undirected edges, as `lshCandidatePairs` emits.
+    * Returns (id, deg) per core node, deg its in-core degree; empty
+    * when the core is. More than `maxIter` rounds throws. The result
+    * reads the last round's checkpoint: GC frees it, `clearCache` not. */
+  def kCore(pairs: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
+    require(k >= 1, s"kCore: k must be >= 1, got $k")
+    Fixpoint.run(kCoreSeed(pairs), "kCore", maxIter, (_, _) => ())(kCoreRound(k))
+      .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
   }
 
   /** Per-doc contamination scores against a benchmark corpus — the

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.operators.TextDedup
 
 /** Graph analytics over the relational fixture (charter extension —
   * the link-analysis family a data-curation stack reaches for when
@@ -32,14 +33,8 @@ object GraphQueries {
       .select((col("o_custkey").cast("long") * 2).as("src"),
         (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
     // both directions in ONE pass (round 16): the unionAll form ran
-    // the orders⋈lineitem join once per arm (same rows — each directed
-    // edge emits itself and its reverse either way)
-    val edges = dir
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
+    // the orders⋈lineitem join once per arm
+    val edges = TextDedup.undirectedEdges(dir, "src", "dst").distinct()
     graft.operators.PageRank.run(edges, iters = 3, damping = 0.85)
       .select(
         when(col("node") % 2 === 0,
@@ -115,15 +110,12 @@ object GraphQueries {
     * synchronous BFS); the final GROUP BY collapses levels to
     * min-hop pairs. */
   private def q186(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.operators.TextDedup.minhashSignatures(
-      documents(s, d), "doc_id", "text")
-    val pairs = graft.operators.TextDedup.lshCandidatePairs(sigs, "doc_id")
+    val sigs = TextDedup.minhashSignatures(documents(s, d), "doc_id", "text")
+    val pairs = TextDedup.lshCandidatePairs(sigs, "doc_id")
     // pin the edge table: the recursion references it once per level
     // (anchor + 2 frontier joins) and the LSH build must not re-run
     // per reference
-    Det.pin(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
+    Det.pin(TextDedup.undirectedEdges(pairs))
       .createOrReplaceTempView("q186_edges")
     s.sql("""
       WITH RECURSIVE reach(root, node, hop) AS (
@@ -146,40 +138,19 @@ object GraphQueries {
     * part where every doc has ≥ 2 near-dup partners, the
     * high-confidence duplication NUCLEUS a curation pass deletes
     * first, and the standard peel diagnostic for dup-graph quality).
-    * Iterative peel to a FIXPOINT: drop nodes with degree < k,
-    * recompute, repeat — each round is one node-keyed hash aggregate
-    * + two semi-joins over a SHRINKING edge set, lineage-pinned per
-    * round (the q123 fixpoint discipline; peel rounds on a near-dup
-    * graph are few — its components are near-cliques, which peel in
-    * one or two rounds). Emits each 2-core member with its in-core
-    * degree. The oracle unrolls 8 peel rounds over the same SIG_CTES
-    * pair graph; the hash-match itself proves the fixture converges
-    * within the unroll (the q190/BpeTrain contract). */
+    * `TextDedup.kCore` peels to a fixpoint, each round dropping the
+    * edges that touch a node of degree < k, with no per-round pin or
+    * count job; peel rounds on a near-dup graph are few (its components
+    * are near-cliques). Emits each 2-core
+    * member with its in-core degree. The oracle unrolls 8 peel rounds
+    * over the same SIG_CTES pair graph; the hash-match itself proves
+    * the fixture converges within the unroll (the q190/BpeTrain
+    * contract). */
   private def q225(s: SparkSession, d: String): DataFrame = {
-    val k = 2
-    val sigs = graft.operators.TextDedup.minhashSignatures(
-      documents(s, d), "doc_id", "text")
-    val pairs = graft.operators.TextDedup.lshCandidatePairs(sigs, "doc_id")
-    var edges = Det.pin(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
-    var m = edges.count()
-    var done = m == 0L
-    while (!done) {
-      val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select(col("src").as("__keep"))
-      val next = Det.pin(edges
-        .join(keep.withColumnRenamed("__keep", "src"), Seq("src"),
-          "left_semi")
-        .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"),
-          "left_semi")
-        .select("src", "dst"))
-      val m2 = next.count()
-      done = m2 == m || m2 == 0L
-      edges = next; m = m2
-    }
-    edges.groupBy(col("src").as("doc_id"))
-      .agg(count(lit(1)).as("core_deg"))
+    val sigs = TextDedup.minhashSignatures(documents(s, d), "doc_id", "text")
+    val pairs = TextDedup.lshCandidatePairs(sigs, "doc_id")
+    TextDedup.kCore(pairs, k = 2)
+      .select(col("id").as("doc_id"), col("deg").as("core_deg"))
       .transform(Det.emitWide(_, "doc_id"))
   }
 

@@ -111,9 +111,9 @@ object MiningQueries {
   }
 
   /** q123: duplicate-cluster labels over the MinHash LSH pair graph —
-    * TextDedup.dupClusters (min-label propagation to a fixpoint, two
-    * bucket-keyed shuffles per round, lineage truncated between
-    * rounds) bound to the fixture corpus. The DuckDB oracle is a
+    * TextDedup.dupClusters (min-label propagation to a fixpoint, one
+    * id-keyed shuffle per round, lineage truncated between rounds)
+    * bound to the fixture corpus. The DuckDB oracle is a
     * recursive-CTE reachability closure taking min over reachable
     * labels — an independent algorithm, so this key turns the
     * connected-components operator from property-tested into

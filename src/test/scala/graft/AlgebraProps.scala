@@ -776,6 +776,44 @@ object AlgebraProps extends Properties("graft.algebra") {
       }
     }
 
+  /** The k-core by a naive driver-side peel: drop every node with
+    * fewer than k neighbours until none is left to drop; (id, degree). */
+  private def naiveCore(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
+    var adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
+    var low = adj.keySet.filter(adj(_).size < k)
+    while (low.nonEmpty) {
+      adj = adj.collect { case (n, ns) if !low(n) => n -> (ns -- low) }
+      low = adj.keySet.filter(adj(_).size < k)
+    }
+    adj.map { case (n, ns) => n -> ns.size.toLong }
+  }
+
+  private def kCoreOf(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] =
+    graft.operators.TextDedup.kCore(pairs.toDF("a_id", "b_id"), k)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  property("kCore equals a naive driver-side peel") =
+    forAll(Gen.listOf(Gen.zip(Gen.choose(0L, 11L), Gen.choose(0L, 11L))),
+        Gen.choose(1, 3)) { (raw, k) =>
+      val pairs = raw.collect {
+        case (a, b) if a != b => (math.min(a, b), math.max(a, b))
+      }.distinct
+      kCoreOf(pairs, k) == naiveCore(pairs, k)
+    }
+
+  property("kCore: empty graph, empty core, and a 30-round peel") = {
+    val star = (1L to 6L).map(0L -> _)
+    // a 30-edge path hanging off a triangle peels one edge per round
+    val tail = (0L until 30L).map(i => i -> (i + 1)) ++
+      Seq(30L -> 31L, 31L -> 32L, 30L -> 32L)
+    val triangle = Map(30L -> 2L, 31L -> 2L, 32L -> 2L)
+    org.scalacheck.Prop(
+      kCoreOf(Nil, 2).isEmpty &&
+        kCoreOf(star, 2).isEmpty && naiveCore(star, 2).isEmpty &&
+        kCoreOf(tail, 2) == triangle && naiveCore(tail, 2) == triangle)
+  }
+
   property("salted skew join equals the plain equi-join") =
     forAll(genRankRows, Gen.listOfN(8, Gen.zip(Gen.choose(0L, 2L), Gen.choose(0L, 9L)))) {
       (rows, dims) =>
