@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query wall
   * seconds.
@@ -15,27 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — measurement-only passthrough
-    // (event logs, config A/Bs). Unset (the driver's case) it adds
-    // NOTHING: the default session is byte-identical to round 15's.
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate double-evaluates expensive computed
-      // generator inputs (shingle/minhash arrays) as scan-side filters
-      // for zero pruning benefit on non-null computed arrays — measured
-      // 5x on the trigram pipeline (NOTES round 3).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // warm the JVM/codegen/file-listing paths so query #1 isn't billed
     // for session startup
     spark.range(1000).selectExpr("sum(id)").write.format("noop")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print a query key's EXECUTED plan (post-AQE when the
   * second arg is `run`) — the `.explain` feedback loop the build
   * discipline requires (SURVEY §4): check exchanges, reuse, pushdown,
@@ -23,16 +21,7 @@ object Explain {
     val key = args(0)
     val mode = if (args.length > 1) args(1) else "run"
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     if (mode == "iter") {
       // ITERATION-level plan for the fixpoint operators: the
       // declared-query dumps only show the post-checkpoint final stage.
@@ -41,7 +30,7 @@ object Explain {
       // and dumps its executed plan. Keys: `pagerank` (q115's edge set)
       // | `dupclusters` | `kcore` (the LSH pairs of q123 and q225).
       import org.apache.spark.sql.functions._
-      import graft.operators.{Checkpoints, TextDedup}
+      import graft.operators.{Checkpoints, PageRank, TextDedup}
       val out = if (args.length > 3) Some(args(3)) else None
       lazy val pairs = TextDedup.lshCandidatePairs(TextDedup.minhashSignatures(
         Tables.documents(spark, sfDir), "doc_id", "text"), "doc_id")
@@ -53,10 +42,10 @@ object Explain {
               col("o_orderkey") === col("l_orderkey"))
             .select((col("o_custkey").cast("long") * 2).as("src"),
               (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          val edges = TextDedup.undirectedEdges(dir, "src", "dst").distinct()
-          // the real loop runs with AQE off (PageRank.run default)
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          graft.operators.PageRank.iterationFrame(edges)
+          // seeded in PageRank's own AQE-off session, as run does
+          val seed = PageRank.seed(
+            TextDedup.undirectedEdges(dir, "src", "dst").distinct())
+          PageRank.round(seed, 0.85)(Checkpoints.truncate(seed.ranks))
         case "dupclusters" =>
           val edges = Checkpoints.truncate(TextDedup.undirectedEdges(pairs))
           TextDedup.dupClustersRound(edges)(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Plan-growth recording for BPE training (round 14 — VERDICT r13
@@ -14,19 +13,14 @@ import org.apache.spark.sql.functions._
   * the end for the NOTES table. Usage:
   * `sbt "runMain graft.StressBpe"`, knobs `STRESS_BPE_ROUNDS=1000`
   * `STRESS_BPE_SF=/root/testdata/sf0.01` `STRESS_BPE_EVERY=16`.
+  * The session is [[Session]]'s, cores from `SPARK_GRAFT_CPUS` (default 4).
   */
 object StressBpe {
   def main(args: Array[String]): Unit = {
     val rounds = sys.env.getOrElse("STRESS_BPE_ROUNDS", "1000").toInt
     val sfDir = sys.env.getOrElse("STRESS_BPE_SF", "/root/testdata/sf0.01")
     val every = sys.env.getOrElse("STRESS_BPE_EVERY", "16").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-stress-bpe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // Word units are TRIGRAM shingles, not raw words: the fixture's
     // text is a closed 31-word vocabulary whose distinct adjacent

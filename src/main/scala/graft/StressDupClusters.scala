@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress recording for the propagation family (round 13 —
@@ -28,19 +27,14 @@ import org.apache.spark.sql.functions._
   * arithmetic against the ledger, not archaeology in NOTES). Usage:
   * `sbt "runMain graft.StressDupClusters"`, knobs
   * `STRESS_EDGES=1000000 STRESS_CHAIN=30`, ledger path override
-  * `STRESS_LEDGER=/path/STRESS.md`.
+  * `STRESS_LEDGER=/path/STRESS.md`; the session is [[Session]]'s,
+  * cores from `SPARK_GRAFT_CPUS` (default 4).
   */
 object StressDupClusters {
   def main(args: Array[String]): Unit = {
     val edgesN = sys.env.getOrElse("STRESS_EDGES", "1000000").toLong
     val chainLen = sys.env.getOrElse("STRESS_CHAIN", "30").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-stress-dup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     import spark.implicits._
 
     def peakPinnedMb(): Long =

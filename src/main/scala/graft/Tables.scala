@@ -21,25 +21,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame     = t(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame   = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
-  /** `events.ts` arrived as parquet TIMESTAMP(NANOS) in early fixture
-    * drops, which Spark's reader rejects outright
-    * (PARQUET_TYPE_ILLEGAL); later drops use TIMESTAMP(MICROS), which
-    * reads natively. Handle both: the nanosAsLong legacy conf
-    * (SPARK-40819) surfaces a NANOS column as a raw epoch-ns long,
-    * which we floor-convert to a microsecond TimestampType — integer
-    * `div`, not `/`, because an epoch-ns value (~1.7e18) exceeds
-    * double's 2^53 exact range. A MICROS column already reads as
-    * TimestampType and passes through untouched. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = t(s, d, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case _ => df
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame     = t(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 

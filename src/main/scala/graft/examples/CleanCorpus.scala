@@ -1,9 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.TextDedup
 
 /** End-to-end training-data cleaning pipeline — the library's
@@ -196,18 +196,7 @@ object CleanCorpus {
   /** Demo main: clean the fixture corpus, print the funnel. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate double-evaluates expensive computed
-      // generator inputs (shingle/minhash arrays) as scan-side filters
-      // for zero pruning benefit on non-null computed arrays — measured
-      // 5x on the trigram pipeline (NOTES round 3).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val in = Tables.spread(spark, Tables.documents(spark, sfDir))
     val out = CleanCorpus.run(in)
     println(s"input=${in.count()} clean=${out.count()}")

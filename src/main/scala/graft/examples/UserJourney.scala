@@ -1,9 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.{Funnel, Sessionize}
 
 /** Per-user journey features from a raw CDC event stream — the
@@ -52,12 +52,7 @@ object UserJourney {
   /** Demo main: feature table from the fixture events, print shape. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val out = run(Tables.events(spark, sfDir))
     println(s"users=${out.count()} converted=${
       out.where(col("converted") === 1).count()}")

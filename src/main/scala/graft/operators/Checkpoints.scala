@@ -21,9 +21,8 @@ import org.apache.spark.sql.DataFrame
   * Every `truncate` call then takes a RELIABLE `checkpoint()` to that
   * directory instead — one extra write of the (small, per-round)
   * iteration frame per round buys executor-loss recovery. The key is
-  * read per call, so a caller can scope it with set/unset; operators
-  * with their own `checkpointDir` parameter (PageRank) override per
-  * call and fall back to this session default. Deliberately keyed on
+  * read per call, so a caller can scope it with set/unset (PageRank's
+  * private session clone inherits it). Deliberately keyed on
   * the graft conf, NOT on `sparkContext.getCheckpointDir`: a
   * checkpoint dir set once for some other purpose must not silently
   * slow every iterative operator in the session. */

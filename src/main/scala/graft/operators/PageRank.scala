@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Sessions
+import org.apache.spark.storage.StorageLevel
 
 /** Fixed-iteration PageRank over an edge list — the Pregel-style
   * join–aggregate iteration expressed as a declarative Spark plan
@@ -9,16 +11,12 @@ import org.apache.spark.sql.functions._
   *
   * r₀(v) = 1/N;  rₖ₊₁(v) = (1−d)/N + d · Σ_{u→v} rₖ(u) / outdeg(u)
   *
-  * Scale design: every iteration is one shuffle keyed on the node id —
-  * contributions aggregate map-side-combined on `dst`, then join the
-  * static node table. The edge table's (src-keyed) exchange and the
-  * degree aggregate are IDENTICAL subtrees across iterations, so
-  * ReuseExchange materializes them once. N is kept in-plan as a 1-row
-  * broadcast (no driver collect). Iterations are a fixed driver-side
-  * loop over plan construction (k plan levels, like any unrolled
-  * iterative dataflow); convergence-checked variants would probe a
-  * scalar per round, the AQE-style driver decision the house already
-  * uses for dupClusters.
+  * Scale design: [[seed]] pins the degree-annotated edge table, laid
+  * out by `dst` once, and reads N as one driver scalar; each [[round]]
+  * then joins the broadcast ranks and aggregates on that layout with
+  * no exchange. Iterations are a fixed driver-side loop, lineage
+  * truncated every round; convergence-checked variants would probe a
+  * scalar per round, as [[Fixpoint]] does for dupClusters.
   *
   * Dangling nodes: callers wanting the undirected contract (every node
   * has outdegree ≥ 1 — no dangling-mass correction term needed) should
@@ -45,55 +43,49 @@ object PageRank {
     * Returns (node, rank). Every node must appear as a src (pass an
     * undirected edge set — see `undirected`).
     *
-    * What persists is the degree-ANNOTATED edge table (src, dst, deg)
-    * — the exact relation every iteration's contribution join consumes
-    * (GraphX pins the same thing as its edge RDD): pinning the raw
-    * edges instead would re-run the degree aggregate AND its join
-    * inside every iteration. Under the broadcast ceiling the frame is
-    * laid out hash(dst) with the node-sized degree frame attached by
-    * broadcast, so each iteration's contribution aggregate groups on
-    * the persisted partitioning with no exchange at all. The node
-    * table and N derive from the degree frame (one row per node —
-    * no separate distinct pass over the edges). Spark evicts LRU
-    * under pressure, and disk spill keeps it safe at edge sets larger
-    * than memory; pass `persistEdges = false` when recomputation is
-    * genuinely cheap.
-    *
-    * Lineage truncation: by default each iteration `localCheckpoint`s
-    * the rank frame — right at local[32], but on a real cluster the
-    * blocks pin to executors with NO fault tolerance (a lost executor
-    * fails the job, there is no lineage left to recompute from). For
-    * cluster deployments pass `checkpointDir` (HDFS/object-store
-    * path): iterations then take a RELIABLE `checkpoint()` — one extra
-    * write of the small one-row-per-node frame per iteration buys
-    * executor-loss recovery on long graphs. */
-  def run(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
-      persistEdges: Boolean = true,
-      checkpointDir: Option[String] = None,
-      adaptiveIterations: Boolean = false): DataFrame = {
+    * The rounds run in PageRank's own session ([[seed]]): the caller's
+    * session conf is never written, and the result is rebound to the
+    * caller's session, so downstream plans see the caller's own AQE
+    * setting. Lineage is truncated after every round by
+    * [[Checkpoints.truncate]] — `localCheckpoint` by default, a
+    * reliable checkpoint when the session sets
+    * [[Checkpoints.ReliableDirKey]] (the clone inherits it). */
+  def run(edges: DataFrame, iters: Int = 3, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    // AQE off for the ITERATION JOBS by default (round 15 — VERDICT
-    // r14 item 1a): each checkpoint round is its own job, and AQE
-    // re-plans every one of them (stats collection + re-optimization
-    // per shuffle stage) for zero win — the iterated frame is one row
-    // per node and its lineage is checkpoint-truncated, so there is
-    // nothing for a runtime re-plan to discover that the static plan
-    // (broadcast n, shuffle on the node key) doesn't already know.
-    // Measured solo med-of-5 at sf0.1: the per-call cost is DRIVER
-    // planning latency, constant in data size but ~2x the key's wall
-    // time. Skewed-degree graphs that want AQE's skew-join splitting
-    // inside the contribution join can pass adaptiveIterations = true;
-    // the session conf is restored before returning either way (the
-    // result frame is already materialized by its final checkpoint,
-    // so downstream plans see the caller's own AQE setting).
-    val sess = edges.sparkSession
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sess.conf.getOption(AqeKey)
-    if (!adaptiveIterations) sess.conf.set(AqeKey, "false")
-    try runIterations(edges, iters, damping, persistEdges, checkpointDir)
-    finally if (!adaptiveIterations)
-      aqePrev.fold(sess.conf.unset(AqeKey))(sess.conf.set(AqeKey, _))
+    val s = seed(edges)
+    var ranks = s.ranks
+    for (i <- 1 to iters) {
+      // Truncate lineage between iterations (GraphX checkpoints the
+      // same way): without this, iteration k's plan nests k copies of
+      // the join–agg subtree and planning/AQE/codegen cost grows
+      // superlinearly in iters, dwarfing the actual data movement.
+      // The checkpointed frame is one row per node — the small side.
+      // (Cadence 1 measured faster than every-2 at sf0.1: the deeper
+      // nested plan costs more in planning/AQE than the extra
+      // materialization job saves.)
+      // Re-measured round 13, quiet host, solo median-of-5 at sf0.1:
+      // cadence 1 = 5.07 s vs cadence 2 = 13.73 s — the checkpoint
+      // every iteration stays (the r9 "regression" to 9.09 s was
+      // in-suite cache pressure + host noise, not the cadence).
+      // The FINAL round checkpoints too (round 14 ADVICE): a lazy
+      // final join would keep the returned frame's lineage rooted in
+      // the edge table, making it unsafe to unpersist that table here —
+      // the exact one-pinned-frame-per-call leak class the round-13
+      // stress found in dupClusters. One extra materialization of the
+      // one-row-per-node frame buys a self-contained result.
+      val cp = Checkpoints.truncate(round(s, damping)(ranks))
+      // cp is eagerly materialized — the previous round's pinned
+      // frame has had its last read; the FINAL round's frame stays
+      // pinned (it IS the caller's result)
+      if (i > 1) Checkpoints.release(ranks)
+      ranks = cp
+    }
+    // the edge and degree tables had their last read inside the loop —
+    // drop them, or every PageRank call in a long session leaks pinned
+    // frames (round 14 ADVICE)
+    s.release()
+    Sessions.rebind(ranks, edges.sparkSession)
+      .select(col("node"), col("r").as("rank"))
   }
 
   /** Node-count ceiling under which the per-iteration rank frame is
@@ -112,45 +104,40 @@ object PageRank {
   val BroadcastMaxNodesKey = "spark.graft.pagerank.broadcastMaxNodes"
   private val BroadcastMaxNodesDefault = 2000000L
 
-  /** ONE iteration's rank-update frame on a checkpoint-truncated rank
-    * input — the exact loop body of [[run]], exposed for plan tooling
-    * (`graft.Explain <…> iter`, VERDICT r15 item 7: the committed
-    * q115 before/after dumps showed only the post-checkpoint final
-    * stage, hiding the broadcast-vs-shuffle iteration decision).
-    * Returns the PRE-checkpoint next-ranks frame; callers wanting the
-    * plan the real loop executes should set AQE per [[run]]'s
-    * default (off) before materializing. */
-  def iterationFrame(edges: DataFrame, damping: Double = 0.85): DataFrame = {
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    if (deg.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      deg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nVal = deg.count().toDouble
-    val bcastRanks = nVal <= edges.sparkSession.conf
-      .getOption(BroadcastMaxNodesKey).map(_.toLong)
-      .getOrElse(BroadcastMaxNodesDefault).toDouble
-    val edgesD =
-      if (bcastRanks) edges.repartition(col("dst")).join(broadcast(deg), "src")
-      else edges.join(deg, "src")
-    if (edgesD.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      edgesD.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = deg.select(col("src").as("node"))
-    val ranks = Checkpoints.truncate(
-      nodes.select(col("node"), lit(1.0 / nVal).as("r")))
-    val rs = ranks.select(col("node").as("src"), col("r"))
-    val contrib = edgesD
-      .join(if (bcastRanks) broadcast(rs) else rs, "src")
-      .select(col("dst"), (col("r") / col("deg")).as("c"))
-      .groupBy("dst").agg(sum("c").as("contrib"))
-    val cn = contrib.select(col("dst").as("node"), col("contrib"))
-    ranks.select(col("node"))
-      .join(if (bcastRanks) broadcast(cn) else cn, Seq("node"), "left")
-      .select(col("node"),
-        (lit((1.0 - damping) / nVal) +
-          lit(damping) * coalesce(col("contrib"), lit(0.0))).as("r"))
+  /** What every round reads, all bound to PageRank's session: the
+    * degree-annotated edge table (src, dst, deg), the node count `n`,
+    * the broadcast-vs-shuffle layout decision, and the initial ranks
+    * (node, r = 1/n). `release` drops the frames [[seed]] pinned. */
+  final case class Seed(edges: DataFrame, n: Double, broadcastRanks: Boolean,
+      ranks: DataFrame, pinned: Seq[DataFrame]) {
+    def release(): Unit = pinned.foreach(_.unpersist(false))
   }
 
-  private def runIterations(edges: DataFrame, iters: Int, damping: Double,
-      persistEdges: Boolean, checkpointDir: Option[String]): DataFrame = {
+  /** Rebinds `edges` into a clone of its session with AQE off and builds
+    * the [[Seed]] there; every frame derived from it plans in the clone.
+    *
+    * AQE is off for the ITERATION JOBS (round 15 — VERDICT r14 item 1a):
+    * each checkpoint round is its own job, and AQE re-plans every one of
+    * them (stats collection + re-optimization per shuffle stage) for zero
+    * win — the iterated frame is one row per node and its lineage is
+    * checkpoint-truncated, so there is nothing for a runtime re-plan to
+    * discover that the static plan (broadcast ranks, the edge table's
+    * own dst layout) doesn't already know. Measured solo med-of-5 at
+    * sf0.1: the per-call cost is DRIVER planning latency, constant in
+    * data size but ~2x the key's wall time. A clone, not `newSession`:
+    * it keeps the caller's runtime conf (the reliable checkpoint dir,
+    * the broadcast ceiling) and shares its cache.
+    *
+    * What persists is the degree-ANNOTATED edge table — the exact
+    * relation every iteration's contribution join consumes (GraphX pins
+    * the same thing as its edge RDD): pinning the raw edges instead
+    * would re-run the degree aggregate AND its join inside every
+    * iteration. Spark evicts LRU under pressure, and disk spill keeps it
+    * safe at edge sets larger than memory. */
+  def seed(edges: DataFrame): Seed = {
+    val rounds = Sessions.cloneOf(edges.sparkSession)
+    rounds.conf.set("spark.sql.adaptive.enabled", "false")
+    val e = Sessions.rebind(edges, rounds)
     // Degree per source node — ONE row per node under the undirected
     // contract (every node appears as a src), so this frame IS the
     // node table: deriving `nodes` by a distinct over the joined edge
@@ -158,21 +145,17 @@ object PageRank {
     // for rows `deg` already holds (guide §2.4 — drop the redundant
     // pass). Pinned: it feeds the count below, the edge attach, and
     // the rank init; node-sized, spills if a graph's node set is huge.
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val pinnedDeg =
-      deg.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (pinnedDeg)
-      deg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    val pinnedDeg = pin(deg)
     // One bounded driver scalar (the AQE-style decision dupClusters'
     // fixpoint probe set the precedent for): it feeds r0 = 1/N and the
     // (1-d)/N offset as LITERALS — the same IEEE divisions the in-plan
     // broadcast column produced, now folded once on the driver — and
     // decides the broadcast-vs-shuffle layout below. Dropping the
     // carried `n` column also narrows the checkpointed frame.
-    val nVal = deg.count().toDouble
-    val bcastRanks = nVal <= edges.sparkSession.conf
-      .getOption(BroadcastMaxNodesKey).map(_.toLong)
-      .getOrElse(BroadcastMaxNodesDefault).toDouble
+    val n = deg.count().toDouble
+    val bcast = n <= rounds.conf.getOption(BroadcastMaxNodesKey)
+      .map(_.toLong).getOrElse(BroadcastMaxNodesDefault).toDouble
     // Edge layout (round 16, guide §2.4/§3.1): under the node ceiling
     // the degree frame — node-sized, the exact size class the rank
     // broadcast already commits to — attaches by BROADCAST, and the
@@ -186,65 +169,34 @@ object PageRank {
     // EVERY iteration. Past the ceiling both broadcasts are off the
     // table and the src-keyed shuffle join keeps the proven shape.
     val edgesD =
-      if (bcastRanks) edges.repartition(col("dst")).join(broadcast(deg), "src")
-      else edges.join(deg, "src") // (src, dst, deg)
-    val pinnedEdges = persistEdges &&
-      edgesD.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (pinnedEdges)
-      edgesD.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = deg.select(col("src").as("node"))
-    var ranks = nodes.select(col("node"), lit(1.0 / nVal).as("r"))
-    // the round-(i-1) checkpoint frame, released once round i's
-    // checkpoint has materialized (the leak fix dupClusters got in
-    // round 13 — Dataset.unpersist is a no-op on checkpointed frames)
-    var pinned: Option[DataFrame] = None
-    for (i <- 1 to iters) {
-      val rs = ranks.select(col("node").as("src"), col("r"))
-      val contrib = edgesD
-        .join(if (bcastRanks) broadcast(rs) else rs, "src")
-        .select(col("dst"), (col("r") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum("c").as("contrib"))
-      val cn = contrib.select(col("dst").as("node"), col("contrib"))
-      ranks = ranks.select(col("node"))
-        .join(if (bcastRanks) broadcast(cn) else cn, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - damping) / nVal) +
-            lit(damping) * coalesce(col("contrib"), lit(0.0))).as("r"))
-      // Truncate lineage between iterations (GraphX checkpoints the
-      // same way): without this, iteration k's plan nests k copies of
-      // the join–agg subtree and planning/AQE/codegen cost grows
-      // superlinearly in iters, dwarfing the actual data movement.
-      // The checkpointed frame is one row per node — the small side.
-      // (Cadence 1 measured faster than every-2 at sf0.1: the deeper
-      // nested plan costs more in planning/AQE than the extra
-      // materialization job saves.)
-      // Re-measured round 13, quiet host, solo median-of-5 at sf0.1:
-      // cadence 1 = 5.07 s vs cadence 2 = 13.73 s — the checkpoint
-      // every iteration stays (the r9 "regression" to 9.09 s was
-      // in-suite cache pressure + host noise, not the cadence).
-      // The FINAL round checkpoints too (round 14 ADVICE): a lazy
-      // final join would keep the returned frame's lineage rooted in
-      // edgesD, making it unsafe to unpersist the edge table here —
-      // the exact one-pinned-frame-per-call leak class the round-13
-      // stress found in dupClusters. One extra materialization of the
-      // one-row-per-node frame buys a self-contained result.
-      val cp =
-        if (checkpointDir.isDefined) ranks.checkpoint()
-        // session-wide escape hatch (Checkpoints.ReliableDirKey)
-        // applies when no per-call dir was passed
-        else Checkpoints.truncate(ranks)
-      // cp is eagerly materialized — the previous round's pinned
-      // frame has had its last read; the FINAL round's frame stays
-      // pinned (it IS the caller's result)
-      pinned.foreach(Checkpoints.release)
-      pinned = Some(cp)
-      ranks = cp
-    }
-    // the edge and degree tables had their last read inside the loop —
-    // drop them (iff THIS call pinned them), or every PageRank call in
-    // a long session leaks pinned frames (round 14 ADVICE)
-    if (pinnedEdges) edgesD.unpersist(false)
-    if (pinnedDeg) deg.unpersist(false)
-    ranks.select(col("node"), col("r").as("rank"))
+      if (bcast) e.repartition(col("dst")).join(broadcast(deg), "src")
+      else e.join(deg, "src") // (src, dst, deg)
+    val pinnedEdges = pin(edgesD)
+    Seed(edgesD, n, bcast,
+      deg.select(col("src").as("node"), lit(1.0 / n).as("r")),
+      (pinnedDeg ++ pinnedEdges).toSeq)
+  }
+
+  /** Persist `df` unless it already is; Some(df) iff this call pinned
+    * it (a frame the caller pinned stays the caller's to drop). */
+  private def pin(df: DataFrame): Option[DataFrame] =
+    if (df.storageLevel != StorageLevel.NONE) None
+    else Some(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** One power iteration: the PRE-checkpoint next-ranks frame for
+    * `ranks` (node, r). [[run]] checkpoints each one; plan tooling
+    * (`graft.Explain pagerank iter`) dumps it. */
+  def round(s: Seed, damping: Double)(ranks: DataFrame): DataFrame = {
+    def hint(df: DataFrame) = if (s.broadcastRanks) broadcast(df) else df
+    val contrib = s.edges
+      .join(hint(ranks.select(col("node").as("src"), col("r"))), "src")
+      .select(col("dst"), (col("r") / col("deg")).as("c"))
+      .groupBy("dst").agg(sum("c").as("contrib"))
+    ranks.select(col("node"))
+      .join(hint(contrib.select(col("dst").as("node"), col("contrib"))),
+        Seq("node"), "left")
+      .select(col("node"),
+        (lit((1.0 - damping) / s.n) +
+          lit(damping) * coalesce(col("contrib"), lit(0.0))).as("r"))
   }
 }

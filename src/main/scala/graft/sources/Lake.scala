@@ -1003,9 +1003,7 @@ object Lake {
     * `spark.sql` verbatim-shaped, with no Scala builder in sight.
     *
     *  - `fixturesDir`: every `<name>.parquet` child registers as view
-    *    `<name>` (the TPC-H-ish fixture tables); legacy
-    *    TIMESTAMP(NANOS) `events` files get the same read-repair
-    *    `Tables.events` applies.
+    *    `<name>` (the TPC-H-ish fixture tables).
     *  - `lakes`: view name → day-partitioned lake root, registered
     *    snapshot-resolved (managed partition dirs read at their
     *    committed version) with `ingest_date` pruning intact — the
@@ -1061,7 +1059,6 @@ object Lake {
     graft.GraftExtensions.registerAll(spark)
     val out = scala.collection.mutable.ArrayBuffer[String]()
     fixturesDir.foreach { d =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val p = new Path(d)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.listStatus(p).map(_.getPath.getName)
@@ -1069,14 +1066,7 @@ object Lake {
           val name = f.stripSuffix(".parquet")
           require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
             s"fixture table name not SQL-identifier-shaped: $f")
-          val df0 = spark.read.parquet(s"$d/$f")
-          val df =
-            if (name == "events" && df0.schema.fieldNames.contains("ts") &&
-                df0.schema("ts").dataType ==
-                  org.apache.spark.sql.types.LongType)
-              df0.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-            else df0
-          df.createOrReplaceTempView(name)
+          spark.read.parquet(s"$d/$f").createOrReplaceTempView(name)
           out += name
         }
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Checkpoints, TextDedup}
+import graft.operators.{Checkpoints, PageRank, TextDedup}
 
 /** The lineage-truncation fault-tolerance contract (round 13 —
   * VERDICT r12 item 5): iterative operators localCheckpoint by
@@ -30,6 +30,13 @@ class CheckpointsSpec extends AnyFunSuite {
   private def core(): Map[Long, Long] =
     rows(TextDedup.kCore(pairs((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)), 2))
 
+  // an asymmetric graph, so ranks differ per node: a path-dependent
+  // bug in either checkpoint mode would show up
+  private def ranks(): Map[String, Double] =
+    PageRank.run(PageRank.undirected(
+      pairs((1L, 2L), (2L, 3L), (2L, 4L), (4L, 5L)), "a_id", "b_id", "n", "n"),
+      iters = 3).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+
   test("reliable escape hatch: same clusters, recovery state lands in the configured dir") {
     val want = Map(9L -> 5L, 7L -> 5L, 5L -> 5L,
       1L -> 1L, 2L -> 1L, 3L -> 1L)
@@ -38,6 +45,7 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(spark.conf.getOption(Checkpoints.ReliableDirKey).isEmpty)
     assert(clusters() == want)
     assert(core() == wantCore)
+    val localRanks = ranks()
     // reliable path: every truncate writes an RDD checkpoint under
     // the configured directory
     val dir = TestSpark.tmpDir("graft-ckpt")
@@ -47,11 +55,24 @@ class CheckpointsSpec extends AnyFunSuite {
         "reliable-checkpoint run changed the result")
       assert(core() == wantCore,
         "reliable-checkpoint run changed the k-core")
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => p.getFileName.toString.startsWith("rdd-"))
-        .count()
-      assert(files > 0,
+      def files(): Long =
+        java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+          .filter(p => p.getFileName.toString.startsWith("rdd-"))
+          .count()
+      assert(files() > 0,
         s"no reliable checkpoint state written under $dir")
+      // PageRank's rounds run in a clone of this session: the clone
+      // inherits the dir, and its final round's checkpoint is the
+      // result, so the dir holds one more frame than before the call
+      val before = files()
+      val reliableRanks = ranks()
+      assert(localRanks.keySet == reliableRanks.keySet)
+      localRanks.foreach { case (k, v) =>
+        assert(math.abs(v - reliableRanks(k)) < 1e-12,
+          s"reliable-checkpoint run changed the rank of $k")
+      }
+      assert(files() > before,
+        "PageRank wrote no reliable checkpoint under the session's dir")
     } finally spark.conf.unset(Checkpoints.ReliableDirKey)
   }
 

@@ -2999,22 +2999,61 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("PageRank.run: reliable checkpointing equals the localCheckpoint path") {
-    import graft.operators.PageRank
+    import graft.operators.{Checkpoints, PageRank}
     // asymmetric graph so ranks differ per node — a path-dependent bug
     // in either checkpoint mode would show up
     val edges = PageRank.undirected(
       Seq((1L, 2L), (2L, 3L), (2L, 4L), (4L, 5L)).toDF("x", "y"), "x", "y", "n", "n")
+    assert(spark.conf.getOption(Checkpoints.ReliableDirKey).isEmpty)
     val local = PageRank.run(edges, iters = 3)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val dir = TestSpark.tmpDir("pr-chk")
-    val reliable = PageRank.run(edges, iters = 3, checkpointDir = Some(dir))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    spark.conf.set(Checkpoints.ReliableDirKey, dir)
+    val reliable = try {
+      PageRank.run(edges, iters = 3)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    } finally spark.conf.unset(Checkpoints.ReliableDirKey)
     assert(local.keySet == reliable.keySet)
     local.foreach { case (k, v) => assert(math.abs(v - reliable(k)) < 1e-12) }
     // the reliable path actually wrote checkpoint data
     def anyFiles(f: java.io.File): Boolean =
       f.isFile || Option(f.listFiles()).exists(_.exists(anyFiles))
     assert(anyFiles(new java.io.File(dir)), "no reliable checkpoint written")
+  }
+
+  test("PageRank.run: leaves the caller's conf as found; rounds plan AQE-off on the pinned edges") {
+    import graft.operators.PageRank
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val aqe = "spark.sql.adaptive.enabled"
+    val edges = PageRank.undirected(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("x", "y"), "x", "y", "n", "n")
+    val prev = spark.conf.getAll.get(aqe)
+    try {
+      for (setting <- Seq(Some("true"), None)) {
+        setting.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+        val before = spark.conf.getAll
+        assert(before.get(aqe) == setting)
+        val out = PageRank.run(edges, iters = 2)
+        assert(out.count() == 4)
+        val after = spark.conf.getAll
+        val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+        assert(changed.isEmpty, s"PageRank.run changed $changed with AQE $setting")
+        assert(out.sparkSession eq spark, "result not bound to the caller's session")
+      }
+    } finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    // the exposed round runs in PageRank's own session: a static plan
+    // that reads the pinned (src, dst, deg) table from the cache
+    val seed = PageRank.seed(edges)
+    try {
+      val round = PageRank.round(seed, 0.85)(seed.ranks)
+      assert(round.sparkSession ne spark)
+      val plan = round.queryExecution.executedPlan
+      assert(plan.collectFirst { case a: AdaptiveSparkPlanExec => a }.isEmpty, plan)
+      assert(plan.collect { case s: InMemoryTableScanExec => s.output.map(_.name).toSet }
+        .exists(Set("src", "dst", "deg").subsetOf), plan)
+      assert(round.count() == 4)
+    } finally seed.release()
   }
 
   test("json_value/is_json replicate T-SQL semantics exactly") {

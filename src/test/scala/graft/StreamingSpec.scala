@@ -357,21 +357,13 @@ class StreamingSpec extends AnyFunSuite {
     // event-time trio as readStream over the events parquet and
     // compare against the oracle-verified batch form (SURVEY §5.4).
     val sf = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the fixture's ts column has shipped as both TIMESTAMP(NANOS)
-    // (reads as a raw long under nanosAsLong) and TIMESTAMP(MICROS)
-    // (reads natively) — mirror Tables.events: take the batch reader's
-    // schema and convert only the long form
-    val rawSchema = spark.read.parquet(s"$sf/events.parquet").schema
-    val tsIsLong = rawSchema("ts").dataType == LongType
+    // a file stream needs its schema up front: take the batch reader's
+    val schema = spark.read.parquet(s"$sf/events.parquet").schema
     // file sources tail directories, not single files
     val srcDir = TestSpark.tmpDir("s09-src")
     Files.copy(Paths.get(s"$sf/events.parquet"),
       Paths.get(srcDir, "events.parquet"))
-    def stream = spark.readStream.schema(rawSchema)
-      .parquet(srcDir)
-      .withColumn("ts",
-        if (tsIsLong) expr("timestamp_micros(ts div 1000)") else col("ts"))
+    def stream = spark.readStream.schema(schema).parquet(srcDir)
     def runComplete(df: org.apache.spark.sql.DataFrame, name: String) = {
       val q = df.writeStream.outputMode("complete")
         .format("memory").queryName(name)
