@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.Lake
 import graft.streaming.CdcStreams
 
 /** The reference's ENTIRE pipeline as one artifact — changefeed ndjson
   * in a lake directory → queryable, delete-correct current state
   * (/root/reference/README.md:128-192) — composed from the pieces the
-  * streaming suite pins individually (s07/s08/s12–s16):
+  * streaming suite pins individually (s13, s30):
   *
   *   1. raw-line tail        — `readEnvelopeLinesStream`: malformed
   *                             lines survive as `env IS NULL` rows
@@ -19,46 +20,36 @@ import graft.streaming.CdcStreams
   *                             appends bad lines to a parquet dir
   *                             (its own checkpoint: each query tracks
   *                             its own offsets; one sink per query)
-  *   3. redelivery dedup     — `dedupStream` on (key, hlc): the
-  *                             changefeed is at-least-once
-  *                             (README.md:90), watermark bounds state
-  *   4. tombstone upsert     — `upsertSink`'s idempotent `batch=<id>`
-  *                             protocol; `after: null` envelopes ride
-  *                             along as `is_delete` and win at read
-  *   5. maintenance          — `compact()` folds batch dirs and makes
-  *                             deletes PHYSICAL (retention/GDPR)
+  *   3. envelope projection  — post-image columns, `kid` (the joined
+  *                             key), `hlc` as the EXACT `hlcOrder`
+  *                             decimal (same-tick changes differ only
+  *                             in the logical counter) and `is_delete`
+  *                             (`after: null`)
+  *   4. merge                — `mergeSink` into the versioned `Lake`
+  *                             store, latest HLC per key wins; a
+  *                             delete stays as the key's latest row
+  *                             (`is_delete`, null payload), so a
+  *                             redelivered OLDER change loses to it
+  *   5. read                 — `currentState` = the store minus its
+  *                             tombstone rows
   *
   * Exactly-once story across a crash/restart: the checkpoint replays
-  * at-most the last unfinished batch id, the sink skips any `batch=`
-  * directory that already exists, and the dedup state (in the
-  * checkpoint) keeps redelivered envelopes from becoming new rows —
-  * pinned end-to-end by the StreamingSpec restart test.
+  * at most the last unfinished micro-batch, and the merge rule IS the
+  * replay rule — a redelivered or replayed change merges to the row
+  * already stored, so no dedup state and no watermark are needed,
+  * pinned end-to-end by the StreamingSpec restart test (s28).
   *
-  * Scale: file listing is incremental (maxFilesPerTrigger), dedup and
-  * upsert state partition by key across executors, the store's rank-1
-  * read shuffles once on the key, and compaction bounds store growth.
-  *
-  * Late envelopes: an envelope whose HLC is older than the dedup
-  * watermark is DROPPED by the dedup stage (watermark semantics —
-  * s03), so size `dedupWatermark` to the changefeed's real
-  * out-of-orderness, generously: the only cost of a large watermark
-  * is dedup-state retention, while redelivered duplicates that
-  * OUTLIVE it are harmless anyway (the store's (key, hlc) rank-1
-  * read picks one winner; compaction removes the copies). Pipelines
-  * that must never lose even ancient replays can front the source
-  * with `CdcStreams.lateSplitSink` and feed the dead-letter path
-  * directly to the store (idempotent by construction).
+  * Scale: file listing is incremental (maxFilesPerTrigger); each
+  * micro-batch rewrites the store once (copy-on-write merge, previous
+  * versions vacuumed), so the store holds one row per key ever seen.
   */
 object CdcPipeline {
 
-  /** Running pipeline handle: the upsert query plus the optional
+  /** Running pipeline handle: the merge query plus the optional
     * quarantine query (present when a quarantine path was given). */
   final case class Handle(main: StreamingQuery, quarantine: Option[StreamingQuery]) {
     def awaitAll(): Unit = { main.awaitTermination(); quarantine.foreach(_.awaitTermination()) }
   }
-
-  private val keyCols = Seq("kid")
-  private val ordCols = Seq("hlc")
 
   /** Start the pipeline over `srcDir`'s envelope ndjson. `rowSchema`
     * is the table's row shape (the envelope wrapper is added here).
@@ -69,7 +60,6 @@ object CdcPipeline {
       statePath: String, checkpoint: String,
       quarantinePath: Option[String] = None,
       quarantineCheckpoint: Option[String] = None,
-      dedupWatermark: String = "1 hour",
       availableNow: Boolean = true): Handle = {
     require(quarantinePath.isDefined == quarantineCheckpoint.isDefined,
       "quarantinePath and quarantineCheckpoint go together")
@@ -82,17 +72,13 @@ object CdcPipeline {
     // scan is exactly this shape)
     val routeable = col("env").isNotNull &&
       col("env.key").isNotNull && col("env.updated").isNotNull
-    val good = lines.where(routeable)
-      .select(col("env"),
+    val post = lines.where(routeable)
+      .select(col("env.after.*"),
         concat_ws("|", col("env.key")).as("kid"),
-        col("env.updated").cast("double").as("hlc"))
-      .withColumn("ts", timestamp_seconds(col("hlc")))
-      .withColumn("eid", concat_ws("@", col("kid"), col("hlc")))
-    val deduped = CdcStreams.dedupStream(good, "eid", "ts", dedupWatermark)
-    val post = deduped.select(
-      col("env.after.*"), col("kid"), col("hlc"),
-      col("env.after").isNull.as("is_delete"))
-    val main = trig(CdcStreams.upsertSink(post, statePath, checkpoint)).start()
+        CdcStreams.hlcOrder(col("env.updated")).as("hlc"),
+        col("env.after").isNull.as("is_delete"))
+    val main = trig(CdcStreams.mergeSink(post, statePath, checkpoint,
+      Seq("kid"), Seq("hlc"))).start()
 
     val quarantine = quarantinePath.map { qp =>
       trig(CdcStreams.readEnvelopeLinesStream(spark, srcDir, rowSchema)
@@ -106,17 +92,12 @@ object CdcPipeline {
     Handle(main, quarantine)
   }
 
-  /** The queryable current state: latest record per key, winning
-    * tombstones applied (a delete newer than every upsert removes the
-    * key; an upsert newer than the delete re-creates it). */
+  /** The queryable current state: each key's latest change, keys whose
+    * latest change is a delete left out. */
   def currentState(spark: SparkSession, statePath: String): DataFrame =
-    CdcStreams.currentState(spark, statePath, keyCols, ordCols,
-      isDelete = Some(col("is_delete")))
+    Lake.readStore(spark, statePath).where(!col("is_delete"))
 
-  /** Store maintenance between runs: fold all `batch=` dirs into the
-    * materialized state and physically drop tombstoned keys. Safe
-    * against the sink's replay protocol (see CdcStreams.compactState). */
-  def compact(spark: SparkSession, statePath: String): Unit =
-    CdcStreams.compactState(spark, statePath, keyCols, ordCols,
-      isDelete = Some(col("is_delete")))
+  /** No-op: each merge already writes the folded state and vacuums
+    * the versions before it. */
+  def compact(spark: SparkSession, statePath: String): Unit = ()
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import graft.sources.Lake
 
 /** The nightly lake-maintenance loop as ONE restartable artifact — the
-  * batch twin of `CdcPipeline` (s28): where that composes the
-  * STREAMING consumption of the reference's changefeed lake, this
-  * composes the at-rest operations its operator runs on a cadence
-  * against the same day-partitioned layout
+  * batch twin of `CdcPipeline` (s28): both merge into `Lake`'s
+  * versioned store by the CDC replay rule, but that one STREAMS the
+  * changefeed into one store directory (deletes kept as tombstone
+  * rows), while this composes the at-rest operations its operator
+  * runs on a cadence against the day-partitioned layout
   * (/root/reference/README.md:182):
   *
   *   1. ingest     — `Lake.writePartitioned`: land a new batch of rows

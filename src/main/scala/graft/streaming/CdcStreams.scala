@@ -404,12 +404,6 @@ object CdcStreams {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** s06: at-least-once → effectively-once. Watermark bounds the dedup
-    * state: ids older than the watermark are dropped from the store. */
-  def dedupStream(df: DataFrame, idCol: String, tsCol: String,
-      watermark: String): DataFrame =
-    df.withWatermark(tsCol, watermark).dropDuplicates(idCol)
-
   /** Late-data DEAD-LETTER split — the operational pattern every
     * watermarked pipeline needs and Spark doesn't surface: a row older
     * than the watermark is silently DROPPED by windowed aggregates /

@@ -219,8 +219,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("s06: dropDuplicates with watermark survives redelivery") {
     val ms = MemoryStream[(Timestamp, Long)]
-    val dedup = CdcStreams.dedupStream(
-      ms.toDF().toDF("ts", "event_id"), "event_id", "ts", "1 hour")
+    val dedup = ms.toDF().toDF("ts", "event_id")
+      .withWatermark("ts", "1 hour").dropDuplicates("event_id")
     val q = dedup.writeStream.outputMode("append")
       .format("memory").queryName("s06").start()
     def t(m: String) = Timestamp.valueOf(s"2024-01-01 $m:00")
@@ -943,9 +943,10 @@ class StreamingSpec extends AnyFunSuite {
     // examples.CdcPipeline = the reference's whole pipeline
     // (README.md:128-192) as one artifact. Each start() drains the
     // directory and terminates (AvailableNow); calling it again with
-    // the same checkpoints IS the crash-restart: offsets, dedup state
-    // and the idempotent batch protocol must all line up.
+    // the same checkpoints IS the crash-restart: offsets and the
+    // idempotent latest-HLC merge must line up.
     import graft.examples.CdcPipeline
+    import graft.sources.Lake
     val src = TestSpark.tmpDir("s28-src")
     val state = TestSpark.tmpDir("s28-state")
     val chk = TestSpark.tmpDir("s28-chk")
@@ -955,37 +956,48 @@ class StreamingSpec extends AnyFunSuite {
       quarantinePath = Some(quar), quarantineCheckpoint = Some(qchk)).awaitAll()
     def keys = CdcPipeline.currentState(spark, state)
       .collect().map(_.getAs[String]("kid")).toSet
+    def revenue(kid: String) = CdcPipeline.currentState(spark, state)
+      .where(col("kid") === kid).head().getAs[String]("revenue")
+    def stored(kid: String) = Lake.readStore(spark, state).where(col("kid") === kid)
     writeNdjson(src, "f1.ndjson", Seq(
       envLine("a", "amsterdam", "10.00", "1.0"),
       "{not json at all",
-      envLine("b", "boston", "5.00", "2.0")))
+      envLine("b", "boston", "5.00", "2.0"),
+      // same tick: the HLCs differ only in the logical counter, below
+      // what a double can tell apart
+      envLine("c", "cairo", "1.00", "1670000000000000000.0000000001"),
+      envLine("c", "cairo", "2.00", "1670000000000000000.0000000002"),
+      envLine("d", "dublin", "3.00", "1.5")))
     run()
-    assert(keys == Set("amsterdam|a", "boston|b"))
+    assert(keys == Set("amsterdam|a", "boston|b", "cairo|c", "dublin|d"))
+    assert(revenue("cairo|c") == "2.00", "same-tick change lost to its predecessor")
     assert(spark.read.parquet(quar).count() == 1, "malformed line not quarantined")
     // restart 1: a REDELIVERED envelope (same key, same hlc — the
-    // at-least-once case) plus a delete tombstone for b
+    // at-least-once case) plus delete tombstones for b and d
     writeNdjson(src, "f2.ndjson", Seq(
       envLine("a", "amsterdam", "10.00", "1.0"),
-      """{"after": null, "key": ["boston", "b"], "updated": "3.0"}"""))
+      """{"after": null, "key": ["boston", "b"], "updated": "3.0"}""",
+      """{"after": null, "key": ["dublin", "d"], "updated": "3.5"}"""))
     run()
-    assert(keys == Set("amsterdam|a"), "tombstone not applied across restart")
-    val aRows = spark.read.option("basePath", state).parquet(s"$state/batch=*")
-      .where(col("kid") === "amsterdam|a").count()
+    assert(keys == Set("amsterdam|a", "cairo|c"), "tombstone not applied across restart")
+    val aRows = stored("amsterdam|a").count()
     assert(aRows == 1, s"redelivered envelope became a new store row ($aRows)")
-    // maintenance: fold batches, delete becomes physical
+    // maintenance between runs
     CdcPipeline.compact(spark, state)
-    assert(new java.io.File(state).listFiles()
-      .count(_.getName.startsWith("batch=")) == 1)
-    assert(spark.read.option("basePath", state).parquet(s"$state/batch=*")
-      .where(col("kid") === "boston|b").isEmpty, "tombstoned key survived compaction")
-    assert(keys == Set("amsterdam|a"))
+    assert(stored("boston|b").where(!col("is_delete") || col("id").isNotNull ||
+      col("city").isNotNull || col("revenue").isNotNull).isEmpty,
+      "tombstoned key survived compaction")
+    assert(keys == Set("amsterdam|a", "cairo|c"))
     // restart 2 AFTER compaction: the stream continues, an upsert newer
-    // than the delete re-creates its key
-    writeNdjson(src, "f3.ndjson", Seq(envLine("b", "boston", "7.00", "4.0")))
+    // than the delete re-creates its key, and a redelivered insert
+    // OLDER than its key's delete does not
+    writeNdjson(src, "f3.ndjson", Seq(
+      envLine("b", "boston", "7.00", "4.0"),
+      envLine("d", "dublin", "3.00", "1.5")))
     run()
-    assert(keys == Set("amsterdam|a", "boston|b"))
-    assert(CdcPipeline.currentState(spark, state)
-      .where(col("kid") === "boston|b").head().getAs[String]("revenue") == "7.00")
+    assert(keys == Set("amsterdam|a", "boston|b", "cairo|c"),
+      "stale redelivery re-created a deleted key")
+    assert(revenue("boston|b") == "7.00")
   }
 
   test("s29: late-data dead-letter split routes exactly what the watermark drops") {
