@@ -267,44 +267,25 @@ object Lake {
     * order. With full version info that fold is order-INDEPENDENT
     * (max-order-cols wins either way). The one order-dependent corner
     * — found by the partitioned-merge interleaving model — is
-    * tombstone resurrection: deletes are PHYSICAL (a pinned contract —
-    * no row survives for the key), so a tombstone keeps no version
-    * for a later batch to lose against, and a concurrent STALE
-    * non-delete rebased past a fresher delete re-inserts its key.
-    * This is inherent to physical tombstones under upsert-rebase
-    * semantics (logical tombstone retention would trade it for
-    * unbounded ghost rows); writers whose batches can carry a delete
-    * and a concurrent stale update of the SAME key must serialize
-    * those batches themselves — or run them through one writer, where
-    * the within-batch max-version rule already orders them — or opt
-    * into `retainTombstones` (below), which makes that corner
-    * converge by arithmetic instead of by caller discipline.
-    *
-    * RETAINED TOMBSTONES (round 15 — VERDICT r14 item 6, the opt-in
-    * guard rail): with `retainTombstones = Some(graceMs)`, each
-    * merge's winning deletes are also recorded — key + orderCols —
-    * in a hidden `_tombstones/t_v<k>.<uniq>` ledger inside the store
-    * (writer-unique, manifest-verified against the version that
-    * committed it, exactly the `_cdf_v<k>.<uniq>` discipline; a
-    * crashed attempt's strand never validates and ages out). Every
-    * retain-mode merge folds the un-expired ledger rows into the
-    * conflict resolution as delete-flagged contenders, so a STALE
-    * non-delete rebased past a fresher delete now LOSES to the
-    * retained tombstone's version — the r14 resurrection
-    * counterexample converges to the same state in either commit
-    * order, as long as the overlap happens within the grace window.
-    * Rows are physical-deleted exactly as before (readers never see
-    * ghosts); only the small (key, orderCols) ledger persists, and it
-    * is bounded: a file whose newest row is older than `graceMs` is
-    * pruned by the next retain-mode merge. Mixing retain-mode and
-    * plain calls on one store forfeits the guarantee for the plain
-    * calls (same contract shape as mixed changeDir on/off). */
+    * tombstone resurrection: with `isDelete` given, deletes are
+    * PHYSICAL (a pinned contract — no row survives for the key), so a
+    * tombstone keeps no version for a later batch to lose against,
+    * and a STALE non-delete committed after a fresher delete —
+    * concurrently rebased, or simply redelivered in a later batch —
+    * re-inserts its key. Changefeed stores therefore pass NO
+    * `isDelete`: the delete row (its flag set, null payload) stays as
+    * the key's latest row, a stale change loses to its version by the
+    * same max-orderCols rule as everything else in either commit
+    * order, and readers filter the flag (`CdcStreams.mergeSink`,
+    * `demuxMergeSink`, `examples.CdcPipeline`). Physical deletes are
+    * for writers whose batches cannot carry a change older than a
+    * delete of the same key — or that run them through one writer,
+    * where the within-batch max-version rule already orders them. */
   def mergeInto(spark: SparkSession, targetDir: String, updates: DataFrame,
       keyCols: Seq[String], orderCols: Seq[String],
       isDelete: Option[org.apache.spark.sql.Column] = None,
       changeDir: Option[String] = None,
-      cdfPreImages: Boolean = false,
-      retainTombstones: Option[Long] = None): Unit = {
+      cdfPreImages: Boolean = false): Unit = {
     import org.apache.hadoop.fs.Path
     val target = new Path(targetDir)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -395,35 +376,13 @@ object Lake {
       else None
     val all = current.fold(updates)(c =>
       c.unionByName(updates, allowMissingColumns = true))
-    // writer-unique attempt naming, shared by the stage, the cdf
-    // staging, and the tombstone ledger entry
+    // writer-unique attempt naming, shared by the stage and the cdf
+    // staging
     val uniq = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val stageName = Snapshot.stageDirName(fs, target, "merge" + uniq)
     val nextV = curV.getOrElse(0L) + 1L
-    val tombFile = new Path(target, s"_tombstones/t_v$nextV.$uniq")
-    val merged = retainTombstones match {
-      case None =>
-        graft.streaming.CdcStreams
-          .latestByKey(all, keyCols, orderCols, isDelete)
-      case Some(grace) =>
-        // fold un-expired retained tombstones in as delete-flagged
-        // contenders: a stale non-delete then loses to the retained
-        // delete's orderCols by the SAME max-wins rule as everything
-        // else — no special case in the conflict arithmetic
-        val ledger = readTombstoneLedger(spark, fs, target, curV, grace)
-        val tombs =
-          (if (ledger.columns.isEmpty) // no ledger yet — empty identity
-            all.limit(0) else ledger)
-            .select((keyCols ++ orderCols).map(col): _*)
-        val withT = all.withColumn("__graft_tomb", lit(false))
-          .unionByName(tombs.withColumn("__graft_tomb", lit(true)),
-            allowMissingColumns = true)
-        val effDel = col("__graft_tomb") ||
-          isDelete.map(d => coalesce(d, lit(false))).getOrElse(lit(false))
-        graft.streaming.CdcStreams
-          .latestByKey(withT, keyCols, orderCols, Some(effDel))
-          .drop("__graft_tomb")
-    }
+    val merged = graft.streaming.CdcStreams
+      .latestByKey(all, keyCols, orderCols, isDelete)
     // stage the merged result as the NEXT snapshot version's data dir,
     // under a WRITER-UNIQUE role (round 14): two live merges on one
     // store both derive next = cur + 1, so a shared "merge" role
@@ -439,23 +398,6 @@ object Lake {
     // the pointer swap
     val staged = Snapshot.stagePath(target, stageName)
     merged.write.mode("overwrite").parquet(staged.toString)
-    // retain mode: record THIS batch's winning deletes (its top delete
-    // per key whose key is absent from the staged result — absent ⇒
-    // the delete, or a fresher retained tombstone, won) in the ledger,
-    // pre-commit under the attempt's unique name; validated against
-    // the committed manifest by later readers, deleted on claim loss
-    retainTombstones.foreach { _ =>
-      isDelete.foreach { d =>
-        val batchDel = graft.streaming.CdcStreams.latestByKey(
-            updates.where(coalesce(d, lit(false))), keyCols, orderCols, None)
-          .select((keyCols ++ orderCols).map(col): _*)
-          .join(spark.read.parquet(staged.toString)
-            .select(keyCols.map(col): _*), keyCols, "left_anti")
-          .withColumn("__ts_ms", lit(System.currentTimeMillis()))
-        if (!batchDel.isEmpty)
-          batchDel.write.mode("overwrite").parquet(tombFile.toString)
-      }
-    }
     // the cdf staging is writer-unique for the same reason: a racing
     // merge's overwrite of a SHARED `_cdf_v<next>` would publish the
     // wrong writer's diff under the winner's version
@@ -576,9 +518,6 @@ object Lake {
         // live retry will stage fresh under a new unique name, so
         // delete now rather than wait for the vacuum sweep
         if (fs.exists(staged)) fs.delete(staged, true)
-        // and its tombstone ledger entry: the version it stamps never
-        // committed under this attempt's member name
-        if (fs.exists(tombFile)) fs.delete(tombFile, true)
         throw e
     }
     changeDir.foreach { cd =>
@@ -588,58 +527,6 @@ object Lake {
     // resolved just before the commit still finds its files); flats
     // consumed by versions BELOW the new current are deleted here
     Snapshot.vacuum(fs, target, keep = 2)
-  }
-
-  /** Un-expired, manifest-verified tombstone ledger rows (retain-mode
-    * merges only). Verification mirrors the `_cdf_v<k>.<u>` rule: an
-    * entry counts iff its stamped version committed UNDER THIS
-    * ATTEMPT's member name (`d<k>-merge<u>` in version k's manifest) —
-    * a crashed loser's strand never validates and is deleted once
-    * aged past the claim grace (subtree-deep, like every strand
-    * sweep). Expiry is by content: a file whose write time is older
-    * than `graceMs` holds only expired rows and is pruned; surviving
-    * files' rows are re-filtered by `__ts_ms` anyway. */
-  private def readTombstoneLedger(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, curV: Option[Long],
-      graceMs: Long): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(target, "_tombstones")
-    val TombRe = "t_v(\\d+)\\.([0-9a-f]+)".r
-    val now = System.currentTimeMillis()
-    val valid =
-      if (!fs.exists(root)) Seq.empty[String]
-      else fs.listStatus(root).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case TombRe(k, u) =>
-            val kk = k.toLong
-            if (now - st.getModificationTime > graceMs) {
-              // every row inside is at least this old — expired
-              fs.delete(st.getPath, true); None
-            } else if (curV.exists(kk <= _) &&
-                scala.util.Try(Snapshot.members(fs, target, kk))
-                  .getOrElse(Nil).contains(s"d$kk-merge$u"))
-              Some(st.getPath.toString)
-            else {
-              // unverifiable: a live writer's pre-commit entry (fresh,
-              // above the pointer) or a crashed loser's strand (ages
-              // out) — never folded either way
-              if (Snapshot.strandAgedOut(fs, st.getPath)) {
-                fs.delete(st.getPath, true); ()
-              }
-              None
-            }
-          case _ => None
-        }
-      }
-    if (valid.isEmpty)
-      // empty frame with a (key, order) superset schema derived from
-      // nothing — the caller selects its own columns, so an empty
-      // updates-shaped frame is the right identity
-      spark.emptyDataFrame
-    else
-      spark.read.parquet(valid: _*)
-        .where(col("__ts_ms") > lit(now - graceMs))
   }
 
   /** The RETRY-REBASE rule, executable (round 12 — the loser's side
@@ -659,11 +546,10 @@ object Lake {
       isDelete: Option[org.apache.spark.sql.Column] = None,
       changeDir: Option[String] = None,
       cdfPreImages: Boolean = false,
-      attempts: Int = 3,
-      retainTombstones: Option[Long] = None): Unit =
+      attempts: Int = 3): Unit =
     Snapshot.retrying(attempts) {
       mergeInto(spark, targetDir, updates, keyCols, orderCols,
-        isDelete, changeDir, cdfPreImages, retainTombstones)
+        isDelete, changeDir, cdfPreImages)
     }
 
   /** MERGE with row-level EXPECTATIONS — the batch twin of the
@@ -825,8 +711,7 @@ object Lake {
       changeDir: Option[String] = None,
       cdfPreImages: Boolean = false,
       parallelism: Int = 4,
-      attempts: Int = 1,
-      retainTombstones: Option[Long] = None): Seq[String] = {
+      attempts: Int = 1): Seq[String] = {
     // the batch feeds the distinct probe plus one filtered pass per
     // touched partition — pin it for the loop's duration (idempotent
     // guard: a bench loop may re-merge an already-cached plan)
@@ -854,7 +739,7 @@ object Lake {
         mergeIntoRetrying(spark, s"$lakeRoot/$partCol=$esc", sub,
           keyCols, orderCols, isDelete,
           changeDir.map(cd => s"$cd/$partCol=$esc"), cdfPreImages,
-          attempts = attempts, retainTombstones = retainTombstones)
+          attempts = attempts)
       }
       // per-partition merges touch DISJOINT store+feed directories
       // (each its own snapshot protocol, each already single-writer),

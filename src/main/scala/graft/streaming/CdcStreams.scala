@@ -15,18 +15,19 @@ import org.apache.spark.sql.types._
   * The reference's delivery contract is at-least-once with per-key
   * ordering by the `updated` HLC timestamp (README.md:90,137); these
   * helpers upgrade that to exactly-once analytics the Spark way:
-  * checkpointed offsets + idempotent batch sinks + watermarked
-  * dedup/upsert state.
+  * checkpointed offsets + idempotent batch sinks. A changefeed store
+  * merges by latest HLC per key and keeps each delete as the key's
+  * latest row (a tombstone: delete flag set, null payload), so a
+  * redelivered older change loses to it; readers filter the flag.
   *
   * Scale: file-source listing is incremental (maxFilesPerTrigger
-  * bounds a micro-batch); all stateful ops key on the envelope key or
-  * event id, so state partitions across executors and is pruned by
-  * watermark — nothing here holds unbounded state.
+  * bounds a micro-batch), and no helper here runs a stateful
+  * streaming operator.
   */
 object CdcStreams {
 
   /** Shared idempotence guard for `batch=<id>` directory writes (the
-    * upsert store and every GlobalSketch sink). A directory counts as
+    * day sink below and every GlobalSketch sink). A directory counts as
     * COMMITTED only with its `_SUCCESS` marker — the committer creates
     * the dir at job SETUP, so a bare dir-exists test lets a replayed
     * batch skip a crash-truncated write and silently lose its rows;
@@ -235,9 +236,7 @@ object CdcStreams {
           // 1. data rows (flattened post-images — deletes surface as
           //    `is_delete` tombstones) append into their EVENT-TIME
           //    day, batch-guarded
-          val data = b.where(col("resolved").isNull)
-            .select(col("after.*"), col("key"), col("updated"),
-              col("after").isNull.as("is_delete"))
+          val data = postImages(b.where(col("resolved").isNull))
             .withColumn("ingest_date",
               to_date(hlcTimestamp(col("updated"))).cast("string"))
           val days = data.select("ingest_date").where(col("ingest_date").isNotNull)
@@ -347,17 +346,20 @@ object CdcStreams {
     * per-table managed stores via [[graft.sources.Lake.mergeInto]].
     * Per-key order rides the `updated` HLC ([[hlcOrder]] — full
     * decimal precision, so same-nanosecond transactions keep their
-    * logical-counter order); deletes (`after` null) tombstone their
-    * key. Exactly-once across restarts without batch bookkeeping:
-    * replaying a batch re-merges to the identical state (latest-HLC-
-    * wins is idempotent), the same contract as [[mergeSink]]. Tables
-    * NOT routed are ignored here — run a second demux over the same
-    * feed dir with its own checkpoint to consume them later (file-
-    * source checkpoints are per-query).
+    * logical-counter order). A delete (`after` null) is KEPT as its
+    * key's latest row — `_is_delete = true`, null payload — so a
+    * redelivered change older than the delete loses to it instead of
+    * re-creating the key. Exactly-once across restarts without batch
+    * bookkeeping: replaying a batch re-merges to the identical state
+    * (latest-HLC-wins is idempotent), the same contract as
+    * [[mergeSink]]. Tables NOT routed are ignored here — run a second
+    * demux over the same feed dir with its own checkpoint to consume
+    * them later (file-source checkpoints are per-query).
     *
     * The store rows are the flattened post-image plus `_kid` (the
-    * json-encoded envelope key) and `_hlc`; a single-table reader
-    * (readStore / registerCatalog / time travel) works unchanged. */
+    * json-encoded envelope key), `_hlc` and `_is_delete`; a single-
+    * table reader (readStore / registerCatalog / time travel) works
+    * unchanged and reads the live table as `where(!_is_delete)`. */
   def demuxMergeSink(lines: DataFrame, routes: Map[String, TableRoute],
       checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(routes.nonEmpty, "demuxMergeSink: no table routes")
@@ -378,7 +380,7 @@ object CdcStreams {
             col("env.after").isNull.as("_is_delete"))
           if (!rows.isEmpty)
             graft.sources.Lake.mergeInto(b.sparkSession, route.storeDir,
-              rows, Seq("_kid"), Seq("_hlc"), Some(col("_is_delete")))
+              rows, Seq("_kid"), Seq("_hlc"))
         } finally { b.unpersist(); () }
         ()
       }
@@ -483,40 +485,20 @@ object CdcStreams {
     isDelete.fold(latest)(d => latest.where(!d))
   }
 
-  /** s07: exactly-once upsert sink. Each micro-batch lands in a
-    * `batch=<id>` directory; a restart that replays a batch id finds
-    * the directory and skips — write idempotence on top of the
-    * checkpoint's offset replay. `currentState` materializes the
-    * upsert view (latest per key across batches). */
-  def upsertSink(df: DataFrame, statePath: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dir = new Path(s"$statePath/batch=$batchId")
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        writeIfUncommitted(_.getFileSystem(conf), conf, dir) {
-          batch.write.mode("overwrite").parquet(dir.toString)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-
-  def currentState(spark: SparkSession, statePath: String,
-      keyCols: Seq[String], orderCols: Seq[String],
-      isDelete: Option[Column] = None): DataFrame =
-    latestByKey(spark.read.option("basePath", statePath)
-      .parquet(s"$statePath/batch=*"), keyCols, orderCols, isDelete)
-
   /** Streaming MERGE sink — each micro-batch merges into a DIRECTLY
     * queryable parquet table (`Lake.mergeInto`: matched-update /
-    * not-matched-insert / tombstone-delete, physical deletes), the
-    * MERGE INTO consumption mode a lake user reaches for, vs
-    * `upsertSink`'s append-only `batch=<id>` store that needs a
-    * rank-1 `currentState` read and periodic compaction. Exactly-once
-    * across restarts WITHOUT tracking batch ids: the merge conflict
-    * rule is the CDC replay rule (latest by `orderCols` wins), so a
-    * checkpoint-replayed micro-batch merges to the identical state —
-    * idempotence by semantics, not by bookkeeping.
+    * not-matched-insert), the MERGE INTO consumption mode a lake user
+    * reaches for. Deletes: with no `isDeleteCol` a delete row is kept
+    * as its key's latest row and readers filter the flag — the
+    * changefeed protocol, where a redelivered older change loses to
+    * the kept delete. `isDeleteCol` makes deletes PHYSICAL instead;
+    * use it only when no change older than a delete can arrive in a
+    * later batch, since the deleted key then has no row to lose
+    * against. Exactly-once across restarts WITHOUT tracking batch
+    * ids: the merge conflict rule is the CDC replay rule (latest by
+    * `orderCols` wins), so a checkpoint-replayed micro-batch merges to
+    * the identical state — idempotence by semantics, not by
+    * bookkeeping.
     *
     * Routing: with `partitionCol` set (e.g. `ingest_date`, present on
     * the stream), each micro-batch merges ONLY the partitions it
@@ -524,9 +506,7 @@ object CdcStreams {
     * spanning one day rewrites one directory, never the table; this
     * is the form to run at lake scale. Without it, every batch pays a
     * copy-on-write of the whole `targetDir` (then point it at a
-    * single day partition, or prefer `upsertSink` + compaction
-    * cadence when batches are small and frequent — all trades
-    * documented, all tested). A crash mid-batch replays the batch and
+    * single day partition). A crash mid-batch replays the batch and
     * re-merges idempotently per partition. */
   def mergeSink(df: DataFrame, targetDir: String, checkpoint: String,
       keyCols: Seq[String], orderCols: Seq[String],
@@ -573,65 +553,5 @@ object CdcStreams {
       .schema(rowSchema.add("_op", StringType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(glob)
-  }
-
-  /** Compact the upsert store: fold every `batch=N` directory into one
-    * directory holding the materialized current state. The store
-    * otherwise grows with every micro-batch and each `currentState`
-    * read re-ranks all history; compaction also PHYSICALLY removes
-    * tombstoned keys (the delete actually deletes — retention/GDPR).
-    *
-    * Safe against the sink's replay protocol: the consolidated
-    * directory keeps the HIGHEST seen batch id, and a restarted stream
-    * can only replay that id (found → skipped) or continue at id+1 —
-    * older ids are committed in the checkpoint and never replay.
-    *
-    * The discovered `batch` partition column is DROPPED before the
-    * rewrite: the consolidated files must carry the same physical
-    * schema as the files later sink batches write, or the store's
-    * footers drift apart and re-reads depend on schema-overlap
-    * resolution.
-    *
-    * Swap protocol (same as Lake.compactDay): stage to a temp dir,
-    * rename the live `batch=<maxId>` aside, rename tmp into place,
-    * THEN delete the aside and the older batch dirs. No step destroys
-    * data before its replacement is live: a crash after the swap
-    * leaves consolidated + older dirs coexisting, which `currentState`
-    * still ranks correctly (the consolidated rows are copies of each
-    * key's winner, so rank-1 picks the same record), and the next call
-    * finishes the cleanup. A crash between the renames is restored
-    * from the aside at the next call. */
-  def compactState(spark: SparkSession, statePath: String,
-      keyCols: Seq[String], orderCols: Seq[String],
-      isDelete: Option[Column] = None): Unit = {
-    val root = new Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val tmp = new Path(s"$statePath/_compact_tmp")
-    // crash recovery: restore a stranded aside before reading state
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("_compact_old_")).foreach { aside =>
-        val target = new Path(root, s"batch=${aside.getName.stripPrefix("_compact_old_")}")
-        if (!fs.exists(target)) fs.rename(aside, target)
-        else fs.delete(aside, true)
-      }
-    fs.delete(tmp, true)
-    val batchDirs = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).toSeq
-    if (batchDirs.size < 2) return
-    val maxId = batchDirs.map(_.getName.stripPrefix("batch=").toLong).max
-    currentState(spark, statePath, keyCols, orderCols, isDelete)
-      .drop("batch")
-      .write.mode("overwrite").parquet(tmp.toString)
-    val target = new Path(s"$statePath/batch=$maxId")
-    val aside = new Path(s"$statePath/_compact_old_$maxId")
-    if (!fs.rename(target, aside))
-      throw new java.io.IOException(s"state compaction aside rename failed at $statePath")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(aside, target) // roll back — old state stays live
-      throw new java.io.IOException(s"state compaction rename failed at $statePath")
-    }
-    fs.delete(aside, true)
-    batchDirs.filterNot(_.getName == s"batch=$maxId").foreach(fs.delete(_, true))
   }
 }

@@ -19,7 +19,7 @@ import graft.functions.MisraGries
   * rows) up the tree, so the only thing crossing the final exchange
   * is k counters per partition. The per-batch sketch row
   * `(batch, n, keys[], counts[])` appends to a sketch STORE
-  * (`batch=<id>` directories, the upsertSink idempotence protocol:
+  * (`batch=<id>` directories under `CdcStreams.writeIfUncommitted`:
   * a checkpoint-replayed batch finds its directory and skips — the
   * store converges across crashes/restarts). The GLOBAL summary is
   * merge-on-read: fold the stored sketches with the same pairwise MG
@@ -188,15 +188,12 @@ object GlobalSketch {
 
   /** Bound MG-store growth: fold every stored per-batch sketch row
     * into ONE row living in the HIGHEST seen `batch=` directory — the
-    * same replay-safe id choice as `CdcStreams.compactState` (a
-    * restarted stream can only replay that id, found-committed →
-    * skipped, or continue at id+1; older ids are committed offsets and
-    * never replay).
+    * replay-safe id choice (a restarted stream can only replay that
+    * id, found-committed → skipped, or continue at id+1; older ids are
+    * committed offsets and never replay).
     *
-    * Unlike compactState's rank-1 store — where a crash-stranded extra
-    * copy is harmless (rank-1 picks the same winner) — sketch counts
-    * are ADDITIVE: a folded row coexisting, LIVE, with the dirs it
-    * folded would double-count. The fold's upto travels in its NAME
+    * Sketch counts are ADDITIVE: a folded row coexisting, LIVE, with
+    * the dirs it folded would double-count. The fold's upto travels in its NAME
     * (`fold=<maxId>`, committed by one rename of a fresh name), and
     * every reader (`liveBatchDirs`) ignores batch dirs at or below
     * the newest fold's upto. Crash windows: before the rename —

@@ -236,14 +236,14 @@ class StreamingSpec extends AnyFunSuite {
     val state = TestSpark.tmpDir("s07-state")
     val chk = TestSpark.tmpDir("s07-chk")
     val ms = MemoryStream[(Long, String, Long)]
-    val q = CdcStreams.upsertSink(
-      ms.toDF().toDF("k", "v", "ver"), state, chk).start()
+    val q = CdcStreams.mergeSink(
+      ms.toDF().toDF("k", "v", "ver"), state, chk, Seq("k"), Seq("ver")).start()
     ms.addData((1L, "a", 1L), (2L, "b", 1L))
     q.processAllAvailable()
     ms.addData((1L, "a2", 2L)) // update key 1
     q.processAllAvailable()
     q.stop()
-    val cur = CdcStreams.currentState(spark, state, Seq("k"), Seq("ver"))
+    val cur = graft.sources.Lake.readStore(spark, state)
     val m = cur.collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
     assert(m == Map(1L -> "a2", 2L -> "b"))
   }
@@ -259,12 +259,13 @@ class StreamingSpec extends AnyFunSuite {
       val post = CdcStreams.postImages(
           CdcStreams.readEnvelopeStream(spark, src, rideSchema))
         .withColumn("kid", element_at(col("key"), 2))
-      val q = CdcStreams.upsertSink(post, state, chk)
+      val q = CdcStreams.mergeSink(post, state, chk, Seq("kid"), Seq("updated"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    def keys = CdcStreams.currentState(spark, state, Seq("kid"), Seq("updated"),
-        isDelete = Some(col("is_delete")))
+    // the delete is kept as the key's latest row; the live view filters it
+    def keys = graft.sources.Lake.readStore(spark, state)
+      .where(!col("is_delete"))
       .collect().map(_.getAs[String]("kid")).toSet
     run()
     assert(keys == Set("a", "b"))
@@ -288,68 +289,37 @@ class StreamingSpec extends AnyFunSuite {
       val post = CdcStreams.postImages(
           CdcStreams.readEnvelopeStream(spark, src, rideSchema))
         .withColumn("kid", element_at(col("key"), 2))
-      val q = CdcStreams.upsertSink(post, state, chk)
+      // physical deletes: each micro-batch is folded into the store
+      // as it lands, so the store IS the compacted state
+      val q = CdcStreams.mergeSink(post, state, chk, Seq("kid"), Seq("updated"),
+          isDeleteCol = Some("is_delete"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    def cur = CdcStreams.currentState(spark, state, Seq("kid"), Seq("updated"),
-      isDelete = Some(col("is_delete")))
-    def batchDirs = new java.io.File(state).listFiles()
-      .count(_.getName.startsWith("batch="))
+    def cur = graft.sources.Lake.readStore(spark, state)
+    def kids = cur.select("kid").collect().map(_.getString(0)).toSet
     writeNdjson(src, "f1.ndjson", Seq(envLine("a", "amsterdam", "10.00", "1.0")))
     run()
     writeNdjson(src, "f2.ndjson", Seq(envLine("b", "boston", "5.00", "2.0")))
     run()
+    assert(kids == Set("a", "b"))
     writeNdjson(src, "f3.ndjson",
       Seq("""{"after": null, "key": ["amsterdam", "a"], "updated": "3.0"}"""))
     run()
-    assert(batchDirs == 3)
-    val before = cur.select("kid").collect().map(_.getString(0)).toSet
-    CdcStreams.compactState(spark, state, Seq("kid"), Seq("updated"),
-      isDelete = Some(col("is_delete")))
-    assert(batchDirs == 1, "compaction must fold all batch dirs into one")
-    assert(cur.select("kid").collect().map(_.getString(0)).toSet == before)
-    // the delete is now PHYSICAL: no tombstone row survives in the store
-    val raw = spark.read.option("basePath", state).parquet(s"$state/batch=*")
+    val raw = cur
+    assert(raw.count() == raw.select("kid").distinct().count(),
+      "compaction must fold all batch dirs into one")
+    assert(kids == Set("b"))
+    // the delete is PHYSICAL: no tombstone row survives in the store
     assert(raw.where(col("is_delete")).isEmpty)
     assert(raw.where(col("kid") === "a").isEmpty)
-    // the stream continues past the compacted id without collision
+    // the stream continues on the same checkpoint
     writeNdjson(src, "f4.ndjson", Seq(envLine("c", "chicago", "7.00", "4.0")))
     run()
-    assert(cur.select("kid").collect().map(_.getString(0)).toSet == Set("b", "c"))
-    // consolidated files must carry the SAME physical schema as sink
-    // batches: the discovered `batch` partition column is dropped
-    // before the rewrite (schema-drift guard)
-    val maxDir = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).max
-    assert(!spark.read.parquet(s"$state/$maxDir")
-      .schema.fieldNames.contains("batch"),
+    assert(kids == Set("b", "c"))
+    // the store carries the rows' own schema, no batch column
+    assert(!cur.schema.fieldNames.contains("batch"),
       "consolidated state files physically carry the batch partition column")
-  }
-
-  test("compactState recovers a stranded aside dir from a crashed swap") {
-    import org.apache.hadoop.fs.Path
-    import spark.implicits._
-    val state = TestSpark.tmpDir("comp-rec")
-    Seq(("a", 1L, false), ("b", 1L, false)).toDF("kid", "updated", "is_delete")
-      .write.parquet(s"$state/batch=0")
-    Seq(("a", 2L, false)).toDF("kid", "updated", "is_delete")
-      .write.parquet(s"$state/batch=1")
-    // simulate a crash in the swap window: the live max-batch dir was
-    // renamed aside and the process died before tmp moved in
-    val fs = new Path(state).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(s"$state/batch=1"), new Path(s"$state/_compact_old_1")))
-    graft.streaming.CdcStreams.compactState(
-      spark, state, Seq("kid"), Seq("updated"))
-    // recovery restored the aside, then compaction folded both batches
-    val dirs = new java.io.File(state).listFiles().map(_.getName)
-      .filter(_.startsWith("batch=")).toSeq
-    assert(dirs == Seq("batch=1"), s"got $dirs")
-    assert(new java.io.File(state).listFiles()
-      .forall(f => !f.getName.startsWith("_compact")), "stale work dirs left")
-    val got = spark.read.parquet(s"$state/batch=1")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == Set(("a", 2L), ("b", 1L)), s"got $got")
   }
 
   test("s09: streaming twins of q70/q71/q72 equal their batch results") {
@@ -1812,7 +1782,7 @@ class StreamingSpec extends AnyFunSuite {
       envLine("b", "boston", "5.00", "2.0"))
     val users1 = Seq(userLine("u1", "ann", "1.5"), userLine("u2", "bo", "2.5"))
     val rides2 = Seq(envLine("a", "amsterdam", "12.00", "3.0")) // later HLC wins
-    val users2 = Seq(userDel("u2", "3.5")) // tombstone removes u2
+    val users2 = Seq(userDel("u2", "3.5")) // tombstone deletes u2
     writeNdjson(src, "202212120800-n1-rides-1.ndjson", rides1)
     writeNdjson(src, "202212120801-n1-users-1.ndjson", users1)
     writeNdjson(src, "202212120802-n1-rides-1.ndjson", rides2)
@@ -1831,7 +1801,8 @@ class StreamingSpec extends AnyFunSuite {
     }
     run(s"$base/chk")
     // single-table TWINS: the same per-file merge cadence over each
-    // table's files alone, through the plain single-table path
+    // table's files alone, through the plain single-table path (a
+    // delete is kept as its key's latest row)
     def twin(schema: StructType, dir: String, batches: Seq[Seq[String]]): Unit =
       batches.foreach { lines =>
         val env = spark.read.schema(CdcStreams.envelopeSchema(schema))
@@ -1840,7 +1811,7 @@ class StreamingSpec extends AnyFunSuite {
           env.select(col("after.*"), to_json(col("key")).as("_kid"),
             CdcStreams.hlcOrder(col("updated")).as("_hlc"),
             col("after").isNull.as("_is_delete")),
-          Seq("_kid"), Seq("_hlc"), Some(col("_is_delete")))
+          Seq("_kid"), Seq("_hlc"), isDelete = None)
       }
     twin(rideSchema, s"$base/rides_twin", Seq(rides1, rides2))
     twin(userSchema, s"$base/users_twin", Seq(users1, users2))
@@ -1849,14 +1820,36 @@ class StreamingSpec extends AnyFunSuite {
       df.select(df.columns.sorted.map(col): _*)
         .collect().map(_.toString).sorted.toSeq
     }
+    // u2's delete is its one stored row (null payload); the live view
+    // (`!_is_delete`) holds u1 alone
+    def assertU2Deleted(when: String): Unit = {
+      val users = graft.sources.Lake.readStore(spark, s"$base/users")
+      val u2 = users.where(col("_kid") === """["u2"]""").collect()
+      assert(u2.length == 1, s"$when: u2 has ${u2.length} stored rows")
+      assert(u2.head.getAs[Boolean]("_is_delete") && u2.head.isNullAt(
+        u2.head.fieldIndex("name")), s"$when: u2's row is not a tombstone")
+      val live = users.where(!col("_is_delete"))
+        .select("id").collect().map(_.getString(0)).toSeq
+      assert(live == Seq("u1"), s"$when: live users $live")
+    }
     assert(dump(s"$base/rides") == dump(s"$base/rides_twin"),
       "demuxed rides store diverged from its single-table twin")
     assert(dump(s"$base/users") == dump(s"$base/users_twin"),
       "demuxed users store diverged from its single-table twin")
-    assert(dump(s"$base/users").size == 1, "tombstone failed to delete u2")
+    assertU2Deleted("first run")
     // per-key order preserved: the later-HLC ride won
     assert(graft.sources.Lake.readStore(spark, s"$base/rides")
       .where(col("id") === "a").select("revenue").head().getString(0) == "12.00")
+    // STALE REDELIVERY (at-least-once): a later users file re-sends u2
+    // at HLC 2.0, older than its delete at 3.5 — it must lose to the
+    // kept delete row, not re-create u2
+    val users3 = Seq(userLine("u2", "bo", "2.0"))
+    writeNdjson(src, "202212120804-n1-users-1.ndjson", users3)
+    run(s"$base/chk")
+    twin(userSchema, s"$base/users_twin", Seq(users3))
+    assert(dump(s"$base/users") == dump(s"$base/users_twin"),
+      "demuxed users store diverged from its twin after a stale redelivery")
+    assertU2Deleted("stale redelivery after the first run")
     // FULL replay from a fresh checkpoint (every batch re-merges):
     // latest-HLC-wins makes the re-merge idempotent — same final state
     run(s"$base/chk2")
@@ -1864,6 +1857,7 @@ class StreamingSpec extends AnyFunSuite {
       "replayed demux diverged")
     assert(dump(s"$base/users") == dump(s"$base/users_twin"),
       "replayed demux diverged (users)")
+    assertU2Deleted("fresh-checkpoint replay")
   }
 
   test("s36: downstream change-feed consumer reads merges incrementally, exactly-once") {
