@@ -8,13 +8,22 @@ import org.apache.spark.sql.SparkSession
   * a demo and a bench number all measure the same optimizer. Cores
   * come from `SPARK_GRAFT_CPUS` (default 4); the shuffle partition
   * count follows them. Log levels live in `log4j2.properties`.
+  *
+  * Streaming state lives in the RocksDB state-store provider, which
+  * `transformWithState` (every `streaming.StatefulOps` operator)
+  * requires; `dropDuplicates`, stream-stream joins and windowed
+  * aggregates use it too. A query's offset log records the provider
+  * it started under, and a restart keeps that one: a checkpoint
+  * written under the HDFS provider restarts on this session with its
+  * state intact and stays on HDFS, without touching this session's
+  * conf (StreamingSpec "a checkpoint restarts on the provider it was
+  * written under").
   */
 object Session {
   def apply(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       : SparkSession = {
     // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — measurement-only passthrough
-    // (event logs, config A/Bs). Unset, it adds NOTHING: the default
-    // session is byte-identical to round 15's.
+    // (event logs, config A/Bs). Unset, it adds nothing.
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
@@ -29,6 +38,8 @@ object Session {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Batch sessionization as a library call — gaps-and-islands per-event
   * session ids (the reusable form of q105; the streaming twin is
-  * `streaming.StatefulOps.sessionizeStream`). An event more than
+  * `streaming.StatefulOps.sessionizeStreamTws`). An event more than
   * `gapSec` after the key's previous event opens a new session; ids
   * are 1-based per key in time order.
   *

@@ -142,15 +142,18 @@ object CdcStreams {
   // The changefeed the reference creates (`CREATE CHANGEFEED … WITH
   // updated`, README.md:135-138) has `resolved` as its documented
   // companion option: the feed then also emits frontier marker lines
-  // `{"resolved": "<hlc>"}`, each a guarantee that NO future message
-  // with `updated` ≤ that timestamp will ever be emitted (for the
-  // cloud-storage sink the reference uses, resolved files are
+  // `{"resolved": "<hlc>"}`, each a guarantee that no PREVIOUSLY
+  // UNSEEN row change with `updated` ≤ that timestamp will follow (for
+  // the cloud-storage sink the reference uses, resolved files are
   // feed-global — they land only once every partition's frontier has
-  // passed). That guarantee is the ONLY correct completeness signal a
-  // downstream materialization has: closing a day off event-time
-  // watermarks is guesswork (a straggler file can land after any
-  // event-time quiet period), closing it off the frontier is a
-  // contract.
+  // passed). Delivery is at-least-once, so a REDELIVERY of a change
+  // already emitted can still arrive after the marker; consumers
+  // resolve it by HLC like any other redelivery, and nothing may be
+  // dropped or GC'd on the frontier alone. That guarantee is the ONLY
+  // correct completeness signal a downstream materialization has:
+  // closing a day off event-time watermarks is guesswork (a straggler
+  // file can land after any event-time quiet period), closing it off
+  // the frontier is a contract.
   // ------------------------------------------------------------------
 
   /** Envelope schema including the resolved-line twin: a data line has

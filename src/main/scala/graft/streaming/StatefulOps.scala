@@ -2,17 +2,20 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Custom incremental state (SURVEY.md §2.9) — the
-  * `flatMapGroupsWithState` primitive behind bespoke CDC
+/** Custom incremental state (SURVEY.md §2.9) — the bespoke CDC
   * materializations that windowed aggregates can't express (running
   * non-algebraic state machines, conditional emissions, per-key
-  * TTLs).
+  * TTLs). Every operator here is a `StatefulProcessor` run through
+  * `transformWithState`, Spark 4's successor to
+  * `[flat]MapGroupsWithState`: typed named state slots in the state
+  * store, per-slot TTLConfig and timer callbacks. It needs the RocksDB
+  * state-store provider, which `graft.Session` sets.
   *
   * Scale: state is partitioned by key across executors exactly like a
   * streaming aggregation (one entry per key in the state store); use
-  * a GroupStateTimeout to bound the key universe when keys churn.
+  * an event-time timer to bound the key universe when keys churn.
   */
 // Serializable: the state-transition lambdas below call methods on
 // this (stateless) module, so executors deserialize a reference to it.
@@ -21,33 +24,7 @@ object StatefulOps extends Serializable {
   case class UserAgg(user_id: Long, n: Long, max_val: Double)
 
   /** Running count + max per key, emitted on every micro-batch a key
-    * changes in (update mode). Input: (key, value) pairs. */
-  def runningUserAggs(events: Dataset[(Long, Double)]): Dataset[UserAgg] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UserAgg, UserAgg](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Double)], state: GroupState[UserAgg]) =>
-          val prev = state.getOption.getOrElse(UserAgg(key, 0L, Double.NegativeInfinity))
-          var n = prev.n
-          var m = prev.max_val
-          rows.foreach { case (_, v) => n += 1; m = math.max(m, v) }
-          val next = UserAgg(key, n, m)
-          state.update(next)
-          Iterator(next)
-      }
-  }
-
-  /** `transformWithState` twin of `runningUserAggs` — the Spark-4.x
-    * arbitrary-state API (typed named state slots in the state store,
-    * per-slot TTLConfig, timer callbacks) that supersedes
-    * `flatMapGroupsWithState` for new work. Requires the RocksDB
-    * state-store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). Kept
-    * semantically identical to the fMGWS form so the s22 test pins the
-    * two APIs against each other; new stateful operators should start
-    * from this shape. */
+    * changes in (update mode), from a typed value-state slot. */
   class RunningAggProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, Double), UserAgg] {
@@ -70,7 +47,7 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** `runningUserAggs` through `transformWithState` (see
+  /** Running per-key aggregates over (key, value) pairs (see
     * RunningAggProcessor). */
   def runningUserAggsTws(
       events: Dataset[(Long, Double)]): Dataset[UserAgg] = {
@@ -82,189 +59,26 @@ object StatefulOps extends Serializable {
         OutputMode.Update())
   }
 
-  /** Streaming near-dup gate — the continuous form of the batch
-    * MinHash/LSH dedup (operators.TextDedup): each arriving document
-    * is minhashed entirely map-side, its (seed, sig) bucket keys join
-    * the per-bucket STATE of previously-seen ids, candidate pairs
-    * against those priors are emitted immediately, and the new id
-    * joins its buckets. An ingestion pipeline runs this as the dedup
-    * gate IN FRONT of the lake instead of re-scanning the corpus.
-    *
-    * State per bucket = the SET of prior ids (bounded by bucket
-    * occupancy — the same quantity that bounds the batch form's pair
-    * fan-out): membership is O(1) per arrival, so a hot bucket costs
-    * O(new ids × priors) for the emission it must make, never
-    * O(priors) per REPEATED arrival.
-    *
-    * TTL: pass `eventTimeCol` + `stateTtlMs` to bound the key
-    * universe under churn — a bucket that stays idle while the
-    * WATERMARK advances past its last arrival + TTL is evicted from
-    * the state store; a bucket receiving traffic keeps renewing.
-    * Event-time (watermark-driven) timeout, not processing-time: it
-    * is replay-deterministic, it doesn't couple state lifetime to
-    * wall-clock cluster hiccups, and the engine only schedules timer
-    * batches when the watermark actually moves (a processing-time
-    * timer makes the engine perpetually schedule follow-up batches).
-    *
-    * A pair sharing several buckets is emitted once per shared
-    * bucket; consumers dedup downstream exactly like the batch form's
-    * `.distinct()`. */
-  def lshCandidateStream(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 8, eventTimeCol: Option[String] = None,
-      stateTtlMs: Option[Long] = None): Dataset[(Long, Long)] = {
-    import docs.sparkSession.implicits._
-    require(eventTimeCol.isDefined == stateTtlMs.isDefined,
-      "stateTtlMs needs eventTimeCol (and vice versa): the TTL is measured against the watermark")
-    // delay 0: the watermark tracks max event time directly, so a
-    // bucket evicts once the stream moves TTL past its last arrival
-    // (callers needing out-of-order tolerance can pre-watermark docs)
-    val src = eventTimeCol.fold(docs)(c =>
-      docs.withWatermark(c, "0 milliseconds"))
-    // the event-time column rides along to the stateful operator: the
-    // engine requires the watermarked attribute in its input
-    val sigs = graft.operators.TextDedup
-      .minhashSignatures(src, idCol, textCol, numHashes,
-        carry = eventTimeCol.toSeq)
-    // TTL anchor: the batch's max event time, not the current
-    // watermark — the watermark lags one batch, so anchoring on it
-    // gives first-batch state a timeout in the past (epoch + TTL) and
-    // the very next watermark advance evicts still-hot state.
-    def gate(state: GroupState[Set[Long]], ids: Iterator[Long],
-        maxEventMs: Long): Iterator[(Long, Long)] =
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val (next, pairs) = lshGateTransition(
-          state.getOption.getOrElse(Set.empty[Long]), ids)
-        state.update(next)
-        stateTtlMs.foreach(ms => state.setTimeoutTimestamp(
-          math.max(maxEventMs, state.getCurrentWatermarkMs()) + ms))
-        pairs.iterator
-      }
-    val bucket = concat_ws(":", col("seed"), col("sig")).as("bucket")
-    val id = col(idCol).cast("long").as("id")
-    eventTimeCol match {
-      case Some(et) =>
-        sigs.select(bucket, id, col(et))
-          .as[(String, Long, java.sql.Timestamp)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[Set[Long], (Long, Long)](
-            OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-            (_, rows, state) =>
-              val rs = rows.toSeq
-              val maxMs =
-                if (rs.isEmpty) Long.MinValue else rs.map(_._3.getTime).max
-              gate(state, rs.iterator.map(_._2), maxMs)
-          }
-      case None =>
-        sigs.select(bucket, id)
-          .as[(String, Long)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[Set[Long], (Long, Long)](
-            OutputMode.Update, GroupStateTimeout.NoTimeout) {
-            (_, rows, state) => gate(state, rows.map(_._2), Long.MinValue)
-          }
-    }
-  }
-
-  /** The gate's pure per-bucket transition, factored out so dedup and
-    * hot-bucket behavior are unit-testable without a streaming clock:
-    * each UNSEEN id pairs against all priors and joins the set; a
-    * re-arrival (at-least-once redelivery) emits nothing and leaves
-    * the state untouched. */
-  def lshGateTransition(seen: Set[Long],
-      ids: Iterator[Long]): (Set[Long], Seq[(Long, Long)]) = {
-    var s = seen
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    ids.foreach { id =>
-      if (!s.contains(id)) {
-        s.foreach(p => out += ((math.min(p, id), math.max(p, id))))
-        s = s + id
-      }
-    }
-    (s, out.toSeq)
-  }
-
   /** Streaming sessionization — the incremental twin of the batch
-    * per-event session ids (q105): state per user is just (second of
-    * last event, current session index), O(1) regardless of history.
-    * An event landing more than `gapSec` after the user's previous one
-    * opens a new session; the event is emitted immediately with its
-    * session id. Rows within a micro-batch are ordered by (ts,
-    * event_id) inside the group before applying the transition
-    * (shuffles don't preserve order); ACROSS batches the operator
-    * relies on the changefeed's per-key delivery ordering
-    * (/root/reference/README.md:90) — the same contract every upsert
-    * consumer here builds on.
+    * per-event session ids (q105, `operators.Sessionize.assign`):
+    * state per user is just (second of last event, current session
+    * index), O(1) regardless of history. An event landing more than
+    * `gapSec` after the user's previous one opens a new session; the
+    * event is emitted immediately with its session id. Rows within a
+    * micro-batch are ordered by (ts, event_id) inside the group before
+    * applying the transition (shuffles don't preserve order); ACROSS
+    * batches the operator relies on the changefeed's per-key delivery
+    * ordering (the reference's README.md:90) — the same contract every
+    * upsert consumer here builds on. This is
+    * `sessionizeStreamDynamic` with the same gap on every row.
     * Input (event_id, user_id, ts) → output (event_id, user_id, sess). */
-  def sessionizeStream(events: Dataset[(Long, Long, java.sql.Timestamp)],
-      gapSec: Long = 1800L): Dataset[(Long, Long, Int)] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[(Long, Int), (Long, Long, Int)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long, java.sql.Timestamp)],
-            state: GroupState[(Long, Int)]) =>
-          var (lastSec, sess) = state.getOption.getOrElse((Long.MinValue, 0))
-          val out = rows.toSeq
-            .sortBy(r => (r._3.getTime, r._1))
-            .map { case (eid, _, ts) =>
-              val sec = ts.getTime / 1000L
-              if (lastSec == Long.MinValue || sec - lastSec > gapSec) sess += 1
-              lastSec = sec
-              (eid, user, sess)
-            }
-          state.update((lastSec, sess))
-          out.iterator
-      }
-  }
-
-  /** `transformWithState` twin of `sessionizeStream` — same O(1)
-    * per-user state (second of last event, session index) in a typed
-    * value-state slot. Parity-pinned by s23; the migration template
-    * for the remaining fMGWS operators (NOTES round-5 next steps). */
-  class SessionizeProcessor(gapSec: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, java.sql.Timestamp), (Long, Long, Int)] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[(Long, Int)] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Int)]("sess",
-        org.apache.spark.sql.Encoders.product[(Long, Int)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long, java.sql.Timestamp)],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Int)] = {
-      var (lastSec, sess) =
-        if (st.exists()) st.get() else (Long.MinValue, 0)
-      val out = rows.toSeq
-        .sortBy(r => (r._3.getTime, r._1))
-        .map { case (eid, _, ts) =>
-          val sec = ts.getTime / 1000L
-          if (lastSec == Long.MinValue || sec - lastSec > gapSec) sess += 1
-          lastSec = sec
-          (eid, user, sess)
-        }
-      st.update((lastSec, sess))
-      out.iterator
-    }
-  }
-
-  /** `sessionizeStream` through `transformWithState` (see
-    * SessionizeProcessor). */
   def sessionizeStreamTws(
       events: Dataset[(Long, Long, java.sql.Timestamp)],
       gapSec: Long = 1800L): Dataset[(Long, Long, Int)] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._2)
-      .transformWithState(new SessionizeProcessor(gapSec),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+    require(gapSec > 0, s"gapSec must be positive, got $gapSec")
+    sessionizeStreamDynamic(
+      events.map { case (eid, user, ts) => (eid, user, ts, gapSec) })
   }
 
   /** DYNAMIC-gap sessionization (s32) — the variant the family lacked:
@@ -275,9 +89,8 @@ object StatefulOps extends Serializable {
     * The boundary rule: event `i` opens a new session iff it lands
     * more than ITS OWN row's gap after the user's previous event — so
     * a config change applies from the first event that carries it,
-    * with no state migration. With a constant gap column this is
-    * exactly `sessionizeStreamTws` (parity-pinned by s32); state stays
-    * the same O(1) (lastSec, sess) pair.
+    * with no state migration. `sessionizeStreamTws` is this processor
+    * fed a constant gap column; state is the O(1) (lastSec, sess) pair.
     * Input (event_id, user_id, ts, gapSec) → (event_id, user_id, sess). */
   class DynamicSessionizeProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -324,69 +137,6 @@ object StatefulOps extends Serializable {
     * it crossed the threshold. */
   case class HotKey(key: Long, n: Long)
 
-  /** Streaming hot-key monitor — the continuous twin of the batch
-    * skew profile (q126): per-key running arrival counts in the state
-    * store, a key emitted ONCE, the first micro-batch its count
-    * reaches `threshold`. This is the signal an operator feeds into
-    * salting / AQE-skew / broadcast decisions WHILE the workload runs,
-    * instead of discovering the hot key in a post-mortem of a stuck
-    * task. State per key is two numbers (count, flagged) — constant,
-    * key-partitioned across executors like any streaming aggregation.
-    *
-    * With `eventTimeCol` + `stateTtlMs`, a key idle past
-    * watermark + TTL is evicted (same event-time-timeout discipline as
-    * `lshCandidateStream`: replay-deterministic, no perpetual timer
-    * batches) and its count restarts on the next arrival — the monitor
-    * then tracks RECENT heat, which is what a re-plan decision wants. */
-  def hotKeyStream(events: DataFrame, keyCol: String, threshold: Long,
-      eventTimeCol: Option[String] = None,
-      stateTtlMs: Option[Long] = None): Dataset[HotKey] = {
-    import events.sparkSession.implicits._
-    require(threshold >= 1, s"threshold must be >= 1, got $threshold")
-    require(eventTimeCol.isDefined == stateTtlMs.isDefined,
-      "stateTtlMs needs eventTimeCol (and vice versa): the TTL is measured against the watermark")
-    val src = eventTimeCol.fold(events)(c =>
-      events.withWatermark(c, "0 milliseconds"))
-    // TTL anchored on the batch's max event time (see lshCandidateStream:
-    // the watermark lags a batch and would evict first-batch state).
-    def monitor(key: Long, arrivals: Int, maxEventMs: Long,
-        state: GroupState[(Long, Boolean)]): Iterator[HotKey] =
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val (next, alert) = hotKeyTransition(
-          state.getOption.getOrElse((0L, false)), arrivals, threshold)
-        state.update(next)
-        stateTtlMs.foreach(ms => state.setTimeoutTimestamp(
-          math.max(maxEventMs, state.getCurrentWatermarkMs()) + ms))
-        alert.map(n => HotKey(key, n)).iterator
-      }
-    val id = col(keyCol).cast("long").as("key")
-    eventTimeCol match {
-      case Some(et) =>
-        src.select(id, col(et))
-          .as[(Long, java.sql.Timestamp)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[(Long, Boolean), HotKey](
-            OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-            (key, rows, state) =>
-              var n = 0
-              var maxMs = Long.MinValue
-              rows.foreach { r => n += 1; maxMs = math.max(maxMs, r._2.getTime) }
-              monitor(key, n, maxMs, state)
-          }
-      case None =>
-        src.select(id)
-          .as[Long]
-          .groupByKey(identity)
-          .flatMapGroupsWithState[(Long, Boolean), HotKey](
-            OutputMode.Update, GroupStateTimeout.NoTimeout) {
-            (key, rows, state) => monitor(key, rows.size, Long.MinValue, state)
-          }
-    }
-  }
-
   /** The monitor's pure per-key transition (unit-testable without a
     * streaming clock): add this batch's arrivals; the first time the
     * running count reaches the threshold, emit it once. */
@@ -398,52 +148,25 @@ object StatefulOps extends Serializable {
     else ((next, flagged), None)
   }
 
-  /** Streaming user-journey transitions — the incremental twin of the
-    * batch Markov transition matrix (q132): state per user is ONE
-    * value (the last event type seen — constant regardless of
-    * history), and each arrival emits its (src, dst) edge immediately.
-    * Counting edges into the transition matrix happens on the SINK
-    * side (foreachBatch / a batch query over the sink table, as s20
-    * does): Spark's UnsupportedOperationChecker rejects a streaming
-    * aggregation placed after flatMapGroupsWithState in Update mode,
-    * so the composition must not chain one in-stream. Rows within a
-    * micro-batch apply in
-    * (ts, event_id) order inside the group (shuffles don't preserve
-    * order); across batches the operator relies on the changefeed's
-    * per-key delivery ordering — the same contract as
-    * `sessionizeStream`. Input (event_id, user_id, event_type, ts) →
-    * output (src, dst). */
-  def transitionStream(
-      events: Dataset[(Long, Long, String, java.sql.Timestamp)])
-      : Dataset[(String, String)] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[String, (String, String)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var last = state.getOption.orNull
-          val out = rows.toSeq
-            .sortBy(r => (r._4.getTime, r._1))
-            .flatMap { case (_, _, et, _) =>
-              val edge = Option(last).map(l => (l, et))
-              last = et
-              edge
-            }
-          state.update(last)
-          out.iterator
-      }
-  }
-
-  /** `transformWithState` twin of `hotKeyStream` WITH event-time TTL
-    * via timers — the API surface the round-5 anchor bug lived in,
-    * now structural: each batch re-registers ONE timer at
-    * max(batch max event time, watermark) + ttl (deleting the prior
-    * one), and `handleExpiredTimer` clears the key's state when the
-    * watermark crosses it. The anchor discipline is the same as the
-    * fMGWS fix (never the lagging watermark alone); the timer API
-    * just makes eviction a callback instead of a hasTimedOut branch.
-    * Parity + TTL semantics pinned by s24. */
+  /** Streaming hot-key monitor — the continuous twin of the batch
+    * skew profile (q126): per-key running arrival counts in the state
+    * store, a key emitted ONCE, the first micro-batch its count
+    * reaches `threshold`. This is the signal an operator feeds into
+    * salting / AQE-skew / broadcast decisions WHILE the workload runs,
+    * instead of discovering the hot key in a post-mortem of a stuck
+    * task. State per key is (count, flagged, timer) — constant,
+    * key-partitioned across executors like any streaming aggregation.
+    *
+    * A key idle past watermark + TTL is evicted and its count restarts
+    * on the next arrival, so the monitor tracks RECENT heat, which is
+    * what a re-plan decision wants. Each batch re-registers ONE
+    * event-time timer at max(batch max event time, watermark) + ttl
+    * (deleting the prior one), and `handleExpiredTimer` clears the
+    * key's state when the watermark crosses it. The anchor is the
+    * batch's max event time, never the lagging watermark alone: the
+    * watermark trails one batch, so anchoring on it would give
+    * first-batch state a timeout in the past and the next watermark
+    * advance would evict still-hot state. */
   class HotKeyProcessor(threshold: Long, ttlMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, java.sql.Timestamp), HotKey] {
@@ -481,9 +204,9 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** `hotKeyStream` through `transformWithState` + event-time timers
-    * (see HotKeyProcessor). Input (key, event_ts) must be watermarked
-    * upstream. */
+  /** The hot-key monitor through `transformWithState` + event-time
+    * timers (see HotKeyProcessor). Input (key, event_ts) must be
+    * watermarked upstream. */
   def hotKeyStreamTws(events: Dataset[(Long, java.sql.Timestamp)],
       threshold: Long, ttlMs: Long): Dataset[HotKey] = {
     import events.sparkSession.implicits._
@@ -495,18 +218,18 @@ object StatefulOps extends Serializable {
         OutputMode.Update())
   }
 
-  /** `transformWithState` twin of `lshCandidateStream` — per-bucket
-    * prior ids in a MAP state slot, which is the structural win over
-    * the fMGWS form: a re-arrival (at-least-once redelivery) is ONE
-    * RocksDB point lookup instead of deserializing the bucket's whole
-    * prior set, and the full key iteration only runs for genuinely
-    * new ids — exactly when the pair emission needs it anyway. The
-    * optional event-time TTL uses the same timer discipline as
-    * HotKeyProcessor: one timer per bucket re-registered at
-    * max(batch max event time, watermark) + ttl (never the lagging
-    * watermark alone — the round-5 anchor bug class), and
-    * `handleExpiredTimer` clears the bucket. Parity with the fMGWS
-    * form + TTL eviction pinned by s25. */
+  /** The per-bucket state of the streaming near-dup gate: the SET of
+    * prior ids in a MAP state slot. Each UNSEEN id pairs against all
+    * priors and joins the set; a re-arrival (at-least-once redelivery)
+    * is ONE RocksDB point lookup that emits nothing and leaves the
+    * state untouched. The full key iteration only runs for genuinely
+    * new ids — exactly when the pair emission needs it — so a hot
+    * bucket costs O(new ids × priors) for the emission it must make,
+    * never O(priors) per REPEATED arrival. The optional event-time TTL
+    * uses HotKeyProcessor's timer discipline: one timer per bucket
+    * re-registered at max(batch max event time, watermark) + ttl
+    * (never the lagging watermark alone), and `handleExpiredTimer`
+    * clears the bucket. */
   class LshGateProcessor(ttlMs: Option[Long])
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         String, (String, Long, java.sql.Timestamp), (Long, Long)] {
@@ -556,16 +279,40 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** `lshCandidateStream` through `transformWithState` (see
-    * LshGateProcessor). Same signature/contract as the fMGWS form. */
+  /** Streaming near-dup gate — the continuous form of the batch
+    * MinHash/LSH dedup (operators.TextDedup): each arriving document
+    * is minhashed entirely map-side, its (seed, sig) bucket keys join
+    * the per-bucket STATE of previously-seen ids (LshGateProcessor),
+    * candidate pairs against those priors are emitted immediately, and
+    * the new id joins its buckets. An ingestion pipeline runs this as
+    * the dedup gate IN FRONT of the lake instead of re-scanning the
+    * corpus.
+    *
+    * TTL: pass `eventTimeCol` + `stateTtlMs` to bound the key
+    * universe under churn — a bucket that stays idle while the
+    * WATERMARK advances past its last arrival + TTL is evicted from
+    * the state store; a bucket receiving traffic keeps renewing.
+    * Event-time (watermark-driven) timers, not processing-time: they
+    * are replay-deterministic, they don't couple state lifetime to
+    * wall-clock cluster hiccups, and the engine only fires them when
+    * the watermark actually moves.
+    *
+    * A pair sharing several buckets is emitted once per shared
+    * bucket; consumers dedup downstream exactly like the batch form's
+    * `.distinct()`. */
   def lshCandidateStreamTws(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 8, eventTimeCol: Option[String] = None,
       stateTtlMs: Option[Long] = None): Dataset[(Long, Long)] = {
     import docs.sparkSession.implicits._
     require(eventTimeCol.isDefined == stateTtlMs.isDefined,
       "stateTtlMs needs eventTimeCol (and vice versa): the TTL is measured against the watermark")
+    // delay 0: the watermark tracks max event time directly, so a
+    // bucket evicts once the stream moves TTL past its last arrival
+    // (callers needing out-of-order tolerance can pre-watermark docs)
     val src = eventTimeCol.fold(docs)(c =>
       docs.withWatermark(c, "0 milliseconds"))
+    // the event-time column rides along to the stateful operator: the
+    // engine requires the watermarked attribute in its input
     val sigs = graft.operators.TextDedup
       .minhashSignatures(src, idCol, textCol, numHashes,
         carry = eventTimeCol.toSeq)
@@ -584,7 +331,7 @@ object StatefulOps extends Serializable {
   }
 
   /** EMBEDDING-SPACE streaming near-dup gate (round 18 — VERDICT r10
-    * item 6, completing the multimodal ingest story): s15/s25 gate
+    * item 6, completing the multimodal ingest story): s15/s17 gate
     * TEXT arrivals by MinHash bucket state; this is the identical
     * gate for VECTOR arrivals, keyed by q113's signed-random-
     * projection bucket over the integer-quantized embedding
@@ -623,88 +370,19 @@ object StatefulOps extends Serializable {
         timeMode, OutputMode.Update())
   }
 
-  /** One emitted state row: the key's current value, or a final
-    * `deleted = true` marker when a tombstone removed it. */
-  case class KeyState(key: Long, value: String, deleted: Boolean)
-
-  /** Streaming-native delete-aware upsert state: per-key latest value
-    * kept in the state store; a tombstone record (`value` None — the
-    * in-stream form of the envelope's `after: null`,
-    * `/root/reference/README.md:135-140`) calls `state.remove()`, so
-    * deleted keys cost ZERO state from that batch on (vs the batch
-    * form in CdcStreams.latestByKey, which filters at read time). The
-    * downstream sees one `deleted = true` row to propagate the
-    * retraction, then nothing until the key is re-inserted. Records
-    * within a batch apply in arrival order (per-key ordering is the
-    * changefeed's contract, README.md:90). */
-  def upsertWithTombstones(
-      records: Dataset[(Long, Option[String])]): Dataset[KeyState] = {
-    import records.sparkSession.implicits._
-    records
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KeyState, KeyState](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Option[String])],
-            state: GroupState[KeyState]) =>
-          var cur = state.getOption
-          rows.foreach {
-            case (_, Some(v)) => cur = Some(KeyState(key, v, deleted = false))
-            case (_, None)    => cur = Some(KeyState(key, "", deleted = true))
-          }
-          cur match {
-            case Some(s) if s.deleted => state.remove(); Iterator(s)
-            case Some(s)              => state.update(s); Iterator(s)
-            case None                 => Iterator.empty
-          }
-      }
-  }
-
-  /** `transformWithState` twin of `upsertWithTombstones` — the same
-    * per-key latest value in a typed value-state slot; a winning
-    * tombstone `clear()`s the slot so deleted keys cost zero state
-    * from that batch on. Parity-pinned by s26. */
-  class UpsertProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Option[String]), KeyState] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[KeyState] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[KeyState]("cur",
-        org.apache.spark.sql.Encoders.product[KeyState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long,
-        rows: Iterator[(Long, Option[String])],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[KeyState] = {
-      var cur: Option[KeyState] = None
-      rows.foreach {
-        case (_, Some(v)) => cur = Some(KeyState(key, v, deleted = false))
-        case (_, None)    => cur = Some(KeyState(key, "", deleted = true))
-      }
-      cur match {
-        case Some(s) if s.deleted => st.clear(); Iterator(s)
-        case Some(s)              => st.update(s); Iterator(s)
-        case None                 => Iterator.empty
-      }
-    }
-  }
-
-  /** `upsertWithTombstones` through `transformWithState` (see
-    * UpsertProcessor). */
-  def upsertWithTombstonesTws(
-      records: Dataset[(Long, Option[String])]): Dataset[KeyState] = {
-    import records.sparkSession.implicits._
-    records
-      .groupByKey(_._1)
-      .transformWithState(new UpsertProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** `transformWithState` twin of `transitionStream` — the last event
-    * type per user in a value-state slot (written only once set, so
-    * the slot never holds a null). Parity-pinned by s27. */
+  /** Streaming user-journey transitions — the incremental twin of the
+    * batch Markov transition matrix (q132): state per user is ONE
+    * value (the last event type seen — constant regardless of
+    * history) in a value-state slot, written only once set so the
+    * slot never holds a null. Each arrival emits its (src, dst) edge
+    * immediately; counting edges into the transition matrix happens
+    * on the SINK side (foreachBatch / a batch query over the sink
+    * table, as s20 does). Rows within a micro-batch apply in
+    * (ts, event_id) order inside the group (shuffles don't preserve
+    * order); across batches the operator relies on the changefeed's
+    * per-key delivery ordering — the same contract as
+    * `sessionizeStreamTws`. Input (event_id, user_id, event_type, ts)
+    * → output (src, dst). */
   class TransitionProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, Long, String, java.sql.Timestamp), (String, String)] {
@@ -732,9 +410,8 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** `transitionStream` through `transformWithState` (see
-    * TransitionProcessor). Same sink-side counting contract as the
-    * fMGWS form. */
+  /** Transition edges through `transformWithState` (see
+    * TransitionProcessor). */
   def transitionStreamTws(
       events: Dataset[(Long, Long, String, java.sql.Timestamp)])
       : Dataset[(String, String)] = {
@@ -757,7 +434,7 @@ object StatefulOps extends Serializable {
     * the greedy chronological scan picks the first qualifying stage-k
     * event, which is exactly the batch form's min-after-anchor, so
     * parity holds whenever a key's events arrive in event-time order
-    * across batches (the family's s18/s23 ordering contract; within a
+    * across batches (the family's s18 ordering contract; within a
     * batch any order is fine — rows sort on (ts, event_id) first).
     * A regressed key never re-fires: once a stage is anchored it is
     * final, matching the batch semantics where anchors are mins over
@@ -806,7 +483,7 @@ object StatefulOps extends Serializable {
     * source recovers its baseline instead of alerting forever).
     * O(1) state per key — (lastSec, ewma, nGaps) — regardless of
     * volume; gaps are exact integer seconds on the family's
-    * second-truncated grain (s18/s23's contract), and rows fold in
+    * second-truncated grain (s18's contract), and rows fold in
     * (ts, event_id) order so replays are deterministic. */
   /** The cadence fold as a PURE function — the processor below is a
     * thin state-store shell around it, and AlgebraProps pins the

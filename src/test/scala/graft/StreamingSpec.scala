@@ -35,20 +35,6 @@ class StreamingSpec extends AnyFunSuite {
   private def envLine(id: String, city: String, rev: String, hlc: String): String =
     s"""{"after": {"id": "$id", "city": "$city", "revenue": "$rev"}, "key": ["$city", "$id"], "updated": "$hlc"}"""
 
-  /** transformWithState requires the RocksDB state-store provider;
-    * restore whatever was configured afterwards. */
-  private def withRocksDB(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("s01: file source tails a growing ndjson directory") {
     val src = TestSpark.tmpDir("s01-src")
     writeNdjson(src, "f1.ndjson", Seq(
@@ -432,43 +418,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.contains((1L, true)))
   }
 
-  test("s22: transformWithState running aggregate equals the fMGWS form") {
-    // the Spark-4.x arbitrary-state API (typed state slots, RocksDB
-    // provider) against s10's flatMapGroupsWithState on the same input
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[(Long, Double)]
-      val q = graft.streaming.StatefulOps.runningUserAggsTws(ms.toDS())
-        .toDF("user_id", "n", "max_val")
-        .writeStream.outputMode("update").format("memory").queryName("s22").start()
-      ms.addData((1L, 2.0), (1L, 5.0), (2L, 1.0))
-      q.processAllAvailable()
-      ms.addData((1L, 3.0), (2L, 9.0))
-      q.processAllAvailable()
-      q.stop()
-      // latest row per key reflects the full history across batches
-      val last = spark.table("s22")
-        .groupBy("user_id").agg(max(struct(col("n"), col("max_val"))).as("m"))
-        .select(col("user_id"), col("m.n"), col("m.max_val"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(last == Set((1L, 3L, 5.0), (2L, 2L, 9.0)), s"got $last")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("s10: flatMapGroupsWithState keeps running per-key state across batches") {
+  test("s10: transformWithState keeps running per-key state across batches") {
     val ms = MemoryStream[(Long, Double)]
-    val q = graft.streaming.StatefulOps.runningUserAggs(ms.toDS())
+    val q = graft.streaming.StatefulOps.runningUserAggsTws(ms.toDS())
       .writeStream.outputMode("update").format("memory").queryName("s10").start()
     ms.addData((1L, 5.0), (1L, 3.0), (2L, 1.0))
     q.processAllAvailable()
-    ms.addData((1L, 9.0)) // state must carry n=2, max=5 into this batch
+    // state must carry user 1's n=2, max=5 and user 2's n=1 into this batch
+    ms.addData((1L, 9.0), (2L, 9.0))
+    q.processAllAvailable()
+    // a lower value in a later batch must not lower the stored max
+    ms.addData((2L, 0.5))
     q.processAllAvailable()
     q.stop()
     // last emission per user wins (update mode appends each change)
@@ -476,35 +436,53 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n"), r.getAs[Double]("max_val")))
       .groupBy(_._1).map { case (u, rows) => u -> rows.maxBy(_._2) }
     assert(last(1L) == ((1L, 3L, 9.0)), s"user 1 state wrong: ${last(1L)}")
-    assert(last(2L) == ((2L, 1L, 1.0)))
+    assert(last(2L) == ((2L, 3L, 9.0)), s"user 2 state wrong: ${last(2L)}")
   }
 
-  test("s14: stateful upsert applies tombstones via state.remove") {
-    val ms = MemoryStream[(Long, Option[String])]
-    val q = graft.streaming.StatefulOps.upsertWithTombstones(ms.toDS())
-      .writeStream.outputMode("update").format("memory").queryName("s14").start()
-    ms.addData((1L, Some("a")), (2L, Some("b")))
-    q.processAllAvailable()
-    ms.addData((1L, None)) // delete key 1
-    q.processAllAvailable()
-    ms.addData((1L, Some("a2"))) // re-insert after the delete
-    q.processAllAvailable()
-    q.stop()
-    val emissions = spark.table("s14").collect()
-      .map(r => (r.getAs[Long]("key"), r.getAs[String]("value"),
-        r.getAs[Boolean]("deleted")))
-    // key 1's lifecycle reaches the consumer in order: value,
-    // retraction, new value; key 2 is untouched
-    assert(emissions.filter(_._1 == 1L).toSeq ==
-      Seq((1L, "a", false), (1L, "", true), (1L, "a2", false)))
-    assert(emissions.filter(_._1 == 2L).toSeq == Seq((2L, "b", false)))
+  test("a checkpoint restarts on the provider it was written under") {
+    // the shared session runs RocksDB (graft.Session); a query started
+    // under HDFS must keep HDFS and its state across a restart from it
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    val shared = spark.conf.get(key)
+    assert(shared.endsWith(".RocksDBStateStoreProvider"), s"shared session runs $shared")
+    val src = TestSpark.tmpDir("restart-src")
+    val ckpt = TestSpark.tmpDir("restart-ckpt")
+    val out = TestSpark.tmpDir("restart-out")
+    def run(s: org.apache.spark.sql.SparkSession): Unit = {
+      val q = s.readStream.schema("k LONG, v STRING").json(src)
+        .dropDuplicates("k")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt).start(out)
+      q.processAllAvailable()
+      q.stop()
+    }
+    val hdfsSession = spark.newSession()
+    hdfsSession.conf.set(key, hdfs)
+    writeNdjson(src, "f1.json", Seq("""{"k": 1, "v": "a"}""", """{"k": 2, "v": "b"}"""))
+    run(hdfsSession)
+    // restart from the shared session; key 1 is redelivered
+    writeNdjson(src, "f2.json", Seq("""{"k": 1, "v": "a-again"}""", """{"k": 3, "v": "c"}"""))
+    run(spark)
+    val rows = spark.read.parquet(out).as[(Long, String)].collect().toSet
+    assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c")),
+      s"dedup state did not carry across the restart: $rows")
+    // the offset log of the restarted batch still names HDFS, and the
+    // state store wrote HDFS delta files for it, no RocksDB snapshots
+    val batch1Offsets = new String(Files.readAllBytes(Paths.get(ckpt, "offsets", "1")))
+    assert(batch1Offsets.contains(hdfs), s"offset log: $batch1Offsets")
+    val stateFiles = Files.walk(Paths.get(ckpt, "state")).toArray
+      .map(_.toString.split('/').last).toSet
+    assert(stateFiles.contains("2.delta") && !stateFiles.exists(_.endsWith(".zip")),
+      s"restarted batch ran on another provider: $stateFiles")
+    assert(spark.conf.get(key) == shared, "the restart changed the shared session's provider")
   }
 
   test("s15: streaming LSH gate flags near-dups against prior state") {
     val ms = MemoryStream[(Long, String)]
     val docs = ms.toDF().toDF("doc_id", "text")
     val q = graft.streaming.StatefulOps
-      .lshCandidateStream(docs, "doc_id", "text")
+      .lshCandidateStreamTws(docs, "doc_id", "text")
       .toDF("a_id", "b_id")
       .writeStream.outputMode("update").format("memory").queryName("s15").start()
     val base = "the quick brown fox jumps over the lazy dog again and again"
@@ -515,17 +493,26 @@ class StreamingSpec extends AnyFunSuite {
     // must flag it against the stored bucket state
     ms.addData((3L, base.replace("dog", "cat")))
     q.processAllAvailable()
+    // a pair is emitted once per SHARED bucket (consumers dedup
+    // downstream like the batch form)
+    val afterPair = spark.table("s15").count()
+    // at-least-once redelivery of a known id: a MapState point lookup,
+    // no re-emission
+    ms.addData((3L, base.replace("dog", "cat")))
+    q.processAllAvailable()
     q.stop()
     val pairs = spark.table("s15").select("a_id", "b_id")
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 3L)), s"got $pairs")
+    assert(spark.table("s15").count() == afterPair,
+      "redelivered doc re-emitted pairs")
   }
 
   test("s17: LSH gate bucket state evicts after the event-time TTL") {
     val ms = MemoryStream[(Long, String, Timestamp)]
     val docs = ms.toDF().toDF("doc_id", "text", "ts")
     val q = graft.streaming.StatefulOps
-      .lshCandidateStream(docs, "doc_id", "text",
+      .lshCandidateStreamTws(docs, "doc_id", "text",
         eventTimeCol = Some("ts"), stateTtlMs = Some(60000L))
       .toDF("a_id", "b_id")
       .writeStream.outputMode("update").format("memory").queryName("s17").start()
@@ -534,8 +521,8 @@ class StreamingSpec extends AnyFunSuite {
     ms.addData((1L, base, t(0)))
     q.processAllAvailable()
     // an unrelated doc 10 minutes later advances the watermark far
-    // past doc 1's 1-minute TTL: the engine's watermark-driven timer
-    // batch evicts doc 1's idle buckets from the store
+    // past doc 1's 1-minute TTL: the bucket timers fire and evict
+    // doc 1's idle buckets from the store
     ms.addData((2L, "completely different words about spark shuffles and joins here", t(10)))
     q.processAllAvailable()
     // a near-duplicate of doc 1 now meets EMPTY bucket state
@@ -546,27 +533,13 @@ class StreamingSpec extends AnyFunSuite {
       "pairs emitted against bucket state that should have been evicted")
   }
 
-  test("LSH gate transition: re-arrivals are free, unseen ids pair against all priors") {
-    import graft.streaming.StatefulOps.lshGateTransition
-    val (s1, p1) = lshGateTransition(Set.empty, Iterator(1L, 2L, 3L))
-    assert(s1 == Set(1L, 2L, 3L))
-    assert(p1.toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    // at-least-once redelivery of a known id: no emission, state unchanged
-    val (s2, p2) = lshGateTransition(s1, Iterator(2L, 2L, 1L))
-    assert(s2 == s1 && p2.isEmpty)
-    // a hot bucket pays only for genuinely new ids: one new arrival
-    // against n priors emits exactly n pairs
-    val priors = (0L until 100L).toSet
-    val (s3, p3) = lshGateTransition(priors, Iterator(999L))
-    assert(s3.size == 101 && p3.size == 100)
-  }
-
   test("s19: hot-key monitor flags a key once at the threshold, TTL resets heat") {
     val ms = MemoryStream[(Long, Timestamp)]
-    val ev = ms.toDF().toDF("user_id", "ts")
+    val ev = ms.toDS().toDF("key", "ts")
+      .withWatermark("ts", "0 milliseconds")
+      .as[(Long, Timestamp)]
     val q = graft.streaming.StatefulOps
-      .hotKeyStream(ev, "user_id", threshold = 3,
-        eventTimeCol = Some("ts"), stateTtlMs = Some(60000L))
+      .hotKeyStreamTws(ev, threshold = 3, ttlMs = 60000L)
       .toDF("key", "n")
       .writeStream.outputMode("update").format("memory").queryName("s19").start()
     def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
@@ -584,8 +557,8 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     assert(spark.table("s19").count() == 1, "hot key alerted more than once")
     // advance the watermark far past key 7's TTL, then send 3 more:
-    // its evicted count restarts, so crossing the threshold re-alerts
-    // (the monitor tracks RECENT heat after idle eviction)
+    // its timer fires, its count restarts, so crossing the threshold
+    // re-alerts (the monitor tracks RECENT heat after idle eviction)
     ms.addData((9L, t(30)))
     q.processAllAvailable()
     ms.addData((7L, t(31)), (7L, t(31)), (7L, t(31)))
@@ -593,145 +566,6 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     got = spark.table("s19").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((7L, 3L), (7L, 3L)), s"got ${got.toSeq}")
-  }
-
-  test("s24: transformWithState hot-key monitor with event-time timer TTL matches s19") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[(Long, Timestamp)]
-      val ev = ms.toDS().toDF("key", "ts")
-        .withWatermark("ts", "0 milliseconds")
-        .as[(Long, Timestamp)]
-      val q = graft.streaming.StatefulOps
-        .hotKeyStreamTws(ev, threshold = 3, ttlMs = 60000L)
-        .toDF("key", "n")
-        .writeStream.outputMode("update").format("memory").queryName("s24").start()
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      ms.addData((7L, t(0)), (7L, t(0)), (8L, t(0)))
-      q.processAllAvailable()
-      assert(spark.table("s24").isEmpty, "no key reached the threshold yet")
-      ms.addData((7L, t(1)))
-      q.processAllAvailable()
-      var got = spark.table("s24").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(got.toSeq == Seq((7L, 3L)), s"got ${got.toSeq}")
-      // flagged key stays quiet under more traffic
-      ms.addData((7L, t(2)), (7L, t(2)))
-      q.processAllAvailable()
-      assert(spark.table("s24").count() == 1, "hot key alerted more than once")
-      // watermark far past key 7's last arrival + TTL -> its timer
-      // fires, state clears, fresh heat re-alerts
-      ms.addData((9L, t(30)))
-      q.processAllAvailable()
-      ms.addData((7L, t(31)), (7L, t(31)), (7L, t(31)))
-      q.processAllAvailable()
-      q.stop()
-      got = spark.table("s24").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(got.toSeq == Seq((7L, 3L), (7L, 3L)), s"got ${got.toSeq}")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("s25: transformWithState LSH gate matches the fMGWS form and evicts on TTL") {
-    withRocksDB {
-      // part 1 — no TTL: the s15 fixture (near-dup arrives in a LATER
-      // batch, must pair against stored bucket state)
-      val ms = MemoryStream[(Long, String)]
-      val docs = ms.toDF().toDF("doc_id", "text")
-      val q = graft.streaming.StatefulOps
-        .lshCandidateStreamTws(docs, "doc_id", "text")
-        .toDF("a_id", "b_id")
-        .writeStream.outputMode("update").format("memory").queryName("s25").start()
-      val base = "the quick brown fox jumps over the lazy dog again and again"
-      ms.addData((1L, base), (2L, "completely different words about spark shuffles and joins here"))
-      q.processAllAvailable()
-      assert(spark.table("s25").isEmpty, "distinct docs must not pair")
-      ms.addData((3L, base.replace("dog", "cat")))
-      q.processAllAvailable()
-      // a pair is emitted once per SHARED bucket (the documented
-      // contract — consumers dedup downstream like the batch form)
-      val afterPair = spark.table("s25").count()
-      // at-least-once redelivery of a known id: a MapState point
-      // lookup, no re-emission
-      ms.addData((3L, base.replace("dog", "cat")))
-      q.processAllAvailable()
-      q.stop()
-      val pairs = spark.table("s25").select("a_id", "b_id")
-        .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs == Set((1L, 3L)), s"got $pairs")
-      assert(spark.table("s25").count() == afterPair,
-        "redelivered doc re-emitted pairs")
-
-      // part 2 — the s17 fixture: bucket state idle past the event-time
-      // TTL is evicted by the timer, so a late near-dup meets empty state
-      val ms2 = MemoryStream[(Long, String, Timestamp)]
-      val docs2 = ms2.toDF().toDF("doc_id", "text", "ts")
-      val q2 = graft.streaming.StatefulOps
-        .lshCandidateStreamTws(docs2, "doc_id", "text",
-          eventTimeCol = Some("ts"), stateTtlMs = Some(60000L))
-        .toDF("a_id", "b_id")
-        .writeStream.outputMode("update").format("memory").queryName("s25t").start()
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      ms2.addData((1L, base, t(0)))
-      q2.processAllAvailable()
-      ms2.addData((2L, "completely different words about spark shuffles and joins here", t(10)))
-      q2.processAllAvailable()
-      ms2.addData((3L, base.replace("dog", "cat"), t(11)))
-      q2.processAllAvailable()
-      q2.stop()
-      assert(spark.table("s25t").isEmpty,
-        "pairs emitted against bucket state the timer should have evicted")
-    }
-  }
-
-  test("s26: transformWithState tombstone upsert matches the fMGWS form") {
-    withRocksDB {
-      // same fixture as s14: value, retraction, re-insert
-      val ms = MemoryStream[(Long, Option[String])]
-      val q = graft.streaming.StatefulOps.upsertWithTombstonesTws(ms.toDS())
-        .writeStream.outputMode("update").format("memory").queryName("s26").start()
-      ms.addData((1L, Some("a")), (2L, Some("b")))
-      q.processAllAvailable()
-      ms.addData((1L, None))
-      q.processAllAvailable()
-      ms.addData((1L, Some("a2")))
-      q.processAllAvailable()
-      q.stop()
-      val emissions = spark.table("s26").collect()
-        .map(r => (r.getAs[Long]("key"), r.getAs[String]("value"),
-          r.getAs[Boolean]("deleted")))
-      assert(emissions.filter(_._1 == 1L).toSeq ==
-        Seq((1L, "a", false), (1L, "", true), (1L, "a2", false)))
-      assert(emissions.filter(_._1 == 2L).toSeq == Seq((2L, "b", false)))
-    }
-  }
-
-  test("s27: transformWithState transition edges match the fMGWS form") {
-    withRocksDB {
-      // same fixture as s20: scrambled batch 1 + state across batches
-      val ms = MemoryStream[(Long, Long, String, Timestamp)]
-      val q = graft.streaming.StatefulOps
-        .transitionStreamTws(ms.toDS())
-        .toDF("src", "dst")
-        .writeStream.outputMode("update").format("memory").queryName("s27").start()
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      ms.addData((11L, 1L, "click", t(5)), (10L, 1L, "view", t(0)),
-        (20L, 2L, "view", t(2)))
-      q.processAllAvailable()
-      ms.addData((12L, 1L, "purchase", t(9)), (21L, 2L, "error", t(6)))
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s27")
-        .groupBy("src", "dst").count()
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      assert(got == Set(("view", "click", 1L), ("click", "purchase", 1L),
-        ("view", "error", 1L)), s"got $got")
-    }
   }
 
   test("hot-key transition: crossing emits once, below-threshold never") {
@@ -747,7 +581,7 @@ class StreamingSpec extends AnyFunSuite {
   test("s18: streaming sessionization equals the batch gaps-and-islands") {
     val ms = MemoryStream[(Long, Long, Timestamp)]
     val q = graft.streaming.StatefulOps
-      .sessionizeStream(ms.toDS(), gapSec = 1800L)
+      .sessionizeStreamTws(ms.toDS(), gapSec = 1800L)
       .toDF("event_id", "user_id", "sess")
       .writeStream.outputMode("update").format("memory").queryName("s18").start()
     def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
@@ -770,18 +604,12 @@ class StreamingSpec extends AnyFunSuite {
       (10L, 1L, 1), (11L, 1L, 1), (12L, 1L, 2), (13L, 1L, 2), (14L, 1L, 3),
       (20L, 2L, 1), (21L, 2L, 1))
     assert(got == want, s"got $got")
-    // cross-check: the batch q105 form on the same rows agrees
-    import spark.implicits._
+    // cross-check: the batch q105 operator on the same rows agrees
     val batch = Seq((10L, 1L, t(0)), (11L, 1L, t(5)), (12L, 1L, t(45)),
       (13L, 1L, t(50)), (14L, 1L, t(95)), (20L, 2L, t(0)), (21L, 2L, t(29)))
       .toDF("event_id", "user_id", "ts")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val wc = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val q105Form = batch
-      .withColumn("brk", when(col("ts").cast("long")
-        - lag(col("ts").cast("long"), 1).over(w) > 1800L, 1).otherwise(0))
-      .withColumn("sess", (sum("brk").over(wc) + 1).cast("int"))
+    val q105Form = graft.operators.Sessionize
+      .assign(batch, "user_id", "ts", gapSec = 1800L, orderCols = Seq("event_id"))
       .select("event_id", "user_id", "sess")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(q105Form == got, "streaming and batch sessionization disagree")
@@ -790,7 +618,7 @@ class StreamingSpec extends AnyFunSuite {
   test("s20: streaming transition edges equal the batch lead() matrix") {
     val ms = MemoryStream[(Long, Long, String, Timestamp)]
     val q = graft.streaming.StatefulOps
-      .transitionStream(ms.toDS())
+      .transitionStreamTws(ms.toDS())
       .toDF("src", "dst")
       .writeStream.outputMode("update").format("memory").queryName("s20").start()
     def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
@@ -824,89 +652,54 @@ class StreamingSpec extends AnyFunSuite {
       ("view", "error", 1L)))
   }
 
-  test("s23: transformWithState sessionization equals the fMGWS form") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[(Long, Long, Timestamp)]
-      val q = graft.streaming.StatefulOps
-        .sessionizeStreamTws(ms.toDS(), gapSec = 1800L)
-        .toDF("event_id", "user_id", "sess")
-        .writeStream.outputMode("update").format("memory").queryName("s23").start()
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      // same fixture as s18, scrambled batch 1 + cross-batch state
-      ms.addData((11L, 1L, t(5)), (10L, 1L, t(0)), (20L, 2L, t(0)))
-      q.processAllAvailable()
-      ms.addData((12L, 1L, t(45)), (13L, 1L, t(50)), (21L, 2L, t(29)))
-      q.processAllAvailable()
-      ms.addData((14L, 1L, t(95)))
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s23")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val want = Set(
-        (10L, 1L, 1), (11L, 1L, 1), (12L, 1L, 2), (13L, 1L, 2), (14L, 1L, 3),
-        (20L, 2L, 1), (21L, 2L, 1))
-      assert(got == want, s"transformWithState sessionization drifted: $got")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("s32: dynamic per-key session gaps — parity when constant, exact when varying") {
-    withRocksDB {
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      // 1) parity: a constant gap column reproduces the fixed-gap form
-      val msC = MemoryStream[(Long, Long, Timestamp, Long)]
-      val qc = graft.streaming.StatefulOps
-        .sessionizeStreamDynamic(msC.toDS())
-        .toDF("event_id", "user_id", "sess")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s32c").start()
-      msC.addData((11L, 1L, t(5), 1800L), (10L, 1L, t(0), 1800L),
-        (20L, 2L, t(0), 1800L))
-      qc.processAllAvailable()
-      msC.addData((12L, 1L, t(45), 1800L), (13L, 1L, t(50), 1800L),
-        (21L, 2L, t(29), 1800L))
-      qc.processAllAvailable()
-      msC.addData((14L, 1L, t(95), 1800L))
-      qc.processAllAvailable()
-      qc.stop()
-      val gotC = spark.table("s32c")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      // the s23 fixture's expected sessions (fixed 30-min gap)
-      assert(gotC == Set(
-        (10L, 1L, 1), (11L, 1L, 1), (12L, 1L, 2), (13L, 1L, 2), (14L, 1L, 3),
-        (20L, 2L, 1), (21L, 2L, 1)), s"constant-gap parity broke: $gotC")
-      // 2) varying gaps: user 1 tightens the gap to 10 min mid-stream
-      // (the 40-min jump then splits where the 30-min gap would not
-      // have — and vice versa for user 2's loosened gap)
-      val msV = MemoryStream[(Long, Long, Timestamp, Long)]
-      val qv = graft.streaming.StatefulOps
-        .sessionizeStreamDynamic(msV.toDS())
-        .toDF("event_id", "user_id", "sess")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s32v").start()
-      msV.addData((10L, 1L, t(0), 1800L), (11L, 1L, t(25), 1800L),
-        (20L, 2L, t(0), 600L))
-      qv.processAllAvailable()
-      // user 1 now carries a 10-min gap: t(45) is 20 min after t(25)
-      // → NEW session (the fixed 30-min form kept it); user 2 loosens
-      // to 45 min: t(40) is 40 min after t(0) → SAME session (the
-      // original 10-min gap would have split)
-      msV.addData((12L, 1L, t(45), 600L), (21L, 2L, t(40), 2700L))
-      qv.processAllAvailable()
-      qv.stop()
-      val gotV = spark.table("s32v")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(gotV == Set(
-        (10L, 1L, 1), (11L, 1L, 1), (12L, 1L, 2),
-        (20L, 2L, 1), (21L, 2L, 1)), s"dynamic-gap sessions wrong: $gotV")
-    }
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    // 1) parity: a constant gap column reproduces the fixed-gap form
+    val msC = MemoryStream[(Long, Long, Timestamp, Long)]
+    val qc = graft.streaming.StatefulOps
+      .sessionizeStreamDynamic(msC.toDS())
+      .toDF("event_id", "user_id", "sess")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s32c").start()
+    msC.addData((11L, 1L, t(5), 1800L), (10L, 1L, t(0), 1800L),
+      (20L, 2L, t(0), 1800L))
+    qc.processAllAvailable()
+    msC.addData((12L, 1L, t(45), 1800L), (13L, 1L, t(50), 1800L),
+      (21L, 2L, t(29), 1800L))
+    qc.processAllAvailable()
+    msC.addData((14L, 1L, t(95), 1800L))
+    qc.processAllAvailable()
+    qc.stop()
+    val gotC = spark.table("s32c")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // the s18 fixture's expected sessions (fixed 30-min gap)
+    assert(gotC == Set(
+      (10L, 1L, 1), (11L, 1L, 1), (12L, 1L, 2), (13L, 1L, 2), (14L, 1L, 3),
+      (20L, 2L, 1), (21L, 2L, 1)), s"constant-gap parity broke: $gotC")
+    // 2) varying gaps: user 1 tightens the gap to 10 min mid-stream
+    // (the 40-min jump then splits where the 30-min gap would not
+    // have — and vice versa for user 2's loosened gap)
+    val msV = MemoryStream[(Long, Long, Timestamp, Long)]
+    val qv = graft.streaming.StatefulOps
+      .sessionizeStreamDynamic(msV.toDS())
+      .toDF("event_id", "user_id", "sess")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s32v").start()
+    msV.addData((10L, 1L, t(0), 1800L), (11L, 1L, t(25), 1800L),
+      (20L, 2L, t(0), 600L))
+    qv.processAllAvailable()
+    // user 1 now carries a 10-min gap: t(45) is 20 min after t(25)
+    // → NEW session (the fixed 30-min form kept it); user 2 loosens
+    // to 45 min: t(40) is 40 min after t(0) → SAME session (the
+    // original 10-min gap would have split)
+    msV.addData((12L, 1L, t(45), 600L), (21L, 2L, t(40), 2700L))
+    qv.processAllAvailable()
+    qv.stop()
+    val gotV = spark.table("s32v")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(gotV == Set(
+      (10L, 1L, 1), (11L, 1L, 1), (12L, 1L, 2),
+      (20L, 2L, 1), (21L, 2L, 1)), s"dynamic-gap sessions wrong: $gotV")
   }
 
   test("s28: composed CDC pipeline survives restart: dedup, tombstones, quarantine, compaction") {
@@ -2200,351 +1993,337 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("s45: streaming cadence monitor — warm-up, pre-gap EWMA alert, baseline recovery") {
-    withRocksDB {
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      val mult = 4.0; val minGaps = 3L
-      // user 1: steady 60 s cadence, then a cross-batch stall (alert),
-      // then the stall folds into the baseline (recovery dynamics: the
-      // next normal gap does NOT alert, a second long stall does)
-      val b1 = Seq(
-        (10L, 1L, t(0)), (11L, 1L, t(1)), (12L, 1L, t(2)),
-        (13L, 1L, t(3)), (14L, 1L, t(4)),
-        // user 2: a huge gap inside warm-up must NOT alert
-        (20L, 2L, t(0)), (21L, 2L, t(1)), (22L, 2L, t(500)))
-      val b2 = Seq(
-        (15L, 1L, t(60)), (16L, 1L, t(61)), (17L, 1L, t(121)),
-        (23L, 2L, t(501)))
-      val ms = MemoryStream[(Long, Long, Timestamp)]
-      val q = graft.streaming.StatefulOps
-        .cadenceStreamTws(ms.toDS(), mult, minGaps)
-        .toDF("user_id", "ts", "gap_s", "ewma_before")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s45").start()
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s45").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      // reference fold: the identical op chain over the same rows
-      val want = (b1 ++ b2).groupBy(_._2).flatMap { case (u, rs) =>
-        var last = Long.MinValue; var ewma = 0.0; var n = 0L
-        rs.sortBy(r => (r._3.getTime, r._1)).flatMap { case (_, _, ts) =>
-          val sec = ts.getTime / 1000L
-          val alert =
-            if (last != Long.MinValue) {
-              val gap = sec - last
-              val a = if (n >= minGaps && gap.toDouble > mult * ewma)
-                Some((u, ts, gap, ewma)) else None
-              ewma = if (n == 0L) gap.toDouble
-                     else (3.0 * ewma + gap.toDouble) / 4.0
-              n += 1; a
-            } else None
-          last = sec
-          alert
-        }
-      }.toSet
-      assert(got == want, s"cadence monitor drifted: got=$got want=$want")
-      // shape pins: exactly user 1's two stalls alert (warm-up mutes
-      // user 2); the first alert's baseline is the steady 60 s
-      assert(got.map(x => (x._1, x._2)) == Set((1L, t(60)), (1L, t(121))))
-      assert(got.find(_._2 == t(60)).get._4 == 60.0)
-    }
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    val mult = 4.0; val minGaps = 3L
+    // user 1: steady 60 s cadence, then a cross-batch stall (alert),
+    // then the stall folds into the baseline (recovery dynamics: the
+    // next normal gap does NOT alert, a second long stall does)
+    val b1 = Seq(
+      (10L, 1L, t(0)), (11L, 1L, t(1)), (12L, 1L, t(2)),
+      (13L, 1L, t(3)), (14L, 1L, t(4)),
+      // user 2: a huge gap inside warm-up must NOT alert
+      (20L, 2L, t(0)), (21L, 2L, t(1)), (22L, 2L, t(500)))
+    val b2 = Seq(
+      (15L, 1L, t(60)), (16L, 1L, t(61)), (17L, 1L, t(121)),
+      (23L, 2L, t(501)))
+    val ms = MemoryStream[(Long, Long, Timestamp)]
+    val q = graft.streaming.StatefulOps
+      .cadenceStreamTws(ms.toDS(), mult, minGaps)
+      .toDF("user_id", "ts", "gap_s", "ewma_before")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s45").start()
+    ms.addData(b1: _*); q.processAllAvailable()
+    ms.addData(b2: _*); q.processAllAvailable()
+    q.stop()
+    val got = spark.table("s45").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    // reference fold: the identical op chain over the same rows
+    val want = (b1 ++ b2).groupBy(_._2).flatMap { case (u, rs) =>
+      var last = Long.MinValue; var ewma = 0.0; var n = 0L
+      rs.sortBy(r => (r._3.getTime, r._1)).flatMap { case (_, _, ts) =>
+        val sec = ts.getTime / 1000L
+        val alert =
+          if (last != Long.MinValue) {
+            val gap = sec - last
+            val a = if (n >= minGaps && gap.toDouble > mult * ewma)
+              Some((u, ts, gap, ewma)) else None
+            ewma = if (n == 0L) gap.toDouble
+                   else (3.0 * ewma + gap.toDouble) / 4.0
+            n += 1; a
+          } else None
+        last = sec
+        alert
+      }
+    }.toSet
+    assert(got == want, s"cadence monitor drifted: got=$got want=$want")
+    // shape pins: exactly user 1's two stalls alert (warm-up mutes
+    // user 2); the first alert's baseline is the steady 60 s
+    assert(got.map(x => (x._1, x._2)) == Set((1L, t(60)), (1L, t(121))))
+    assert(got.find(_._2 == t(60)).get._4 == 60.0)
   }
 
   test("s50: streaming CUSUM level-shift monitor — warm-up baseline, spike and drop alerts, reference-fold parity") {
-    withRocksDB {
-      import graft.streaming.StatefulOps
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      // key 1: steady 10s, then a level shift up; key 3: steady, then
-      // a sustained DROP (signed deviation must alert too); key 2:
-      // huge values ENTIRELY inside warm-up — they define the
-      // baseline, they must not alert against it
-      val b1 = Seq(
-        (10L, 1L, t(0), 10L), (11L, 1L, t(1), 10L), (12L, 1L, t(2), 10L),
-        (13L, 1L, t(3), 10L),
-        (30L, 3L, t(0), 10L), (31L, 3L, t(1), 10L), (32L, 3L, t(2), 10L),
-        (40L, 2L, t(0), 999L), (41L, 2L, t(1), 999L))
-      val b2 = Seq(
-        (14L, 1L, t(4), 25L), (15L, 1L, t(5), 30L),
-        (33L, 3L, t(3), 2L), (34L, 3L, t(4), 2L))
-      val ms = MemoryStream[(Long, Long, Timestamp, Long)]
-      val q = StatefulOps.cusumStreamTws(ms.toDS(), warm = 3L, thresh = 10L)
-        .toDF("key", "ts", "dev", "i")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s50").start()
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s50").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-          r.getLong(3))).toSet
-      // reference: the identical pure fold over everything per key
-      val want = (b1 ++ b2).groupBy(_._2).flatMap { case (k, rs) =>
-        StatefulOps.cusumFold(StatefulOps.cusumInit, k, 3L, 10L, rs)._2
-      }.toSet
-      assert(got == want, s"cusum monitor drifted: got=$got want=$want")
-      // shape pins: key 1's shift alerts at t(4) (dev 45) and t(5)
-      // (dev 105); key 3's drop alerts signed-negative at t(4); key 2
-      // never alerts
-      assert(got.map(a => (a._1, a._2, a._3)) ==
-        Set((1L, t(4), 45L), (1L, t(5), 105L), (3L, t(4), -48L)),
-        s"alert set: $got")
-    }
+    import graft.streaming.StatefulOps
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    // key 1: steady 10s, then a level shift up; key 3: steady, then
+    // a sustained DROP (signed deviation must alert too); key 2:
+    // huge values ENTIRELY inside warm-up — they define the
+    // baseline, they must not alert against it
+    val b1 = Seq(
+      (10L, 1L, t(0), 10L), (11L, 1L, t(1), 10L), (12L, 1L, t(2), 10L),
+      (13L, 1L, t(3), 10L),
+      (30L, 3L, t(0), 10L), (31L, 3L, t(1), 10L), (32L, 3L, t(2), 10L),
+      (40L, 2L, t(0), 999L), (41L, 2L, t(1), 999L))
+    val b2 = Seq(
+      (14L, 1L, t(4), 25L), (15L, 1L, t(5), 30L),
+      (33L, 3L, t(3), 2L), (34L, 3L, t(4), 2L))
+    val ms = MemoryStream[(Long, Long, Timestamp, Long)]
+    val q = StatefulOps.cusumStreamTws(ms.toDS(), warm = 3L, thresh = 10L)
+      .toDF("key", "ts", "dev", "i")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s50").start()
+    ms.addData(b1: _*); q.processAllAvailable()
+    ms.addData(b2: _*); q.processAllAvailable()
+    q.stop()
+    val got = spark.table("s50").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
+        r.getLong(3))).toSet
+    // reference: the identical pure fold over everything per key
+    val want = (b1 ++ b2).groupBy(_._2).flatMap { case (k, rs) =>
+      StatefulOps.cusumFold(StatefulOps.cusumInit, k, 3L, 10L, rs)._2
+    }.toSet
+    assert(got == want, s"cusum monitor drifted: got=$got want=$want")
+    // shape pins: key 1's shift alerts at t(4) (dev 45) and t(5)
+    // (dev 105); key 3's drop alerts signed-negative at t(4); key 2
+    // never alerts
+    assert(got.map(a => (a._1, a._2, a._3)) ==
+      Set((1L, t(4), 45L), (1L, t(5), 105L), (3L, t(4), -48L)),
+      s"alert set: $got")
   }
 
   test("s51: streaming Benford monitor — near-conformant profile silent, spiked digit alerts, sub-1 amounts don't count, reference-fold parity") {
-    withRocksDB {
-      import graft.streaming.StatefulOps
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      // key 1: ten amounts whose digit profile {1×3,2×2,3,4,5,6,9}
-      // sits inside tau=100000 ppm at n=10 (worst digit is the EMPTY
-      // 7 at 57992 ppm) — the warm-up boundary row must stay silent;
-      // key 2: zeros are skipped (q222's x ≥ 1 rule) so it never
-      // leaves warm-up
-      val b1 = Seq(
-        (10L, 1L, t(0), 1L), (11L, 1L, t(1), 12L), (12L, 1L, t(2), 150L),
-        (13L, 1L, t(3), 2L), (14L, 1L, t(4), 25L), (15L, 1L, t(5), 3L),
-        (16L, 1L, t(6), 4L), (17L, 1L, t(7), 5L), (18L, 1L, t(8), 6L),
-        (19L, 1L, t(9), 9L),
-        (20L, 2L, t(0), 0L), (21L, 2L, t(1), 0L), (22L, 2L, t(2), 5L))
-      // then a digit-9 burst: every post-burst row alerts on digit 9
-      val b2 = Seq(
-        (30L, 1L, t(10), 9L), (31L, 1L, t(11), 90L),
-        (32L, 1L, t(12), 99L), (33L, 1L, t(13), 950L))
-      val ms = MemoryStream[(Long, Long, Timestamp, Long)]
-      val q = StatefulOps.benfordStreamTws(ms.toDS(),
-          warm = 10L, tauPpm = 100000L)
-        .toDF("key", "ts", "n", "digit", "devnum")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s51").start()
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s51").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-          r.getInt(3), r.getLong(4))).toSet
-      val want = (b1 ++ b2).groupBy(_._2).flatMap { case (k, rs) =>
-        StatefulOps.benfordFold(StatefulOps.benfordInit, k,
-          10L, 100000L, rs)._2
-      }.toSet
-      assert(got == want, s"benford monitor drifted: got=$got want=$want")
-      // shape pins: exactly the four burst rows alert, all key 1,
-      // all digit 9, n climbing 11..14 with the exact integer devnums
-      assert(got == Set(
-        (1L, t(10), 11L, 9, 1496673L), (1L, t(11), 12L, 9, 2450916L),
-        (1L, t(12), 13L, 9, 3405159L), (1L, t(13), 14L, 9, 4359402L)),
-        s"alert set: $got")
-    }
+    import graft.streaming.StatefulOps
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    // key 1: ten amounts whose digit profile {1×3,2×2,3,4,5,6,9}
+    // sits inside tau=100000 ppm at n=10 (worst digit is the EMPTY
+    // 7 at 57992 ppm) — the warm-up boundary row must stay silent;
+    // key 2: zeros are skipped (q222's x ≥ 1 rule) so it never
+    // leaves warm-up
+    val b1 = Seq(
+      (10L, 1L, t(0), 1L), (11L, 1L, t(1), 12L), (12L, 1L, t(2), 150L),
+      (13L, 1L, t(3), 2L), (14L, 1L, t(4), 25L), (15L, 1L, t(5), 3L),
+      (16L, 1L, t(6), 4L), (17L, 1L, t(7), 5L), (18L, 1L, t(8), 6L),
+      (19L, 1L, t(9), 9L),
+      (20L, 2L, t(0), 0L), (21L, 2L, t(1), 0L), (22L, 2L, t(2), 5L))
+    // then a digit-9 burst: every post-burst row alerts on digit 9
+    val b2 = Seq(
+      (30L, 1L, t(10), 9L), (31L, 1L, t(11), 90L),
+      (32L, 1L, t(12), 99L), (33L, 1L, t(13), 950L))
+    val ms = MemoryStream[(Long, Long, Timestamp, Long)]
+    val q = StatefulOps.benfordStreamTws(ms.toDS(),
+        warm = 10L, tauPpm = 100000L)
+      .toDF("key", "ts", "n", "digit", "devnum")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s51").start()
+    ms.addData(b1: _*); q.processAllAvailable()
+    ms.addData(b2: _*); q.processAllAvailable()
+    q.stop()
+    val got = spark.table("s51").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
+        r.getInt(3), r.getLong(4))).toSet
+    val want = (b1 ++ b2).groupBy(_._2).flatMap { case (k, rs) =>
+      StatefulOps.benfordFold(StatefulOps.benfordInit, k,
+        10L, 100000L, rs)._2
+    }.toSet
+    assert(got == want, s"benford monitor drifted: got=$got want=$want")
+    // shape pins: exactly the four burst rows alert, all key 1,
+    // all digit 9, n climbing 11..14 with the exact integer devnums
+    assert(got == Set(
+      (1L, t(10), 11L, 9, 1496673L), (1L, t(11), 12L, 9, 2450916L),
+      (1L, t(12), 13L, 9, 3405159L), (1L, t(13), 14L, 9, 4359402L)),
+      s"alert set: $got")
   }
 
   test("s46: streaming attribution — purchases credit first/last touch, parity with the batch windows") {
-    withRocksDB {
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      // user 1: view→click→purchase across the batch boundary (one
-      // session — the state must carry first_touch over); a SECOND
-      // purchase in the same session credits the purchase before it;
-      // user 2: a >30-min gap, then a session-opening purchase →
-      // 'entry'; batch 1 arrives scrambled
-      val b1 = Seq(
-        (11L, 1L, "click", 0.0, t(5)), (10L, 1L, "view", 0.0, t(0)),
-        (20L, 2L, "view", 0.0, t(0)))
-      val b2 = Seq(
-        (12L, 1L, "purchase", 30.0, t(20)),
-        (13L, 1L, "purchase", 40.0, t(25)),
-        (21L, 2L, "purchase", 50.0, t(60)))
-      val ms = MemoryStream[(Long, Long, String, Double, Timestamp)]
-      val q = graft.streaming.StatefulOps
-        .attributionStreamTws(ms.toDS())
-        .toDF("user_id", "ts", "first_touch", "last_touch", "value")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s46").start()
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s46").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
-          r.getString(3), r.getDouble(4))).toSet
-      // batch twin: q212's pre-aggregation frame on the same rows
-      import org.apache.spark.sql.expressions.Window
-      val df = (b1 ++ b2)
-        .toDF("event_id", "user_id", "event_type", "value", "ts")
-        .withColumn("tsec", date_trunc("second", col("ts")))
-      val sess = graft.operators.Sessionize.assign(
-        df, "user_id", "tsec", gapSec = 1800L, orderCols = Seq("event_id"))
-      val ws = Window.partitionBy("user_id", "sess")
-        .orderBy(col("tsec").asc, col("event_id").asc)
-      val want = sess
-        .withColumn("first_touch", first(col("event_type")).over(ws))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(ws))
-        .where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("first_touch"),
-          coalesce(col("prev_type"), lit("entry")).as("last_touch"),
-          col("value"))
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
-          r.getString(3), r.getDouble(4))).toSet
-      assert(got == want, s"attribution drifted: got=$got want=$want")
-      // shape pins: cross-batch first_touch survived; the back-to-back
-      // purchase credits the purchase before it; the gapped purchase
-      // opens its session
-      assert(got == Set(
-        (1L, t(20), "view", "click", 30.0),
-        (1L, t(25), "view", "purchase", 40.0),
-        (2L, t(60), "purchase", "entry", 50.0)))
-    }
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    // user 1: view→click→purchase across the batch boundary (one
+    // session — the state must carry first_touch over); a SECOND
+    // purchase in the same session credits the purchase before it;
+    // user 2: a >30-min gap, then a session-opening purchase →
+    // 'entry'; batch 1 arrives scrambled
+    val b1 = Seq(
+      (11L, 1L, "click", 0.0, t(5)), (10L, 1L, "view", 0.0, t(0)),
+      (20L, 2L, "view", 0.0, t(0)))
+    val b2 = Seq(
+      (12L, 1L, "purchase", 30.0, t(20)),
+      (13L, 1L, "purchase", 40.0, t(25)),
+      (21L, 2L, "purchase", 50.0, t(60)))
+    val ms = MemoryStream[(Long, Long, String, Double, Timestamp)]
+    val q = graft.streaming.StatefulOps
+      .attributionStreamTws(ms.toDS())
+      .toDF("user_id", "ts", "first_touch", "last_touch", "value")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s46").start()
+    ms.addData(b1: _*); q.processAllAvailable()
+    ms.addData(b2: _*); q.processAllAvailable()
+    q.stop()
+    val got = spark.table("s46").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
+        r.getString(3), r.getDouble(4))).toSet
+    // batch twin: q212's pre-aggregation frame on the same rows
+    import org.apache.spark.sql.expressions.Window
+    val df = (b1 ++ b2)
+      .toDF("event_id", "user_id", "event_type", "value", "ts")
+      .withColumn("tsec", date_trunc("second", col("ts")))
+    val sess = graft.operators.Sessionize.assign(
+      df, "user_id", "tsec", gapSec = 1800L, orderCols = Seq("event_id"))
+    val ws = Window.partitionBy("user_id", "sess")
+      .orderBy(col("tsec").asc, col("event_id").asc)
+    val want = sess
+      .withColumn("first_touch", first(col("event_type")).over(ws))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(ws))
+      .where(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("first_touch"),
+        coalesce(col("prev_type"), lit("entry")).as("last_touch"),
+        col("value"))
+      .collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
+        r.getString(3), r.getDouble(4))).toSet
+    assert(got == want, s"attribution drifted: got=$got want=$want")
+    // shape pins: cross-batch first_touch survived; the back-to-back
+    // purchase credits the purchase before it; the gapped purchase
+    // opens its session
+    assert(got == Set(
+      (1L, t(20), "view", "click", 30.0),
+      (1L, t(25), "view", "purchase", 40.0),
+      (2L, t(60), "purchase", "entry", 50.0)))
   }
 
   test("s47: streaming KMP pattern detector — consecutive hits, session resets, overlap rule") {
-    withRocksDB {
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      // user 1: view,click,purchase completes ACROSS the batch
-      // boundary (automaton state carries); then view,ERROR,click,
-      // purchase must NOT fire (consecutive rule — q116's funnel
-      // would anchor through the error, this key must not);
-      // user 2: error,error,error = 1 hit of (error,error), not 2
-      // (reset-on-complete / non-overlap), then a >30-min gap resets
-      // a half-matched prefix
-      val b1 = Seq(
-        (10L, 1L, "view", t(0)), (11L, 1L, "click", t(1)),
-        (20L, 2L, "error", t(0)), (21L, 2L, "error", t(1)),
-        (22L, 2L, "error", t(2)))
-      val b2 = Seq(
-        (12L, 1L, "purchase", t(2)),
-        (13L, 1L, "view", t(10)), (14L, 1L, "error", t(11)),
-        (15L, 1L, "click", t(12)), (16L, 1L, "purchase", t(13)),
-        (23L, 2L, "error", t(60)), (24L, 2L, "error", t(120)))
-      val msA = MemoryStream[(Long, Long, String, Timestamp)]
-      val qA = graft.streaming.StatefulOps
-        .patternStreamTws(msA.toDS().filter(_._2 == 1L),
-          Seq("view", "click", "purchase"))
-        .toDF("user_id", "ts")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s47a").start()
-      val msB = MemoryStream[(Long, Long, String, Timestamp)]
-      val qB = graft.streaming.StatefulOps
-        .patternStreamTws(msB.toDS().filter(_._2 == 2L),
-          Seq("error", "error"))
-        .toDF("user_id", "ts")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s47b").start()
-      msA.addData(b1: _*); msB.addData(b1: _*)
-      qA.processAllAvailable(); qB.processAllAvailable()
-      msA.addData(b2: _*); msB.addData(b2: _*)
-      qA.processAllAvailable(); qB.processAllAvailable()
-      qA.stop(); qB.stop()
-      val gotA = spark.table("s47a").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
-      val gotB = spark.table("s47b").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
-      // user 1: exactly the cross-batch completion at t(2); the
-      // error-interrupted run never fires
-      assert(gotA == Set((1L, t(2))), s"gotA=$gotA")
-      // user 2: one hit at t(1) (non-overlap kills t(2)'s pair); the
-      // gapped error at t(60) starts a fresh session whose second
-      // error at t(120)... is ANOTHER session (60 min gap > 30) — no
-      // second hit
-      assert(gotB == Set((2L, t(1))), s"gotB=$gotB")
-    }
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    // user 1: view,click,purchase completes ACROSS the batch
+    // boundary (automaton state carries); then view,ERROR,click,
+    // purchase must NOT fire (consecutive rule — q116's funnel
+    // would anchor through the error, this key must not);
+    // user 2: error,error,error = 1 hit of (error,error), not 2
+    // (reset-on-complete / non-overlap), then a >30-min gap resets
+    // a half-matched prefix
+    val b1 = Seq(
+      (10L, 1L, "view", t(0)), (11L, 1L, "click", t(1)),
+      (20L, 2L, "error", t(0)), (21L, 2L, "error", t(1)),
+      (22L, 2L, "error", t(2)))
+    val b2 = Seq(
+      (12L, 1L, "purchase", t(2)),
+      (13L, 1L, "view", t(10)), (14L, 1L, "error", t(11)),
+      (15L, 1L, "click", t(12)), (16L, 1L, "purchase", t(13)),
+      (23L, 2L, "error", t(60)), (24L, 2L, "error", t(120)))
+    val msA = MemoryStream[(Long, Long, String, Timestamp)]
+    val qA = graft.streaming.StatefulOps
+      .patternStreamTws(msA.toDS().filter(_._2 == 1L),
+        Seq("view", "click", "purchase"))
+      .toDF("user_id", "ts")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s47a").start()
+    val msB = MemoryStream[(Long, Long, String, Timestamp)]
+    val qB = graft.streaming.StatefulOps
+      .patternStreamTws(msB.toDS().filter(_._2 == 2L),
+        Seq("error", "error"))
+      .toDF("user_id", "ts")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s47b").start()
+    msA.addData(b1: _*); msB.addData(b1: _*)
+    qA.processAllAvailable(); qB.processAllAvailable()
+    msA.addData(b2: _*); msB.addData(b2: _*)
+    qA.processAllAvailable(); qB.processAllAvailable()
+    qA.stop(); qB.stop()
+    val gotA = spark.table("s47a").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
+    val gotB = spark.table("s47b").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
+    // user 1: exactly the cross-batch completion at t(2); the
+    // error-interrupted run never fires
+    assert(gotA == Set((1L, t(2))), s"gotA=$gotA")
+    // user 2: one hit at t(1) (non-overlap kills t(2)'s pair); the
+    // gapped error at t(60) starts a fresh session whose second
+    // error at t(120)... is ANOTHER session (60 min gap > 30) — no
+    // second hit
+    assert(gotB == Set((2L, t(1))), s"gotB=$gotB")
   }
 
   test("s44: streaming strict-order funnel — advances match the batch anchors") {
-    withRocksDB {
-      def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
-      val stages = Seq("view", "click", "purchase")
-      // user 1 converts across batches (batch 1 scrambled; a click AT
-      // the view's timestamp must NOT anchor — strictly-after rule);
-      // user 2 stalls at click; user 3 only purchases (never enters)
-      val b1 = Seq(
-        (11L, 1L, "click", t(0)), (12L, 1L, "click", t(5)),
-        (10L, 1L, "view", t(0)),
-        (20L, 2L, "view", t(0)), (30L, 3L, "purchase", t(0)))
-      val b2 = Seq(
-        (13L, 1L, "purchase", t(45)), (21L, 2L, "click", t(29)),
-        (31L, 3L, "purchase", t(10)))
-      val ms = MemoryStream[(Long, Long, String, Timestamp)]
-      val q = graft.streaming.StatefulOps
-        .funnelStreamTws(ms.toDS(), stages)
-        .toDF("user_id", "stage_idx", "stage", "ts")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("s44").start()
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      q.stop()
-      val got = spark.table("s44").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
-          r.getTimestamp(3))).toSet
-      // batch twin on the same rows: every non-null anchor is an advance
-      val batch = graft.operators.Funnel.strictOrder(
-        (b1 ++ b2).toDF("event_id", "user_id", "event_type", "ts"),
-        "user_id", "event_type", "ts", stages)
-      val want = batch.collect().flatMap { r =>
-        stages.zipWithIndex.flatMap { case (st, i) =>
-          Option(r.getAs[Timestamp](s"t_$st"))
-            .map(ts => (r.getAs[Long]("user_id"), i + 1, st, ts))
-        }
-      }.toSet
-      assert(got == want, s"streaming funnel drifted: got=$got want=$want")
-      // the conversion row is the last stage's advance, and only user 1 has it
-      assert(got.filter(_._2 == stages.length).map(_._1) == Set(1L))
-    }
+    def t(min: Int) = new Timestamp(1704067200000L + min * 60000L)
+    val stages = Seq("view", "click", "purchase")
+    // user 1 converts across batches (batch 1 scrambled; a click AT
+    // the view's timestamp must NOT anchor — strictly-after rule);
+    // user 2 stalls at click; user 3 only purchases (never enters)
+    val b1 = Seq(
+      (11L, 1L, "click", t(0)), (12L, 1L, "click", t(5)),
+      (10L, 1L, "view", t(0)),
+      (20L, 2L, "view", t(0)), (30L, 3L, "purchase", t(0)))
+    val b2 = Seq(
+      (13L, 1L, "purchase", t(45)), (21L, 2L, "click", t(29)),
+      (31L, 3L, "purchase", t(10)))
+    val ms = MemoryStream[(Long, Long, String, Timestamp)]
+    val q = graft.streaming.StatefulOps
+      .funnelStreamTws(ms.toDS(), stages)
+      .toDF("user_id", "stage_idx", "stage", "ts")
+      .writeStream.outputMode("update").format("memory")
+      .queryName("s44").start()
+    ms.addData(b1: _*); q.processAllAvailable()
+    ms.addData(b2: _*); q.processAllAvailable()
+    q.stop()
+    val got = spark.table("s44").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
+        r.getTimestamp(3))).toSet
+    // batch twin on the same rows: every non-null anchor is an advance
+    val batch = graft.operators.Funnel.strictOrder(
+      (b1 ++ b2).toDF("event_id", "user_id", "event_type", "ts"),
+      "user_id", "event_type", "ts", stages)
+    val want = batch.collect().flatMap { r =>
+      stages.zipWithIndex.flatMap { case (st, i) =>
+        Option(r.getAs[Timestamp](s"t_$st"))
+          .map(ts => (r.getAs[Long]("user_id"), i + 1, st, ts))
+      }
+    }.toSet
+    assert(got == want, s"streaming funnel drifted: got=$got want=$want")
+    // the conversion row is the last stage's advance, and only user 1 has it
+    assert(got.filter(_._2 == stages.length).map(_._1) == Set(1L))
   }
 
   test("s49: streaming vector near-dup gate flags exactly the batch RP-LSH candidates across restarts") {
-    withRocksDB {
-      import graft.operators.Similarity
-      val src = TestSpark.tmpDir("s49-src")
-      val out = TestSpark.tmpDir("s49-out") + "/pairs"
-      val chk = TestSpark.tmpDir("s49-chk")
-      val em = Tables.embeddings(spark, "/root/testdata/sf0.001").cache()
-      val vecSchema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType))))
-      def ship(name: String, ids: Seq[Long]): Unit =
-        em.where(col("vec_id").isin(ids: _*))
-          .select(col("vec_id"), col("embedding"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$src/$name")
-      def run(): Unit = {
-        val in = spark.readStream.schema(vecSchema)
-          .option("recursiveFileLookup", "true").parquet(src)
-        val q = graft.streaming.StatefulOps
-          .vectorNearDupStreamTws(in, "vec_id", "embedding")
-          .toDF("a_id", "b_id")
-          .writeStream.outputMode("update")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      // two batches, then a RESTART with a third — pairs must form
-      // against bucket state persisted across the restart
-      ship("f1", 1L to 25L)
-      run()
-      ship("f2", 26L to 40L)
-      run()
-      ship("f3", 41L to 60L)
-      run()
-      val flagged = spark.read.parquet(out)
-        .select("a_id", "b_id").distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // batch q113 candidates on the SAME accumulated corpus
-      val batch = Similarity.rpLshPairs(
-          em.where(col("vec_id").between(1L, 60L)), "vec_id", "embedding")
-        .select("a_id", "b_id").distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(batch.nonEmpty, "fixture degenerate: no batch candidates")
-      assert(flagged == batch,
-        s"streamed gate != batch q113 candidates: " +
-          s"missing ${batch -- flagged}, extra ${flagged -- batch}")
-      // replay with nothing new adds nothing
-      run()
-      val again = spark.read.parquet(out)
-        .select("a_id", "b_id").distinct().count()
-      assert(again == flagged.size, "empty replay re-emitted pairs")
-      em.unpersist(); ()
+    import graft.operators.Similarity
+    val src = TestSpark.tmpDir("s49-src")
+    val out = TestSpark.tmpDir("s49-out") + "/pairs"
+    val chk = TestSpark.tmpDir("s49-chk")
+    val em = Tables.embeddings(spark, "/root/testdata/sf0.001").cache()
+    val vecSchema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    def ship(name: String, ids: Seq[Long]): Unit =
+      em.where(col("vec_id").isin(ids: _*))
+        .select(col("vec_id"), col("embedding"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$src/$name")
+    def run(): Unit = {
+      val in = spark.readStream.schema(vecSchema)
+        .option("recursiveFileLookup", "true").parquet(src)
+      val q = graft.streaming.StatefulOps
+        .vectorNearDupStreamTws(in, "vec_id", "embedding")
+        .toDF("a_id", "b_id")
+        .writeStream.outputMode("update")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.write.mode("append").parquet(out); ()
+        }
+        .option("checkpointLocation", chk)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
     }
+    // two batches, then a RESTART with a third — pairs must form
+    // against bucket state persisted across the restart
+    ship("f1", 1L to 25L)
+    run()
+    ship("f2", 26L to 40L)
+    run()
+    ship("f3", 41L to 60L)
+    run()
+    val flagged = spark.read.parquet(out)
+      .select("a_id", "b_id").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // batch q113 candidates on the SAME accumulated corpus
+    val batch = Similarity.rpLshPairs(
+        em.where(col("vec_id").between(1L, 60L)), "vec_id", "embedding")
+      .select("a_id", "b_id").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch.nonEmpty, "fixture degenerate: no batch candidates")
+    assert(flagged == batch,
+      s"streamed gate != batch q113 candidates: " +
+        s"missing ${batch -- flagged}, extra ${flagged -- batch}")
+    // replay with nothing new adds nothing
+    run()
+    val again = spark.read.parquet(out)
+      .select("a_id", "b_id").distinct().count()
+    assert(again == flagged.size, "empty replay re-emitted pairs")
+    em.unpersist(); ()
   }
 
   test("s48: streaming merge feed keeps the incremental IVF-PQ index fresh across restarts") {
