@@ -18,11 +18,19 @@ object Bench {
     // for session startup
     spark.range(1000).selectExpr("sum(id)").write.format("noop")
       .mode("overwrite").save()
+    // A table missing from the fixture dir is skipped; any other
+    // warm-up failure is printed, not swallowed, so it cannot hide
+    // behind a slow or failed first key.
+    val fs = new org.apache.hadoop.fs.Path(sfDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-      try Tables.t(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+        "lineitem", "documents", "embeddings", "events")
+      .filter(t => fs.exists(new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")))
+      .foreach { t =>
+        try Tables.t(spark, sfDir, t).count()
+        catch { case scala.util.control.NonFatal(e) =>
+          Console.err.println(s"[bench] warm-up of $t failed: $e") }
+      }
     // Median-of-N (default 3): single-shot host variance is 2-3x
     // (BASELINE.md records median-of-3) — medians are the comparable
     // figure.

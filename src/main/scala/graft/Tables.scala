@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-supplied star schema
   * (`TESTDATA.md:13-16`). Every query reads ONLY through here, so
@@ -9,10 +13,64 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale note: `spark.read.parquet` uses the vectorized columnar
   * reader; on a real cluster the same call distributes file splits
   * across executors — nothing here is local-mode specific.
+  *
+  * Schema cache. Inferring a parquet schema costs one Spark job per
+  * read (a footer-reading job, 30-60 ms plus scheduling), although a
+  * table's files rarely change between reads. `t` keeps, per session,
+  * one entry per table path: the path's file identity and the schema
+  * Spark inferred for it.
+  *  - Identity is the qualified path plus, for every file under it (the
+  *    file itself, or all files of a directory table, recursively,
+  *    markers included), its name, length and modification time, plus
+  *    the session's conf at read time (a conf such as
+  *    `spark.sql.parquet.binaryAsString` changes what inference yields).
+  *  - The first read of a file version runs Spark's own inference
+  *    (`spark.read.parquet(path)`, one job) and stores its schema; a
+  *    later read with the same identity is
+  *    `spark.read.schema(cached).parquet(path)` and runs no job. A
+  *    changed identity replaces the entry, so the cache holds one
+  *    schema per path per session.
+  *  - Entries belong to one session (sessions are weakly held), so
+  *    sessions with different parquet confs never share an entry.
+  *  - A rewrite that keeps every file's name and length inside one
+  *    modification-time tick is not seen. Local and HDFS mtimes are
+  *    millisecond-grained; object stores with coarse mtimes (seconds)
+  *    widen that window.
+  * A missing path is passed to Spark unchanged, so it fails as before.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private type Identity = (Seq[(String, Long, Long)], Map[String, String])
+
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    mutable.Map[String, (Identity, StructType)]]()
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) return spark.read.parquet(path.toString)
+    val key = fs.makeQualified(path).toString
+    val id: Identity = (files(fs, path), spark.conf.getAll)
+    val entries = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => mutable.HashMap.empty))
+    entries.synchronized(entries.get(key)) match {
+      case Some((`id`, schema)) => spark.read.schema(schema).parquet(path.toString)
+      case _ =>
+        val df = spark.read.parquet(path.toString)
+        entries.synchronized(entries(key) = (id, df.schema))
+        df
+    }
+  }
+
+  /** (name, length, modification time) of every file at or under `p`. */
+  private def files(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")

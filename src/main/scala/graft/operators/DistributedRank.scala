@@ -84,12 +84,17 @@ object DistributedRank {
     // partial aggregation; its prefix sums distribute over
     // (group, quantile-bucket) windows, so even a billion distinct
     // values per group never serialize onto one task.
-    // Pinned (round 16, guide §5): vc feeds the adaptive-probe and
-    // quantile-bounds DRIVER ACTIONS plus the prefix pipeline (twice
-    // on the bucketed path) — unpinned, each consumer re-ran the
-    // upstream aggregate over the caller's full frame.
+    // Pinned (round 16, guide §5) only when a DRIVER ACTION reads vc
+    // — the adaptive probe, the quantile bounds, the hot-tie split —
+    // and the plan reads it again (twice on the bucketed path):
+    // unpinned, each consumer re-ran the upstream aggregate over the
+    // caller's full frame. A declared-small domain runs none of those
+    // actions and vc has one consumer, so a pin would only add a
+    // cache-build stage and leave a persistent RDD behind.
+    val declaredSmall = adaptiveCut < 0
     val vc = dfK.groupBy(col("__pk"), col("__tie")).agg(count(lit(1)).as("__c"))
-    if (vc.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    if (!declaredSmall &&
+        vc.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       vc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE probe job decides both adaptive choices: the value-frame
     // size (small bounded domains — integer quantities, enum codes —
@@ -102,7 +107,6 @@ object DistributedRank {
     // to the prefix-window path; also asserts no tie needs salting),
     // adaptiveCut = 0 with hotTieCut = 0 declares it continuous and
     // un-skewed (straight to the bucketed path).
-    val declaredSmall = adaptiveCut < 0
     val (nVals, maxTie) =
       if (!declaredSmall && (adaptiveCut > 0 || hotTieCut > 0)) {
         val r = vc.agg(count(lit(1)), max("__c")).head()

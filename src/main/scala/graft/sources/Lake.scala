@@ -412,7 +412,8 @@ object Lake {
     //   deletes). Staged version-stamped inside the store and
     //   published after the pointer commit.
     changeDir.foreach { cd =>
-      val newT = spark.read.parquet(staged.toString)
+      // read back with the schema just written: no inference job
+      val newT = spark.read.schema(merged.schema).parquet(staged.toString)
       // ONE full-outer join computes the whole diff (round 15): both
       // sides pack their full row into a struct beside the join keys,
       // so old/new presence, the order-column comparison, AND both
