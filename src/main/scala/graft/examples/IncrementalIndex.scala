@@ -1,10 +1,10 @@
 package graft.examples
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Lake, Snapshot}
+import graft.sources.{ChangeFeed, Lake, Snapshot}
 
 /** Incremental INVERTED-INDEX maintenance from a merge change feed —
   * the text-search twin of [[IncrementalView]]: a token → document
@@ -41,13 +41,11 @@ import graft.sources.{Lake, Snapshot}
   * compaction cost is ∝ the index, paid every `compactAt` merges
   * instead of every merge.
   *
-  * Exactly-once across crashes: same protocol as the view — each
-  * segment carries the `_applied_upto_<k>` marker for the feed ids it
-  * folded, riding `Snapshot.commit`'s atomic pointer rename with the
-  * data it describes (the store watermark is the max over member
-  * markers, so compaction re-stamps the fold at the same watermark).
-  * A crash-replayed MERGE publishes an empty feed. See
-  * IncrementalView's scaladoc for the full argument.
+  * Exactly-once across crashes: the store is a
+  * [[graft.sources.ChangeFeed]] consumer — each segment carries the
+  * watermark of the feed ids it folded, riding the commit with its
+  * data, and compaction re-stamps the fold at the same watermark (the
+  * full argument is in ChangeFeed's scaladoc).
   *
   * Scale shape: the fold is explode → map-side-combinable aggregate
   * keyed on (token, docKey). On a real cluster the segments (and the
@@ -58,13 +56,6 @@ import graft.sources.{Lake, Snapshot}
   * over the probed terms only.
   */
 object IncrementalIndex {
-
-  private def appliedUpto(fs: FileSystem, store: Path): Long =
-    Snapshot.resolve(fs, store).getOrElse(Nil).flatMap { member =>
-      fs.listStatus(member).map(_.getPath.getName)
-        .filter(_.startsWith("_applied_upto_"))
-        .map(_.stripPrefix("_applied_upto_").toLong)
-    }.foldLeft(-1L)(math.max)
 
   /** Fold every unapplied feed entry's token deltas into a NEW
     * segment of the postings store; returns the new applied-upto id.
@@ -78,17 +69,10 @@ object IncrementalIndex {
     val store = new Path(indexDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = store.getFileSystem(conf)
-    val pending =
-      IncrementalView.pendingFeedIds(spark, indexDir, changeDir)
-    if (pending.isEmpty) return appliedUpto(fs, store)
-    val sign = when(col("_op").isin("insert", "update_postimage"), 1L)
-      .when(col("_op").isin("update_preimage", "delete"), -1L)
-      .otherwise(raise_error(concat(
-        lit("IncrementalIndex: feed entry without pre-images (_op="),
-        col("_op"),
-        lit(") — publish the feed with cdfPreImages = true"))))
-    val feed = spark.read.option("mergeSchema", "true")
-      .parquet(pending.map(k => s"$changeDir/merge=$k"): _*)
+    val pending = ChangeFeed.pending(spark, indexDir, changeDir)
+    if (pending.isEmpty) return ChangeFeed.appliedUpto(fs, store)
+    val sign = ChangeFeed.signedOp("IncrementalIndex")
+    val feed = ChangeFeed.read(spark, changeDir, pending)
     // the whole refresh: one diff-sized aggregate, zero store reads
     val deltas = feed
       .select((col("_op") +: keyCols.map(col)) :+
@@ -100,13 +84,12 @@ object IncrementalIndex {
     val carried = Snapshot.resolve(fs, store).getOrElse(Nil)
       .map(_.getName)
     val stageName = Snapshot.stageDirName(fs, store, "seg")
-    val staged = Snapshot.stagePath(store, stageName)
-    deltas.write.mode("overwrite").parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_${pending.max}")
-    val out = fs.create(marker, true); out.close()
+    deltas.write.mode("overwrite")
+      .parquet(Snapshot.stagePath(store, stageName).toString)
     // base pins the carried-member list: a racer's commit in between
     // would otherwise be silently dropped from this manifest
-    Snapshot.commit(fs, conf, store, carried :+ stageName, base = baseV)
+    ChangeFeed.commitFold(fs, conf, store, carried :+ stageName, stageName,
+      pending.max, base = baseV)
     Snapshot.vacuum(fs, store, keep = 2)
     if (carried.length + 1 >= compactAt) compact(spark, indexDir)
     pending.max
@@ -135,29 +118,24 @@ object IncrementalIndex {
     val baseV = Snapshot.currentVersion(fs, store).getOrElse(0L)
     val members = Snapshot.resolve(fs, store).getOrElse(Nil)
     if (members.length < 2) return
-    val upto = appliedUpto(fs, store)
+    val upto = ChangeFeed.appliedUpto(fs, store)
     val folded = read(spark, indexDir)
     val stageName = Snapshot.stageDirName(fs, store, "fold")
-    val staged = Snapshot.stagePath(store, stageName)
-    folded.write.mode("overwrite").parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_$upto")
-    val out = fs.create(marker, true); out.close()
-    Snapshot.commit(fs, conf, store, Seq(stageName), base = baseV)
+    folded.write.mode("overwrite")
+      .parquet(Snapshot.stagePath(store, stageName).toString)
+    ChangeFeed.commitFold(fs, conf, store, Seq(stageName), stageName, upto,
+      base = baseV)
     Snapshot.vacuum(fs, store, keep = 2)
   }
 
   /** The postings table (token, keyCols…, tf) — merge-on-read over
     * the segments: one multi-path scan + one grain-keyed sum (both
     * map-side combinable); postings whose signed total reached zero
-    * drop out. */
-  def read(spark: SparkSession, indexDir: String): DataFrame =
-    read(spark, indexDir, None)
-
-  /** [[read]] pinned to a specific committed snapshot version —
-    * the member a [[graft.sources.PublishSet]] manifest names (valid
-    * while the store's retention holds that version). */
+    * drop out. `at` pins a specific committed snapshot version — the
+    * member a [[graft.sources.PublishSet]] manifest names (valid while
+    * the store's retention holds that version). */
   def read(spark: SparkSession, indexDir: String,
-      at: Option[Long]): DataFrame = {
+      at: Option[Long] = None): DataFrame = {
     val store = new Path(indexDir)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val members = at match {
@@ -188,8 +166,7 @@ object IncrementalIndex {
   def refreshDocLens(spark: SparkSession, dlViewDir: String,
       changeDir: String, keyCols: Seq[String], tokens: Column): Long =
     IncrementalView.refresh(spark, dlViewDir, changeDir,
-      keyCols, Seq("n_toks"), Nil, Nil, Nil, None,
-      Seq("n_toks" -> size(tokens)))
+      keyCols, Seq("n_toks"), derived = Seq("n_toks" -> size(tokens)))
 
   /** BM25 retrieval OVER THE INDEX — continuous full-text search off
     * a CDC feed: every statistic the Robertson–Spärck Jones formula

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
-import graft.sources.Snapshot
+import graft.sources.{ChangeFeed, Snapshot}
 
 /** Incremental maintenance of the persisted IVF-PQ serving artifact —
   * [[IncrementalIndex]]'s ANN twin, closing the round-10 verdict's
@@ -52,11 +52,11 @@ import graft.sources.Snapshot
   * one's. [[compact]] bounds the segment count (auto past
   * `compactAt`), exactly the Lucene-segment/LSM shape.
   *
-  * Exactly-once across crashes: the IncrementalView/Index protocol
-  * verbatim — each segment carries `_applied_upto_<k>` riding
-  * `Snapshot.commit`'s atomic publish; a crash-replayed MERGE
-  * publishes an empty feed; a stranded staging dir is deleted and
-  * recomputed by `stageDirName`.
+  * Exactly-once across crashes: the codes store is a
+  * [[graft.sources.ChangeFeed]] consumer — each segment carries the
+  * watermark riding `Snapshot.commit`'s atomic publish (the full
+  * argument is in ChangeFeed's scaladoc); a stranded staging dir is
+  * deleted and recomputed by `stageDirName`.
   *
   * Rebuild cost honesty: geometry is frozen at bootstrap, so drift in
   * the corpus DISTRIBUTION (not size) degrades cell balance and
@@ -66,13 +66,6 @@ import graft.sources.Snapshot
 object IncrementalIvfPq {
 
   private def codesDir(dir: String) = s"$dir/codes"
-
-  private def appliedUpto(fs: FileSystem, store: Path): Long =
-    Snapshot.resolve(fs, store).getOrElse(Nil).flatMap { member =>
-      fs.listStatus(member).map(_.getPath.getName)
-        .filter(_.startsWith("_applied_upto_"))
-        .map(_.stripPrefix("_applied_upto_").toLong)
-    }.foldLeft(-1L)(math.max)
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -114,14 +107,12 @@ object IncrementalIvfPq {
     val conf = spark.sparkContext.hadoopConfiguration
     val baseV = Snapshot.currentVersion(fs, store).getOrElse(0L)
     val stageName = Snapshot.stageDirName(fs, store, "seg")
-    val staged = Snapshot.stagePath(store, stageName)
     Similarity.encodeCodes(corpus, cb, centroids, idCol, vecCol, m, dim / m)
       .withColumn("sign", lit(1L))
       .write.mode("overwrite").partitionBy("clabel")
-      .parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_$upto")
-    val mo = fs.create(marker, true); mo.close()
-    Snapshot.commit(fs, conf, store, Seq(stageName), base = baseV)
+      .parquet(Snapshot.stagePath(store, stageName).toString)
+    ChangeFeed.commitFold(fs, conf, store, Seq(stageName), stageName, upto,
+      base = baseV)
   }
 
   /** Fold every unapplied feed entry into a NEW diff-sized segment;
@@ -136,20 +127,13 @@ object IncrementalIvfPq {
     val store = new Path(codesDir(dir))
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = store.getFileSystem(conf)
-    val pending =
-      IncrementalView.pendingFeedIds(spark, codesDir(dir), changeDir)
-    if (pending.isEmpty) return appliedUpto(fs, store)
+    val pending = ChangeFeed.pending(spark, codesDir(dir), changeDir)
+    if (pending.isEmpty) return ChangeFeed.appliedUpto(fs, store)
     val (dim, m, _) = readMeta(spark, dir)
     val cb = spark.read.parquet(s"$dir/codebook")
     val cent = spark.read.parquet(s"$dir/centroids")
-    val sign = when(col("_op").isin("insert", "update_postimage"), 1L)
-      .when(col("_op").isin("update_preimage", "delete"), -1L)
-      .otherwise(raise_error(concat(
-        lit("IncrementalIvfPq: feed entry without pre-images (_op="),
-        col("_op"),
-        lit(") — publish the feed with cdfPreImages = true"))))
-    val feed = spark.read.option("mergeSchema", "true")
-      .parquet(pending.map(k => s"$changeDir/merge=$k"): _*)
+    val sign = ChangeFeed.signedOp("IncrementalIvfPq")
+    val feed = ChangeFeed.read(spark, changeDir, pending)
     // telescope FIRST: per (id, vector), chained pre/post images over
     // the pending window cancel exactly, so at most the first
     // pre-image and last post-image per id reach the encode stage
@@ -180,10 +164,9 @@ object IncrementalIvfPq {
     if (deltas.isEmpty) fs.mkdirs(staged)
     else deltas.write.mode("overwrite").partitionBy("clabel")
       .parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_${pending.max}")
-    val out = fs.create(marker, true); out.close()
     // base pins the carried-segment list against a racing refresh
-    Snapshot.commit(fs, conf, store, carried :+ stageName, base = baseV)
+    ChangeFeed.commitFold(fs, conf, store, carried :+ stageName, stageName,
+      pending.max, base = baseV)
     Snapshot.vacuum(fs, store, keep = 2)
     if (carried.length + 1 >= compactAt) compact(spark, dir)
     pending.max
@@ -214,15 +197,13 @@ object IncrementalIvfPq {
     val baseV = Snapshot.currentVersion(fs, store).getOrElse(0L)
     val members = Snapshot.resolve(fs, store).getOrElse(Nil)
     if (members.length < 2) return
-    val upto = appliedUpto(fs, store)
+    val upto = ChangeFeed.appliedUpto(fs, store)
     val folded = foldSegments(spark, members.map(_.toString), None)
     val stageName = Snapshot.stageDirName(fs, store, "fold")
-    val staged = Snapshot.stagePath(store, stageName)
     folded.write.mode("overwrite").partitionBy("clabel")
-      .parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_$upto")
-    val out = fs.create(marker, true); out.close()
-    Snapshot.commit(fs, conf, store, Seq(stageName), base = baseV)
+      .parquet(Snapshot.stagePath(store, stageName).toString)
+    ChangeFeed.commitFold(fs, conf, store, Seq(stageName), stageName, upto,
+      base = baseV)
     Snapshot.vacuum(fs, store, keep = 2)
   }
 
@@ -333,7 +314,7 @@ object IncrementalIvfPq {
       iters: Int = 0): Unit = {
     val store = new Path(codesDir(dir))
     val fs = fsOf(spark, store)
-    val upto = appliedUpto(fs, store)
+    val upto = ChangeFeed.appliedUpto(fs, store)
     val (dim, m, kc) = readMeta(spark, dir)
     // the natural seed for the new centroids IS the stale frame at
     // $dir/centroids (Lloyd refinement starts from it) — and

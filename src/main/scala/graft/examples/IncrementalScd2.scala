@@ -1,10 +1,10 @@
 package graft.examples
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Lake, Snapshot}
+import graft.sources.{ChangeFeed, Snapshot}
 
 /** Incremental SCD TYPE-2 history maintenance from a merge change
   * feed — the warehouse-dimension consumer of the CDC lake: where
@@ -51,18 +51,12 @@ import graft.sources.{Lake, Snapshot}
   * valid_to range (they arrive in id order, so that layout is free),
   * making as-of reads range-prunable.
   *
-  * Exactly-once across crashes: the marker rides the commit with the
-  * data (IncrementalView's argument verbatim); a crash-replayed MERGE
-  * publishes an empty feed.
+  * Exactly-once across crashes: the store is a
+  * [[graft.sources.ChangeFeed]] consumer — the watermark marker rides
+  * the commit with the data (the full argument is in ChangeFeed's
+  * scaladoc).
   */
 object IncrementalScd2 {
-
-  private def appliedUpto(fs: FileSystem, store: Path): Long =
-    Snapshot.resolve(fs, store).getOrElse(Nil).flatMap { member =>
-      fs.listStatus(member).map(_.getPath.getName)
-        .filter(_.startsWith("_applied_upto_"))
-        .map(_.stripPrefix("_applied_upto_").toLong)
-    }.foldLeft(-1L)(math.max)
 
   private def curMember(members: Seq[Path]): Option[Path] =
     members.find(_.getName.endsWith("-cur"))
@@ -74,9 +68,8 @@ object IncrementalScd2 {
       keyCols: Seq[String], attrCols: Seq[String]): Long = {
     val store = new Path(histDir)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending =
-      IncrementalView.pendingFeedIds(spark, histDir, changeDir)
-    if (pending.isEmpty) return appliedUpto(fs, store)
+    val pending = ChangeFeed.pending(spark, histDir, changeDir)
+    if (pending.isEmpty) return ChangeFeed.appliedUpto(fs, store)
     pending.foreach(k => applyEntry(spark, store, changeDir, k,
       keyCols, attrCols))
     pending.max
@@ -100,7 +93,7 @@ object IncrementalScd2 {
       attrCols: Seq[String]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = store.getFileSystem(conf)
-    val entry = spark.read.parquet(s"$changeDir/merge=$k")
+    val entry = spark.read.parquet(ChangeFeed.entry(changeDir, k))
     val badOp = entry.select("_op").where(!col("_op").isin(
       "insert", "update_preimage", "update_postimage", "delete"))
     require(badOp.isEmpty,
@@ -137,31 +130,24 @@ object IncrementalScd2 {
     val carried = members.map(_.getName)
       .filterNot(_.endsWith("-cur"))
     val curName = Snapshot.stageDirName(fs, store, "cur")
-    val curStaged = Snapshot.stagePath(store, curName)
-    newCur.write.mode("overwrite").parquet(curStaged.toString)
-    val marker = new Path(curStaged, s"_applied_upto_$k")
-    val out = fs.create(marker, true); out.close()
+    newCur.write.mode("overwrite")
+      .parquet(Snapshot.stagePath(store, curName).toString)
     val segName = closedSeg.flatMap { seg =>
       val s = seg.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         if (s.isEmpty) None
         else {
-          val name = s"${curName.stripSuffix("-cur")}-closed"
-          // clear BOTH stranded forms a crashed attempt can leave
-          // (staged, or unhidden-but-uncommitted) — the same sweep
-          // stageDirName does for the cur member
-          val staged = Snapshot.stagePath(store, name)
-          Seq(new Path(store, name), staged)
-            .foreach(p => if (fs.exists(p)) fs.delete(p, true))
-          s.write.mode("overwrite").parquet(staged.toString)
+          val name = Snapshot.stageDirName(fs, store, "closed")
+          s.write.mode("overwrite")
+            .parquet(Snapshot.stagePath(store, name).toString)
           Some(name)
         }
       } finally { s.unpersist(); () }
     }
     // base pins the carried closed-segment list against a racer
-    Snapshot.commit(fs, conf, store, carried ++ segName :+ curName,
-      base = baseV)
+    ChangeFeed.commitFold(fs, conf, store, carried ++ segName :+ curName,
+      curName, k, base = baseV)
     Snapshot.vacuum(fs, store, keep = 2)
   }
 
@@ -189,7 +175,7 @@ object IncrementalScd2 {
     val baseV = Snapshot.currentVersion(fs, store).getOrElse(0L)
     val members = Snapshot.resolve(fs, store).getOrElse(Nil)
     require(members.nonEmpty, s"no history at $histDir")
-    val upto = appliedUpto(fs, store)
+    val upto = ChangeFeed.appliedUpto(fs, store)
     val hasTrace = !read(spark, histDir).where(cond).isEmpty
     if (!hasTrace) return false
     val newMembers = scala.collection.mutable.Buffer[String]()
@@ -198,8 +184,6 @@ object IncrementalScd2 {
       val staged = Snapshot.stagePath(store, curName)
       spark.read.option("mergeSchema", "true").parquet(cur.toString)
         .where(!cond).write.mode("overwrite").parquet(staged.toString)
-      val marker = new Path(staged, s"_applied_upto_$upto")
-      val out = fs.create(marker, true); out.close()
       newMembers += curName
     }
     val closedDirs = members.filterNot(_.getName.endsWith("-cur"))
@@ -214,7 +198,8 @@ object IncrementalScd2 {
       }
     }
     require(newMembers.nonEmpty, s"purge would empty the history at $histDir")
-    Snapshot.commit(fs, conf, store, newMembers.toSeq, base = baseV)
+    ChangeFeed.commitFold(fs, conf, store, newMembers.toSeq,
+      newMembers.head, upto, base = baseV)
     Snapshot.vacuum(fs, store, keep = 1)
     true
   }

@@ -1,10 +1,10 @@
 package graft.examples
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Lake, Snapshot}
+import graft.sources.{ChangeFeed, Lake, Snapshot}
 
 /** Incremental MATERIALIZED-VIEW maintenance from a merge change feed
   * — the consumer the pre-image CDF shape
@@ -31,16 +31,10 @@ import graft.sources.{Lake, Snapshot}
   * the base table on shrink; they are exactly what this consumer does
   * NOT claim.)
   *
-  * Exactly-once across crashes: the view store remembers the highest
-  * applied feed id INSIDE each version's data dir (an
-  * `_applied_upto_<k>` marker file written into the STAGED dir, so it
-  * rides `Snapshot.commit`'s atomic pointer rename with the data it
-  * describes). A refresh crash before the commit strands an invisible
-  * staging dir (next refresh deletes it and recomputes from the same
-  * applied-upto — same deltas, same result); after the commit, the
-  * marker has already advanced and a re-run applies nothing. A
-  * crash-replayed MERGE publishes an empty feed (no new `merge=` dir),
-  * so the view sees each logical change exactly once end-to-end.
+  * Exactly-once across crashes: the view store is a
+  * [[graft.sources.ChangeFeed]] consumer — its applied-upto watermark
+  * rides each version's commit with the data it describes (the full
+  * argument is in ChangeFeed's scaladoc).
   *
   * Scale shape: deltas aggregate feed rows (map-side combinable,
   * keyed on the group); the view join is group-keyed over two
@@ -49,102 +43,57 @@ import graft.sources.{Lake, Snapshot}
   */
 object IncrementalView {
 
-  private def appliedUpto(fs: FileSystem, view: Path): Long =
-    Snapshot.resolve(fs, view).getOrElse(Nil).flatMap { member =>
-      fs.listStatus(member).map(_.getPath.getName)
-        .filter(_.startsWith("_applied_upto_"))
-        .map(_.stripPrefix("_applied_upto_").toLong)
-    }.foldLeft(-1L)(math.max)
-
-  /** Feed ids not yet folded into the view (ascending). */
-  def pendingFeedIds(spark: SparkSession, viewDir: String,
-      changeDir: String): Seq[Long] = {
-    val view = new Path(viewDir)
-    val cd = new Path(changeDir)
-    val fs = view.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val upto = appliedUpto(fs, view)
-    if (!fs.exists(cd)) return Nil
-    fs.listStatus(cd).map(_.getPath.getName)
-      .filter(_.startsWith("merge="))
-      .map(_.stripPrefix("merge=").toLong)
-      .filter(_ > upto).sorted.toSeq
-  }
-
   /** Fold every unapplied feed entry into the view store; returns the
-    * new applied-upto id (unchanged if the feed had nothing new). */
-  def refresh(spark: SparkSession, viewDir: String, changeDir: String,
-      groupCols: Seq[String], sumCols: Seq[String]): Long =
-    refresh(spark, viewDir, changeDir, groupCols, sumCols, Nil, None)
-
-  /** `refresh` with MAX columns — the honest treatment of a
-    * NON-subtractable aggregate. Grows fold from the feed like any
-    * delta (new max = greatest(old max, max of post-images)); a
-    * SHRINK — a pre-image equal to the group's current max leaving,
-    * with no grow covering it — cannot be answered from the feed, so
-    * exactly those groups recompute their max from `baseDir` (the
-    * merged base store), filtered to the affected group set. Cost:
-    * zero base reads while maxes only grow; one group-pruned base
-    * aggregate when a max actually leaves.
+    * new applied-upto id (unchanged if the feed had nothing new).
     *
-    * Max entries fold ONE AT A TIME (unlike the abelian count/sum
-    * path, which folds every pending entry in one aggregate): within
-    * a multi-entry window an insert's post-image can be superseded by
-    * a later entry's update (insert x=50, then update to 1 — a
-    * combined fold would see gmax=50 and keep a phantom max). A
-    * single merge diff carries each key at most once, so per-entry
-    * folding is sound. During a multi-entry catch-up the intermediate
-    * committed versions may transiently reflect the NEWER base on a
-    * recompute; the final (caught-up) version is exact — the
-    * single-writer, refresh-after-merge discipline every consumer of
-    * this store already follows. */
+    * `m2Cols` are SECOND-MOMENT columns: each keeps `sumsq_<c>` =
+    * Σ sign·c² next to `sum_<c>` and the group count — the abelian
+    * moment TRIPLE from which avg / variance / stddev derive at READ
+    * time ([[statsFrom]]). A signed square commutes exactly like a
+    * signed sum, so mean/spread views need ZERO base reads ever —
+    * there is no shrink case: a leaving row subtracts its own square.
+    * Keep the measure column integral (cents, bytes, tokens) and the
+    * stored moments stay EXACT; only the derived stats are
+    * floating-point.
+    *
+    * `maxCols` / `minCols` are the honest treatment of a
+    * NON-subtractable aggregate. Grows fold from the feed like any
+    * delta (new max = greatest(old max, max of post-images); min is
+    * the exact mirror); a SHRINK — a pre-image equal to the group's
+    * current champion leaving, with no grow covering it — cannot be
+    * answered from the feed, so exactly those groups recompute their
+    * extreme from `baseDir` (the merged base store, required with
+    * either), filtered to the affected group set. Cost: zero base
+    * reads while extremes only grow; one group-pruned base aggregate
+    * when a champion actually leaves. Extreme entries fold ONE AT A
+    * TIME (unlike the abelian count/sum path, which folds every
+    * pending entry in one aggregate): within a multi-entry window an
+    * insert's post-image can be superseded by a later entry's update
+    * (insert x=50, then update to 1 — a combined fold would see
+    * gmax=50 and keep a phantom max). A single merge diff carries each
+    * key at most once, so per-entry folding is sound. During a
+    * multi-entry catch-up the intermediate committed versions may
+    * transiently reflect the NEWER base on a recompute; the final
+    * (caught-up) version is exact — the single-writer,
+    * refresh-after-merge discipline every consumer of this store
+    * already follows.
+    *
+    * `derived` computes extra columns on every feed row before the
+    * fold — the TIME-BUCKETED / windowed view shape (e.g. `"month" →
+    * year($ts)*100 + month($ts)`), and `groupCols` may name them.
+    * Because pre- and post-images both carry the FULL row, an update
+    * that moves a row across buckets (a backdated correction crossing
+    * a month boundary) is just a group migration — −1 on the old
+    * bucket's derived value, +1 on the new one — with no special
+    * casing. The same derivation is applied to the base store on a
+    * max/min shrink recompute, so extremes work per bucket too.
+    * Derivations must be DETERMINISTIC row-functions (they re-evaluate
+    * on every fold). */
   def refresh(spark: SparkSession, viewDir: String, changeDir: String,
       groupCols: Seq[String], sumCols: Seq[String],
-      maxCols: Seq[String], baseDir: Option[String]): Long =
-    refresh(spark, viewDir, changeDir, groupCols, sumCols, maxCols, Nil,
-      baseDir)
-
-  /** `refresh` with MAX and MIN columns (min is the exact mirror — the
-    * champion is the LOWEST value, a grow is a lower post-image, a
-    * leaving champion triggers the same group-pruned base
-    * recompute). */
-  def refresh(spark: SparkSession, viewDir: String, changeDir: String,
-      groupCols: Seq[String], sumCols: Seq[String],
-      maxCols: Seq[String], minCols: Seq[String],
-      baseDir: Option[String]): Long =
-    refresh(spark, viewDir, changeDir, groupCols, sumCols, Nil, maxCols,
-      minCols, baseDir)
-
-  /** Full form, adding SECOND-MOMENT columns (`m2Cols`): each keeps
-    * `sumsq_<c>` = Σ sign·c² next to `sum_<c>` and the group count —
-    * the abelian moment TRIPLE from which avg / variance / stddev
-    * derive at READ time ([[statsFrom]]). A signed square commutes
-    * exactly like a signed sum, so mean/spread views need ZERO base
-    * reads ever — unlike max/min there is no shrink case: a leaving
-    * row subtracts its own square. Keep the measure column integral
-    * (cents, bytes, tokens) and the stored moments stay EXACT; only
-    * the derived stats are floating-point. */
-  def refresh(spark: SparkSession, viewDir: String, changeDir: String,
-      groupCols: Seq[String], sumCols: Seq[String], m2Cols: Seq[String],
-      maxCols: Seq[String], minCols: Seq[String],
-      baseDir: Option[String]): Long =
-    refresh(spark, viewDir, changeDir, groupCols, sumCols, m2Cols,
-      maxCols, minCols, baseDir, Nil)
-
-  /** Full form with DERIVED group columns — the TIME-BUCKETED /
-    * windowed view shape: `derived` computes extra columns on every
-    * feed row before the fold (e.g. `"month" → year($ts)*100 +
-    * month($ts)`), and `groupCols` may name them. Because pre- and
-    * post-images both carry the FULL row, an update that moves a row
-    * across buckets (a backdated correction crossing a month
-    * boundary) is just a group migration — −1 on the old bucket's
-    * derived value, +1 on the new one — with no special casing. The
-    * same derivation is applied to the base store on a max/min shrink
-    * recompute, so extremes work per bucket too. Derivations must be
-    * DETERMINISTIC row-functions (they re-evaluate on every fold). */
-  def refresh(spark: SparkSession, viewDir: String, changeDir: String,
-      groupCols: Seq[String], sumCols: Seq[String], m2Cols: Seq[String],
-      maxCols: Seq[String], minCols: Seq[String],
-      baseDir: Option[String], derived: Seq[(String, Column)]): Long = {
+      m2Cols: Seq[String] = Nil, maxCols: Seq[String] = Nil,
+      minCols: Seq[String] = Nil, baseDir: Option[String] = None,
+      derived: Seq[(String, Column)] = Nil): Long = {
     val exts = maxCols.map(Ext(_, isMax = true)) ++
       minCols.map(Ext(_, isMax = false))
     require(exts.isEmpty || baseDir.isDefined,
@@ -152,8 +101,8 @@ object IncrementalView {
     val sums = sumSpecs(sumCols, m2Cols)
     val view = new Path(viewDir)
     val fs = view.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = pendingFeedIds(spark, viewDir, changeDir)
-    if (pending.isEmpty) return appliedUpto(fs, view)
+    val pending = ChangeFeed.pending(spark, viewDir, changeDir)
+    if (pending.isEmpty) return ChangeFeed.appliedUpto(fs, view)
     if (exts.isEmpty) applyEntries(spark, view, changeDir, pending,
       groupCols, sums, Nil, None, derived)
     else pending.foreach(k => applyEntries(spark, view, changeDir, Seq(k),
@@ -161,7 +110,7 @@ object IncrementalView {
     pending.max
   }
 
-  /** [[refresh]] (full form) with RETRY-REBASE
+  /** [[refresh]] with RETRY-REBASE
     * ([[graft.sources.Snapshot.retrying]], round 13): on losing a
     * commit race to another writer of the VIEW store, the refresh
     * simply re-runs — it re-resolves the store's version, carried
@@ -222,13 +171,8 @@ object IncrementalView {
     require(Snapshot.currentVersion(fs, view).isEmpty,
       s"IncrementalView.bootstrap: $viewDir already holds a view — " +
         "delete it first to rebuild")
-    val cd = new Path(changeDir)
-    val upto =
-      if (!fs.exists(cd)) -1L
-      else fs.listStatus(cd).map(_.getPath.getName)
-        .filter(_.startsWith("merge="))
-        .map(_.stripPrefix("merge=").toLong)
-        .foldLeft(-1L)(math.max)
+    val upto = ChangeFeed.ids(fs, new Path(changeDir)).lastOption
+      .getOrElse(-1L)
     val exts = maxCols.map(Ext(_, isMax = true)) ++
       minCols.map(Ext(_, isMax = false))
     val sums = sumSpecs(sumCols, m2Cols)
@@ -241,11 +185,10 @@ object IncrementalView {
           exts.map(e => e.fold(col(e.c)).as(e.out)): _*)
     val baseV = Snapshot.currentVersion(fs, view).getOrElse(0L)
     val stageName = Snapshot.stageDirName(fs, view, "view")
-    val staged = Snapshot.stagePath(view, stageName)
-    agg.write.mode("overwrite").parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_$upto")
-    val out = fs.create(marker, true); out.close()
-    Snapshot.commit(fs, conf, view, Seq(stageName), base = baseV)
+    agg.write.mode("overwrite")
+      .parquet(Snapshot.stagePath(view, stageName).toString)
+    ChangeFeed.commitFold(fs, conf, view, Seq(stageName), stageName, upto,
+      base = baseV)
     upto
   }
 
@@ -268,20 +211,8 @@ object IncrementalView {
       derived: Seq[(String, Column)] = Nil): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = view.getFileSystem(conf)
-    val sign = when(col("_op").isin("insert", "update_postimage"), 1L)
-      .when(col("_op").isin("update_preimage", "delete"), -1L)
-      .otherwise(raise_error(concat(
-        lit("IncrementalView: feed entry without pre-images (_op="),
-        col("_op"),
-        lit(") — publish the feed with cdfPreImages = true"))))
-    // mergeSchema: feed entries straddling a base-table schema
-    // evolution disagree on columns — without it the multi-dir read
-    // takes one file's schema and silently drops the others' new
-    // columns (a null sum contribution is correct; a dropped column
-    // is not)
-    val feed = derived.foldLeft(
-      spark.read.option("mergeSchema", "true").parquet(
-        ids.map(k => s"$changeDir/merge=$k"): _*)) {
+    val sign = ChangeFeed.signedOp("IncrementalView")
+    val feed = derived.foldLeft(ChangeFeed.read(spark, changeDir, ids)) {
       case (df, (n, e)) => df.withColumn(n, e)
     }
     val grow = (e: Ext) =>
@@ -392,16 +323,12 @@ object IncrementalView {
                     .otherwise(col(e.out)).as(e.out)))): _*)
         }
       }
-    // stage HIDDEN, stamp the applied-upto marker INSIDE the staged
-    // dir, commit with the atomic pointer rename — marker and data
-    // are inseparable by construction
     val baseV = Snapshot.currentVersion(fs, view).getOrElse(0L)
     val stageName = Snapshot.stageDirName(fs, view, "view")
-    val staged = Snapshot.stagePath(view, stageName)
-    next.write.mode("overwrite").parquet(staged.toString)
-    val marker = new Path(staged, s"_applied_upto_${ids.max}")
-    val out = fs.create(marker, true); out.close()
-    Snapshot.commit(fs, conf, view, Seq(stageName), base = baseV)
+    next.write.mode("overwrite")
+      .parquet(Snapshot.stagePath(view, stageName).toString)
+    ChangeFeed.commitFold(fs, conf, view, Seq(stageName), stageName,
+      ids.max, base = baseV)
     Snapshot.vacuum(fs, view, keep = 2)
     } finally { pinned.foreach(_.unpersist()); () }
   }
@@ -487,7 +414,7 @@ object IncrementalView {
       .map(_.getPath.getName)
       .filter(_.startsWith(s"$partCol=")).sorted.toSeq
     val pending = parts.filter(p =>
-      pendingFeedIds(spark, s"$viewRoot/$p", s"$changeRoot/$p").nonEmpty)
+      ChangeFeed.pending(spark, s"$viewRoot/$p", s"$changeRoot/$p").nonEmpty)
     if (pending.isEmpty) return Nil
     // sub-views are independent stores (own dir, own watermark), so
     // their refreshes run CONCURRENTLY — each is a couple of small
@@ -504,47 +431,26 @@ object IncrementalView {
         Future.sequence(pending.map(p => Future {
           Snapshot.retrying(attempts) {
             refresh(spark, s"$viewRoot/$p", s"$changeRoot/$p",
-              groupCols, sumCols, m2Cols, Nil, Nil, None)
+              groupCols, sumCols, m2Cols = m2Cols)
           }
         })), Duration.Inf)
       pending
     } finally pool.shutdown()
   }
 
-  /** Feed RETENTION for this consumer: delete `merge=<k>` entries the
-    * view has already folded (k ≤ its applied-upto) — the sweep that
-    * keeps a long-lived feed from growing one directory per merge
-    * forever. Two deliberate rules:
-    *
-    *  - the HIGHEST-id entry present always survives, even when
-    *    consumed. Ids are VERSION-keyed (round 14 —
-    *    `Lake.publishCdfVersioned`), so a full sweep can no longer
-    *    RESET the sequence; the retained entry is kept as the feed's
-    *    on-disk high-water anchor: an operator inspecting the feed
-    *    dir sees where the sequence stands without resolving every
-    *    consumer watermark, and any legacy listing-derived tooling
-    *    stays monotone. Bounded cost: one extra entry on disk.
-    *  - the applied-upto is THIS view's; with several independent
-    *    consumers on one feed, sweep at min(applied-upto) — the
-    *    caller coordinates (same single-writer discipline as the
-    *    merge target itself).
-    *
-    * Returns the number of entries deleted. */
+  /** Feed RETENTION for this consumer: delete the feed entries the
+    * view has already folded ([[graft.sources.ChangeFeed.sweep]] at
+    * its applied-upto — the highest-id entry always survives) — the
+    * sweep that keeps a long-lived feed from growing one directory per
+    * merge forever. The applied-upto is THIS view's; with several
+    * independent consumers on one feed, sweep at min(applied-upto) —
+    * [[vacuumFeedMinWatermark]]. Returns the number of entries
+    * deleted. */
   def vacuumConsumedFeed(spark: SparkSession, viewDir: String,
       changeDir: String): Int = {
     val view = new Path(viewDir)
-    val cd = new Path(changeDir)
     val fs = view.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val upto = appliedUpto(fs, view)
-    if (upto < 0 || !fs.exists(cd)) return 0
-    val ids = fs.listStatus(cd).map(_.getPath.getName)
-      .filter(_.startsWith("merge="))
-      .map(_.stripPrefix("merge=").toLong)
-    if (ids.isEmpty) return 0
-    val keep = ids.max
-    val victims = ids.filter(k => k <= upto && k != keep)
-    victims.foreach(k => fs.delete(new Path(cd, s"merge=$k"), true))
-    victims.length
+    ChangeFeed.sweep(fs, new Path(changeDir), ChangeFeed.appliedUpto(fs, view))
   }
 
   // ---- multi-consumer feed retention (round 10) ----------------------
@@ -560,8 +466,8 @@ object IncrementalView {
   // which some filesystems refuse), a consumer's watermark is the MAX
   // over its files (watermarks are monotone), and stale smaller-k
   // files are swept lazily on the next record. `_consumers` never
-  // collides with feed entries (every feed reader and the publisher
-  // `Lake.publishCdfVersioned` filter on the `merge=` prefix).
+  // collides with feed entries (`ChangeFeed.ids` lists entries by
+  // their name prefix).
 
   private val consumerIdOk = "[A-Za-z0-9_-]+".r
 
@@ -602,7 +508,8 @@ object IncrementalView {
     val fs = view.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a view with no store yet records -1: registered, nothing applied
     // — it holds the sweep floor down until its first refresh
-    recordConsumer(spark, changeDir, consumerId, appliedUpto(fs, view))
+    recordConsumer(spark, changeDir, consumerId,
+      ChangeFeed.appliedUpto(fs, view))
   }
 
   /** Every registered consumer's watermark (consumer id → max upto). */
@@ -623,27 +530,17 @@ object IncrementalView {
   }
 
   /** Sweep feed entries every registered consumer has applied:
-    * delete `merge=<k>` with k ≤ min over consumer watermarks —
-    * always retaining the highest id present (the high-water-anchor
-    * rule, same as [[vacuumConsumedFeed]]). A feed with
+    * [[graft.sources.ChangeFeed.sweep]] at the min over consumer
+    * watermarks (the highest id present always survives). A feed with
     * NO registered consumers sweeps nothing (unknown lag is assumed
     * infinite — the safe default). Returns entries deleted. */
   def vacuumFeedMinWatermark(spark: SparkSession,
       changeDir: String): Int = {
     val marks = consumerWatermarks(spark, changeDir)
     if (marks.isEmpty) return 0
-    val floor = marks.values.min
     val cd = new Path(changeDir)
     val fs = cd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cd)) return 0
-    val ids = fs.listStatus(cd).map(_.getPath.getName)
-      .filter(_.startsWith("merge="))
-      .map(_.stripPrefix("merge=").toLong)
-    if (ids.isEmpty) return 0
-    val keep = ids.max
-    val victims = ids.filter(k => k <= floor && k != keep)
-    victims.foreach(k => fs.delete(new Path(cd, s"merge=$k"), true))
-    victims.length
+    ChangeFeed.sweep(fs, cd, marks.values.min)
   }
 
   /** Partitioned twins of the registry: each partition's feed keeps
@@ -677,35 +574,17 @@ object IncrementalView {
       .sum
   }
 
-  /** Partitioned twin: sweep each partition's feed against its own
-    * sub-view watermark. */
-  def vacuumConsumedFeedPartitioned(spark: SparkSession, viewRoot: String,
-      changeRoot: String, partCol: String): Int = {
-    val cr = new Path(changeRoot)
-    val fs = cr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cr)) return 0
-    fs.listStatus(cr).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol="))
-      .map(p => vacuumConsumedFeed(spark, s"$viewRoot/$p", s"$changeRoot/$p"))
-      .sum
-  }
-
   /** The whole-lake view from the per-partition sub-views: union and
     * re-aggregate — counts and sums add across partitions, so this is
     * a bounded (#partitions × #groups rows) aggregate, never a base
-    * scan. */
-  def readPartitioned(spark: SparkSession, viewRoot: String,
-      groupCols: Seq[String], sumCols: Seq[String]): DataFrame =
-    readPartitioned(spark, viewRoot, groupCols, sumCols, Nil)
-
-  /** `readPartitioned` with second-moment columns: `sumsq_<c>` adds
-    * across sub-views exactly like `sum_<c>` (both abelian), so the
+    * scan. Second-moment columns (`m2Cols`): `sumsq_<c>` adds across
+    * sub-views exactly like `sum_<c>` (both abelian), so the
     * whole-lake moment triple comes out of the same bounded
     * re-aggregate — compose with [[statsFrom]] for lake-wide
     * avg/stddev. */
   def readPartitioned(spark: SparkSession, viewRoot: String,
       groupCols: Seq[String], sumCols: Seq[String],
-      m2Cols: Seq[String]): DataFrame = {
+      m2Cols: Seq[String] = Nil): DataFrame = {
     val vr = new Path(viewRoot)
     val fs = vr.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val subs = fs.listStatus(vr).filter(_.isDirectory).map(_.getPath)

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Lake, Snapshot}
+import graft.sources.{ChangeFeed, Lake, Snapshot}
 
 /** COMPOSED GDPR key-purge (round 18 — VERDICT r10 item 3): a
   * right-to-be-forgotten delete is categorically stronger than a CDC
@@ -38,7 +38,7 @@ import graft.sources.{Lake, Snapshot}
   * two-rename swap with a recovery preamble, so a crash at any point
   * re-runs to completion. Replay safety is inherited: a re-merged
   * tombstone publishes an empty feed, and every consumer watermark
-  * already covers the purge's entries.
+  * ([[graft.sources.ChangeFeed]]) already covers the purge's entries.
   *
   * What needs NO scrub, and why: CMS cells, HLL registers, and
   * fixed-grid histogram bins store HASHES/counts, never key bytes —
@@ -86,22 +86,13 @@ object KeyPurge {
       return false
     }
     val baseV = Snapshot.currentVersion(fs, store).getOrElse(0L)
-    val members = Snapshot.resolve(fs, store).getOrElse(Nil)
-    val upto = members.flatMap { m =>
-      fs.listStatus(m).map(_.getPath.getName)
-        .filter(_.startsWith("_applied_upto_"))
-        .map(_.stripPrefix("_applied_upto_").toLong)
-    }.foldLeft(-1L)(math.max)
+    val upto = ChangeFeed.appliedUpto(fs, store)
     val liveFlats = Snapshot.liveFlats(fs, store)
     val name = Snapshot.stageDirName(fs, store, "purge")
-    val staged = Snapshot.stagePath(store, name)
-    cur.where(!cond).write.mode("overwrite").parquet(staged.toString)
-    if (upto >= 0L) {
-      val marker = new Path(staged, s"_applied_upto_$upto")
-      val out = fs.create(marker, true); out.close()
-    }
-    Snapshot.commit(fs, conf, store, Seq(name),
-      consumed = liveFlats.map(_.getName), base = baseV)
+    cur.where(!cond).write.mode("overwrite")
+      .parquet(Snapshot.stagePath(store, name).toString)
+    ChangeFeed.commitFold(fs, conf, store, Seq(name), name, upto,
+      base = baseV, consumed = liveFlats.map(_.getName))
     Snapshot.vacuum(fs, store, keep = 1)
     // vacuum defers the CURRENT version's consumed flats by one
     // version (reader retention) — a purge overrides retention by
@@ -110,7 +101,7 @@ object KeyPurge {
     true
   }
 
-  /** Scrub the change feed: for every `merge=<k>` entry still on
+  /** Scrub the change feed: for every [[ChangeFeed]] entry still on
     * disk, rewrite it minus `cond` via a staged two-rename swap
     * (recovery preamble completes a crashed swap; entry ids and thus
     * the id watermark are preserved — an emptied entry keeps its dir
@@ -124,27 +115,25 @@ object KeyPurge {
     val fs = fsOf(spark, cd)
     if (!fs.exists(cd)) return 0
     consumers.foreach { c =>
-      val pending = IncrementalView.pendingFeedIds(spark, c, changeDir)
+      val pending = ChangeFeed.pending(spark, c, changeDir)
       require(pending.isEmpty,
         s"scrubFeed: consumer $c has unapplied feed entries $pending — refresh it first")
     }
     // recovery preamble: a crashed swap leaves _purge_stage_<k> with
-    // merge=<k> either present (stale stage — rebuild) or renamed
-    // away (complete the swap)
+    // entry k either present (stale stage — rebuild) or renamed away
+    // (complete the swap)
     fs.listStatus(cd).map(_.getPath).filter(
         _.getName.startsWith("_purge_stage_")).foreach { st =>
-      val k = st.getName.stripPrefix("_purge_stage_")
-      val fin = new Path(cd, s"merge=$k")
+      val k = st.getName.stripPrefix("_purge_stage_").toLong
+      val fin = new Path(ChangeFeed.entry(changeDir, k))
       if (fs.exists(fin)) fs.delete(st, true)
       else require(fs.rename(st, fin), s"scrubFeed recovery failed: $st")
     }
-    val entries = fs.listStatus(cd).map(_.getPath)
-      .filter(_.getName.startsWith("merge=")).sortBy(_.getName)
     var rewritten = 0
-    entries.foreach { e =>
-      val df = spark.read.option("mergeSchema", "true").parquet(e.toString)
+    ChangeFeed.ids(fs, cd).foreach { k =>
+      val e = new Path(ChangeFeed.entry(changeDir, k))
+      val df = ChangeFeed.read(spark, changeDir, Seq(k))
       if (!df.where(cond).isEmpty) {
-        val k = e.getName.stripPrefix("merge=")
         val stage = new Path(cd, s"_purge_stage_$k")
         if (fs.exists(stage)) fs.delete(stage, true)
         df.where(!cond).write.mode("overwrite").parquet(stage.toString)

@@ -310,7 +310,7 @@ object CdcQueries {
         Some(col("is_delete")), changeDir = Some(cdf), cdfPreImages = true)
     def refresh(): Unit = {
       graft.examples.IncrementalView.refresh(s, view, cdf,
-        Seq("status"), Seq("usd"), Seq("usd"), Nil, Nil, None)
+        Seq("status"), Seq("usd"), m2Cols = Seq("usd"))
       ()
     }
     // FIXTURE phase (bulk build) clocked apart from the operator —
@@ -361,8 +361,7 @@ object CdcQueries {
     val bucket = year(col("odate")) * 100 + month(col("odate"))
     def refresh(): Unit = {
       graft.examples.IncrementalView.refresh(s, view, cdf,
-        Seq("bucket"), Seq("usd"), Nil, Nil, Nil, None,
-        Seq("bucket" -> bucket))
+        Seq("bucket"), Seq("usd"), derived = Seq("bucket" -> bucket))
       ()
     }
     // FIXTURE phase (store wipe + bulk build) clocked apart from the

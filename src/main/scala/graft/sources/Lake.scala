@@ -196,11 +196,10 @@ object Lake {
       .saveAsTable(table)
 
   /** Batch MERGE INTO for a parquet directory — the upsert statement a
-    * consumer of the CDC lake reaches for (VERDICT rounds 3–5: the
-    * Delta/Iceberg jars that provide transactional MERGE are absent
-    * from this build; this supplies the SEMANTICS and the crash-safe
-    * swap, while the manifest-based isolation layer remains
-    * jar-blocked — documented, not hidden):
+    * consumer of the CDC lake reaches for. The Delta/Iceberg jars that
+    * provide transactional MERGE are absent from this build; this
+    * supplies the SEMANTICS, and `Snapshot` supplies the isolation
+    * (see "Isolation" below):
     *
     *   WHEN MATCHED THEN UPDATE   — a newer (by `orderCols`) update
     *                                row replaces the stored row;
@@ -221,7 +220,7 @@ object Lake {
     *
     * Change data feed (optional `changeDir` — the jar-free analogue of
     * Delta's CDF): each merge publishes its row-level diff as the next
-    * `changeDir/merge=<k>` directory — `_op` ∈ insert/update/delete
+    * [[ChangeFeed]] entry — `_op` ∈ insert/update/delete
     * plus the post-image (key-only for deletes), so downstream
     * consumers chain INCREMENTALLY off the merged table instead of
     * diffing snapshots. With `cdfPreImages` the feed takes Delta's
@@ -324,11 +323,11 @@ object Lake {
               .contains(s"d$k-merge${suffix.stripPrefix(".")}")
           (changeDir, curV) match {
             case (Some(cd), Some(c)) if k <= c && committedByThisAttempt =>
-              publishCdfVersioned(fs, strand, cd, k)
+              ChangeFeed.publish(fs, strand, cd, k)
             // committed-and-verified but THIS caller has no feed:
             // reclaim ONLY once aged (round 15 ADVICE) — the strand's
             // OWNER may be between its pointer commit and its own
-            // publishCdfVersioned call right now, and deleting here
+            // ChangeFeed.publish call right now, and deleting here
             // would make that exists-guarded publish silently no-op,
             // permanently dropping a committed transition's diff from
             // the feed. The commit→publish window is milliseconds;
@@ -522,7 +521,7 @@ object Lake {
         throw e
     }
     changeDir.foreach { cd =>
-      if (fs.exists(cdfStage)) publishCdfVersioned(fs, cdfStage, cd, nextV)
+      if (fs.exists(cdfStage)) ChangeFeed.publish(fs, cdfStage, cd, nextV)
     }
     // retention: keep current + previous version (a reader that
     // resolved just before the commit still finds its files); flats
@@ -632,45 +631,6 @@ object Lake {
     spark.read.option("mergeSchema", "true")
       .option("basePath", quarantineDir)
       .parquet(entries.map(_.toString): _*)
-  }
-
-  /** Publish a staged change-feed directory into `changeDir` as the
-    * `merge=<version>` sub-directory, keyed by the SNAPSHOT VERSION
-    * the diff transitioned the store to (round 14 — the partitioned-
-    * merge interleaving model falsified the old list-max+1 id scheme
-    * under the now-in-contract concurrent merges, two ways: two
-    * publishers could list the same max and collide LOUDLY after
-    * their commits already succeeded, and — worse — the version-k
-    * writer could publish AFTER the version-(k+1) writer, giving the
-    * feed an id order that contradicts the version order, which
-    * silently corrupts every consumer that replays diffs in id order
-    * (telescoping only works in transition order). Version-keyed ids
-    * are collision-free (the commit claim admits each version once)
-    * and id order ≡ version order by construction. Ids are MONOTONE
-    * but GAP-FUL (compaction/no-change versions publish nothing) —
-    * every consumer reads `ids > watermark` (pendingFeedIds), which
-    * is gap-tolerant.)
-    *
-    * IDEMPOTENT: if `merge=<version>` already exists, THE diff for
-    * that transition is already published (only version k's committer
-    * — manifest-verified for crash strands — ever publishes at k), so
-    * the staged copy is deleted and the call succeeds; a racing
-    * reconciler and the committer's own publish cannot double-feed. */
-  private[graft] def publishCdfVersioned(fs: org.apache.hadoop.fs.FileSystem,
-      staged: org.apache.hadoop.fs.Path, changeDir: String,
-      version: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val cd = new Path(changeDir)
-    fs.mkdirs(cd)
-    val dest = new Path(cd, s"merge=$version")
-    if (fs.exists(dest)) { fs.delete(staged, true); return }
-    if (!fs.rename(staged, dest)) {
-      // a racing publisher of the SAME version (committer vs strand
-      // reconciler) landed between our check and our rename — benign
-      if (fs.exists(dest)) { if (fs.exists(staged)) fs.delete(staged, true) }
-      else throw new java.io.IOException(
-        s"change-feed publish rename failed: $staged -> $dest")
-    }
   }
 
   /** Partition-aware MERGE INTO a Hive-partitioned lake — the routing

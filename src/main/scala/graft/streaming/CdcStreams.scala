@@ -550,11 +550,9 @@ object CdcStreams {
   def readChangeFeedStream(spark: SparkSession, changeDir: String,
       rowSchema: StructType, maxFilesPerTrigger: Int = 16,
       partitioned: Boolean = false): DataFrame = {
-    val glob =
-      if (partitioned) s"$changeDir/*/merge=*" else s"$changeDir/merge=*"
     spark.readStream
       .schema(rowSchema.add("_op", StringType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(glob)
+      .parquet(graft.sources.ChangeFeed.streamGlob(changeDir, partitioned))
   }
 }

@@ -2089,7 +2089,8 @@ class OperatorSpec extends AnyFunSuite {
           Seq("k"), Seq("ver"), Some(col("is_delete")),
           changeDir = Some(cdf), cdfPreImages = true)
         IncrementalView.refresh(spark, viewDir, cdf, Seq("g"), Seq("x"),
-          Seq("x"), Seq("x"), Seq("x"), Some(dir))
+          m2Cols = Seq("x"), maxCols = Seq("x"), minCols = Seq("x"),
+          baseDir = Some(dir))
         val viewMap = IncrementalView.read(spark, viewDir).collect()
           .map(r => r.getAs[String]("g") ->
             (r.getAs[Long]("n"), r.getAs[Long]("sum_x"),
@@ -2120,7 +2121,7 @@ class OperatorSpec extends AnyFunSuite {
         Seq("k"), Seq("ver"), Some(col("is_delete")),
         changeDir = Some(cdf), cdfPreImages = true)
     def refresh(): Long = IncrementalView.refresh(spark, viewDir, cdf,
-      Seq("g"), Seq("x"), Seq("x"), Nil, Nil, None)
+      Seq("g"), Seq("x"), m2Cols = Seq("x"))
     def triple = IncrementalView.read(spark, viewDir).collect()
       .map(r => r.getAs[String]("g") -> (r.getAs[Long]("n"),
         r.getAs[Long]("sum_x"), r.getAs[Long]("sumsq_x"))).toMap
@@ -2160,15 +2161,17 @@ class OperatorSpec extends AnyFunSuite {
     merge(df((7L, "a", 2L, 1L, false)))
     val exg = intercept[IllegalArgumentException] {
       IncrementalView.refresh(spark, viewDir, cdf,
-        Seq("g"), Seq("x"), Seq("x"), Seq("x"), Nil, Some(dir))
+        Seq("g"), Seq("x"), m2Cols = Seq("x"), maxCols = Seq("x"),
+        baseDir = Some(dir))
     }
     assert(exg.getMessage.contains("max_x"))
     IncrementalView.refresh(spark, viewDir, cdf,
-      Seq("g"), Seq("x"), Seq("x"), Nil, Nil, None)
+      Seq("g"), Seq("x"), m2Cols = Seq("x"))
     assert(triple == recompute)
     // the same triple survives the partitioned re-aggregate path
     val whole = IncrementalView
-      .readPartitioned(spark, s"$base/views", Seq("g"), Seq("x"), Seq("x"))
+      .readPartitioned(spark, s"$base/views", Seq("g"), Seq("x"),
+        m2Cols = Seq("x"))
     assert(whole.columns.toSet == Set("g", "n", "sum_x", "sumsq_x"))
     val wm = whole.collect().map(r => r.getAs[String]("g") ->
       (r.getAs[Long]("n"), r.getAs[Long]("sum_x"),
@@ -2187,7 +2190,8 @@ class OperatorSpec extends AnyFunSuite {
         Seq("k"), Seq("ver"), Some(col("is_delete")),
         changeDir = Some(cdf), cdfPreImages = true)
     def refresh(): Long = IncrementalView.refresh(spark, viewDir, cdf,
-      Seq("g"), Seq("x"), Seq("x"), Seq("x"), Nil, Some(dir))
+      Seq("g"), Seq("x"), m2Cols = Seq("x"), maxCols = Seq("x"),
+      baseDir = Some(dir))
     def viewMap = IncrementalView.read(spark, viewDir).collect()
       .map(r => r.getAs[String]("g") -> (r.getAs[Long]("n"),
         r.getAs[Long]("sum_x"), r.getAs[Long]("sumsq_x"),
@@ -2237,8 +2241,8 @@ class OperatorSpec extends AnyFunSuite {
     // bucket = month of an ISO day string — derived on every feed row
     val month = substring(col("day"), 1, 7)
     def refresh(): Long = IncrementalView.refresh(spark, viewDir, cdf,
-      Seq("month"), Seq("x"), Nil, Seq("x"), Nil, Some(dir),
-      Seq("month" -> month))
+      Seq("month"), Seq("x"), maxCols = Seq("x"), baseDir = Some(dir),
+      derived = Seq("month" -> month))
     def viewMap = IncrementalView.read(spark, viewDir).collect()
       .map(r => r.getAs[String]("month") -> (r.getAs[Long]("n"),
         r.getAs[Long]("sum_x"), r.getAs[Long]("max_x"))).toMap
@@ -2372,7 +2376,7 @@ class OperatorSpec extends AnyFunSuite {
     // version 1's diff is already published: only v1's committer ever
     // publishes at 1, so the staged copy is the SAME diff (a crash
     // strand the reconciler raced) — absorbed, feed untouched
-    graft.sources.Lake.publishCdfVersioned(fs,
+    graft.sources.ChangeFeed.publish(fs,
       new Path(s"$base/staged"), cd.toString, 1L)
     assert(!fs.exists(new Path(s"$base/staged")),
       "absorbed staging must be deleted")
@@ -2381,7 +2385,7 @@ class OperatorSpec extends AnyFunSuite {
       "existing feed entry must be untouched")
     // an unclaimed version publishes normally
     Seq((3L, "c")).toDF("k", "v").write.parquet(s"$base/staged2")
-    graft.sources.Lake.publishCdfVersioned(fs,
+    graft.sources.ChangeFeed.publish(fs,
       new Path(s"$base/staged2"), cd.toString, 2L)
     assert(fs.exists(new Path(s"$cd/merge=2")))
   }
@@ -3569,9 +3573,9 @@ class OperatorSpec extends AnyFunSuite {
     // survivors intact, store by store
     assert(Lake.readStore(spark, lake).select("k").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
-    assert(IncrementalView.read(spark, view).collect()
-      .map(r => r.getAs[Long]("k") -> r.getAs[Long]("sum_x")).toMap ==
-      Map(2L -> 5L, 3L -> 7L))
+    def viewMap = IncrementalView.read(spark, view).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[Long]("sum_x")).toMap
+    assert(viewMap == Map(2L -> 5L, 3L -> 7L))
     assert(IncrementalIndex.lookupAll(spark, idx, Seq("k"), Seq("public"))
       .collect().map(_.getAs[Long]("k")).toSeq == Seq(2L))
     assert(IncrementalIndex.lookupAll(spark, idx, Seq("k"), Seq("secret"))
@@ -3588,9 +3592,24 @@ class OperatorSpec extends AnyFunSuite {
       "pre-purge as-of resurfaced the key")
     // replay adds nothing: the tombstone re-merges to an empty feed,
     // every scrub re-runs idempotently, the audit stays clean
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    val codes = new Path(s"$ivf/codes")
+    // readCodes drops the sign, so a second fold of the IVF-PQ feed
+    // shows as a new segment in the codes store's member list
+    def contents = (rows(IncrementalIndex.read(spark, idx)),
+      rows(IncrementalScd2.read(spark, hist)),
+      rows(IncrementalIvfPq.readCodes(spark, ivf)),
+      Snapshot.resolve(
+        codes.getFileSystem(spark.sparkContext.hadoopConfiguration), codes))
+    val before = contents
     merge(df(
       (1L, "a", "alice revised secret", 12L, vec(1f, 1f, 0f, 0f), 0, 3L, true)))
     refreshAll()
+    // every consumer's watermark survived scrubStore, compaction and
+    // purge: the refresh folded no entry a second time
+    assert(viewMap == Map(2L -> 5L, 3L -> 7L))
+    assert(contents == before)
     assert(KeyPurge.scrubFeed(spark, cdf, kCond,
       Seq(view, idx, hist, s"$ivf/codes")) == 0)
     assert(!KeyPurge.scrubStore(spark, lake, kCond))
@@ -3599,6 +3618,11 @@ class OperatorSpec extends AnyFunSuite {
     assert(!IncrementalScd2.purge(spark, hist, kCond))
     assert(KeyPurge.verifyNoTrace(spark, roots, kCond, Seq("k")).isEmpty)
     assert(Lake.readStore(spark, lake).count() == 2)
+    // a scrub that does rewrite a consumer store (its cond still
+    // matches live rows) carries the watermark onto the new member
+    assert(KeyPurge.scrubStore(spark, view, col("k") === 3L))
+    IncrementalView.refresh(spark, view, cdf, Seq("k"), Seq("x"))
+    assert(viewMap == Map(2L -> 5L))
   }
 
   test("IncrementalIndex/IncrementalScd2: randomized merge sequences equal recompute (seeded)") {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Lake, PublishSet, Snapshot}
+import graft.sources.{ChangeFeed, Lake, PublishSet, Snapshot}
 import graft.examples.{IncrementalIndex, IncrementalIvfPq, IncrementalScd2, IncrementalView, LakeOps}
 
 /** Live two-writer race legs for the generalized RETRY-REBASE
@@ -142,7 +142,7 @@ class RetryRebaseSpec extends AnyFunSuite {
             (r.getAs[Long]("n"), r.getAs[Long]("sx"))).toMap
         assert(got == want, s"view $got != recompute $want")
         // idempotence: nothing left pending after the rebase
-        assert(IncrementalView.pendingFeedIds(spark, viewDir, cdf).isEmpty)
+        assert(ChangeFeed.pending(spark, viewDir, cdf).isEmpty)
         (rerr, pre, post)
       }
     }

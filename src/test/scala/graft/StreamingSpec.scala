@@ -1271,15 +1271,15 @@ class StreamingSpec extends AnyFunSuite {
     // consumer 1: per-city moment-triple view (avg/stddev derivable)
     def refreshStats(): Unit = {
       IncrementalView.refresh(spark, statsView, cdf,
-        Seq("city"), Seq("cents"), Seq("cents"), Nil, Nil, None)
+        Seq("city"), Seq("cents"), m2Cols = Seq("cents"))
       IncrementalView.recordViewConsumer(spark, cdf, "stats", statsView)
     }
     // consumer 2: view bucketed on the DERIVED integer second of the
     // HLC — an update's new HLC moves its row across buckets
     def refreshBucket(): Unit = {
       IncrementalView.refresh(spark, bucketView, cdf,
-        Seq("bucket"), Seq("cents"), Nil, Nil, Nil, None,
-        Seq("bucket" -> floor(col("hlc")).cast("long")))
+        Seq("bucket"), Seq("cents"),
+        derived = Seq("bucket" -> floor(col("hlc")).cast("long")))
       IncrementalView.recordViewConsumer(spark, cdf, "bucket", bucketView)
     }
     def statsMap = IncrementalView.read(spark, statsView).collect()
