@@ -126,17 +126,6 @@ object LakeOps {
     touched
   }
 
-  /** Tombstone retention sweep — the GDPR/retention pass for days an
-    * APPEND-style sink wrote into (tombstones landed as rows instead
-    * of merging): re-apply the CDC replay rule per day — latest record
-    * per key wins, a WINNING tombstone removes its key physically,
-    * older duplicates collapse. A day holding no tombstone rows is
-    * left byte-identical (checked BEFORE rewriting — the sweep never
-    * pays a copy-on-write for a clean day). The rewrite commits as
-    * the day store's next snapshot version (round-8: `Snapshot`'s
-    * atomic pointer protocol, shared with mergeInto/compactDay — a
-    * crash leaves at worst an uncommitted staging dir, readers never
-    * see a missing day). Returns the days rewritten. */
   /** Publish the night's artifacts as ONE unit (round 18 — the
     * cross-store composed commit, [[graft.sources.PublishSet]]):
     * every committed day store under the lake plus every committed
@@ -228,6 +217,17 @@ object LakeOps {
         sumCols.map(c => sum(s"sum_$c").as(s"sum_$c")): _*)
   }
 
+  /** Tombstone retention sweep — the GDPR/retention pass for days an
+    * APPEND-style sink wrote into (tombstones landed as rows instead
+    * of merging): re-apply the CDC replay rule per day — latest record
+    * per key wins, a WINNING tombstone removes its key physically,
+    * older duplicates collapse. A day holding no tombstone rows is
+    * left byte-identical (checked BEFORE rewriting — the sweep never
+    * pays a copy-on-write for a clean day). The rewrite commits as
+    * the day store's next snapshot version (round-8: `Snapshot`'s
+    * atomic pointer protocol, shared with mergeInto/compactDay — a
+    * crash leaves at worst an uncommitted staging dir, readers never
+    * see a missing day). Returns the days rewritten. */
   def retentionSweep(spark: SparkSession, lake: String, days: Seq[String],
       keyCols: Seq[String], orderCols: Seq[String],
       isDeleteCol: String): Seq[String] = {

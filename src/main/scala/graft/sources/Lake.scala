@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,7 +39,6 @@ object Lake {
     * itself. */
   private def resolveLakeInputs(spark: SparkSession,
       root: String): Option[Seq[String]] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     val rp = new Path(root)
     val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rp)) return None
@@ -68,26 +68,26 @@ object Lake {
             d.getPath -> fs.listStatus(d.getPath)
           })), Duration.Inf)
       } finally pool.shutdown()
-    def isManaged(l: Array[FileStatus]): Boolean =
-      l.exists(s => s.getPath.getName == "_current" ||
-        s.getPath.getName.matches("_commit\\.\\d+"))
-    def strandedMember(l: Array[FileStatus]): Boolean =
-      l.exists(s => s.isDirectory && s.getPath.getName.matches("d\\d+-.*"))
-    if (!listings.exists { case (_, l) => isManaged(l) || strandedMember(l) })
-      return None
-    Some(listings.flatMap { case (p, l) =>
-      if (isManaged(l)) Snapshot.readSet(fs, p).get.map(_.toString)
-      else if (strandedMember(l))
-        // never-managed dir holding an uncommitted member dir — the
-        // one-rename-wide crash window of a legacy store's first
-        // commit. Only the committed state (the flat files) is real.
-        l.filter(s => s.isFile &&
-            !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(_.getPath.toString).toSeq
-      else Seq(p.toString)
-    })
+    val reads = listings.map { case (p, l) => p -> storeReadPaths(fs, p, l) }
+    // every partition reads as itself: keep the plain root read
+    if (reads.forall { case (p, r) => r == Seq(p) }) None
+    else Some(reads.flatMap(_._2.map(_.toString)))
   }
+
+  /** The paths a reader of store dir `dir` scans, given its listing:
+    * the committed read set of a managed store; the flat files alone
+    * beside a never-committed member dir (the one-rename-wide crash
+    * window of a legacy store's first commit — only the flat files
+    * are real); else the dir itself. */
+  private def storeReadPaths(fs: FileSystem, dir: Path,
+      listing: Array[FileStatus]): Seq[Path] =
+    if (Snapshot.isCommitted(listing)) Snapshot.readSet(fs, dir).get
+    else if (listing.exists(Snapshot.isMemberDir))
+      listing.filter(s => s.isFile &&
+          !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(_.getPath).toSeq
+    else Seq(dir)
 
   /** Read the lake; filters on `ingest_date` prune at planning time.
     * Snapshot-aware: partition dirs a merge/compaction manages are
@@ -126,24 +126,12 @@ object Lake {
     * member dirs plus unconsumed flat appends. Falls back to a plain
     * parquet read when the dir is unmanaged. */
   def readStore(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Snapshot.readSet(fs, p) match {
-      case None =>
-        // never-managed dir: if a crashed first commit stranded an
-        // uncommitted member dir, only the flat files are real
-        val stranded = fs.exists(p) && fs.listStatus(p).exists(s =>
-          s.isDirectory && s.getPath.getName.matches("d\\d+-.*"))
-        if (stranded)
-          spark.read.option("mergeSchema", "true")
-            .parquet(Snapshot.flatFiles(fs, p).map(_.toString): _*)
-        else spark.read.option("mergeSchema", "true").parquet(dir)
-      case Some(set) =>
-        require(set.nonEmpty, s"managed store $dir has an empty read set")
-        spark.read.option("mergeSchema", "true")
-          .parquet(set.map(_.toString): _*)
-    }
+    val set = storeReadPaths(fs, p,
+      if (fs.exists(p)) fs.listStatus(p) else Array.empty[FileStatus])
+    require(set.nonEmpty, s"store $dir has an empty read set")
+    spark.read.option("mergeSchema", "true").parquet(set.map(_.toString): _*)
   }
 
   /** TIME TRAVEL: read a managed store at a PAST version still inside
@@ -154,7 +142,6 @@ object Lake {
     * dirs only — flat appends are un-versioned by nature and belong
     * to the present. */
   def readStoreAt(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = Snapshot.currentVersion(fs, p).getOrElse(
@@ -172,7 +159,6 @@ object Lake {
     * the pin durable past the keep window: the "exact corpus run X
     * trained on" read). */
   def readStoreTag(spark: SparkSession, dir: String, name: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = Snapshot.tagVersion(fs, p, name).getOrElse(
@@ -285,7 +271,6 @@ object Lake {
       isDelete: Option[org.apache.spark.sql.Column] = None,
       changeDir: Option[String] = None,
       cdfPreImages: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
     val target = new Path(targetDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = target.getFileSystem(conf)
@@ -320,7 +305,8 @@ object Lake {
           val committedByThisAttempt = suffix.isEmpty ||
             scala.util.Try(Snapshot.members(fs, target, k))
               .getOrElse(Nil)
-              .contains(s"d$k-merge${suffix.stripPrefix(".")}")
+              .contains(Snapshot.memberDirName(k,
+                "merge" + suffix.stripPrefix(".")))
           (changeDir, curV) match {
             case (Some(cd), Some(c)) if k <= c && committedByThisAttempt =>
               ChangeFeed.publish(fs, strand, cd, k)
@@ -587,7 +573,6 @@ object Lake {
       isDelete: Option[org.apache.spark.sql.Column] = None,
       changeDir: Option[String] = None,
       cdfPreImages: Boolean = false): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
     require(batchId.nonEmpty && !batchId.contains('/'),
       s"batchId must be a plain name: '$batchId'")
     val exempt = isDelete.getOrElse(lit(false))
@@ -618,7 +603,6 @@ object Lake {
     * (committed entries only — an in-flight or crashed write has no
     * `_SUCCESS` and is invisible). */
   def readQuarantine(spark: SparkSession, quarantineDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val qd = new Path(quarantineDir)
     val fs = qd.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries =
@@ -751,13 +735,9 @@ object Lake {
     * the curve. OperatorSpec reads the parquet footers back and
     * asserts a point predicate on EITHER column overlaps few row
     * groups under z-order, vs a linear sort that only prunes its own
-    * sort column. */
-  def writeZOrdered(df: DataFrame, c1: String, c2: String, path: String,
-      bits: Int = 10, outFiles: Int = 0): Unit =
-    writeZOrderedN(df, Seq(c1, c2), path, bits, outFiles)
-
-  /** N-column z-order (the general form; the 2-column signature above
-    * delegates here). All columns' quantile bounds come from ONE
+    * sort column.
+    *
+    * N columns: all columns' quantile bounds come from ONE
     * `approxQuantile(Array(cols), …)` pass — a single driver job
     * regardless of column count, instead of one job per column. Bit
     * positions: bit `i` of column `j`'s rank lands at `N·i + j`, which
@@ -812,7 +792,6 @@ object Lake {
     * transparently). */
   def compactDay(spark: SparkSession, path: String, day: String,
       targetBytes: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
     // Hive-escape the value so a day needing escaping ('%', ':', ' ')
     // targets the SAME directory writePartitioned/mergeIntoPartitioned
     // produce — a raw interpolation would probe a nonexistent path and
@@ -892,7 +871,6 @@ object Lake {
       publishSets: Map[String, (String, String => String)] = Map.empty,
       timeTravel: Boolean = true)
       : Seq[String] = {
-    import org.apache.hadoop.fs.Path
     // remember the spec so refreshCatalog can re-resolve by name;
     // merged across calls (a later stores-only call must not forget
     // the fixtures an earlier call registered)
@@ -924,25 +902,15 @@ object Lake {
       if (timeTravel) {
         val p = new Path(dir)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Snapshot.currentVersion(fs, p).foreach { cur =>
-          // retained versions = manifests still on disk at or below
-          // current (vacuum keeps the last `keep` plus tagged pins)
-          val retained = fs.listStatus(p).map(_.getPath.getName)
-            .flatMap { n =>
-              if (n.matches("_v\\d+\\.list"))
-                Some(n.stripPrefix("_v").stripSuffix(".list").toLong)
-              else None
-            }.filter(_ <= cur).sorted
-          retained.foreach { v =>
-            val vn = s"${name}_v$v"
-            readStoreAt(spark, dir, v).createOrReplaceTempView(vn)
-            out += vn
-          }
-          Snapshot.tags(fs, p).toSeq.sortBy(_._1).foreach { case (t, v) =>
-            val tn = s"${name}_tag_${t.replaceAll("[^A-Za-z0-9_]", "_")}"
-            readStoreAt(spark, dir, v).createOrReplaceTempView(tn)
-            out += tn
-          }
+        Snapshot.retainedVersions(fs, p).foreach { v =>
+          val vn = s"${name}_v$v"
+          readStoreAt(spark, dir, v).createOrReplaceTempView(vn)
+          out += vn
+        }
+        Snapshot.tags(fs, p).toSeq.sortBy(_._1).foreach { case (t, v) =>
+          val tn = s"${name}_tag_${t.replaceAll("[^A-Za-z0-9_]", "_")}"
+          readStoreAt(spark, dir, v).createOrReplaceTempView(tn)
+          out += tn
         }
       }
     }
@@ -1054,7 +1022,6 @@ object Lake {
     * built. Returns the committed version. */
   def createStoreAs(spark: SparkSession, name: String, storeDir: String,
       sql: String, replace: Boolean = false, attempts: Int = 3): Long = {
-    import org.apache.hadoop.fs.Path
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"store view name not SQL-identifier-shaped: $name")
     val target = new Path(storeDir)

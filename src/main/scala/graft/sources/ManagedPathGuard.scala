@@ -61,17 +61,13 @@ object ManagedPathGuard extends Rule[LogicalPlan] {
     plan
   }
 
-  /** Managed-store root: a committed `_current` pointer (or marker
-    * history) or a version manifest identifies the dir regardless of
-    * commit mode. */
+  /** Managed-store root: its listing holds the pointer or any version
+    * manifest ([[Snapshot.holdsManifest]]), whatever the commit mode
+    * — a claimed but unpublished first version is guarded too. */
   private def isManagedRoot(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): Boolean =
-    fs.exists(new Path(p, "_current")) || {
-      // marker mode has no `_current`; any `_v<k>.list` manifest marks
-      // the root (cheap: one listing of the candidate dir)
-      fs.exists(p) && fs.getFileStatus(p).isDirectory &&
-        fs.listStatus(p).exists(_.getPath.getName.matches("_v\\d+\\.list"))
-    }
+    fs.exists(p) && fs.getFileStatus(p).isDirectory &&
+      Snapshot.holdsManifest(fs.listStatus(p))
 
   /** Any managed store root at or below `p`, searched to `depth`
     * levels (round 15 ADVICE): an OVERWRITE of an unmanaged dir

@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** ONE atomic manifest across DERIVED stores — the cross-store
-  * transaction-log step the round-10 verdict named (item 2): every
+/** A [[Snapshot]] log whose manifest names member versions: ONE
+  * atomic manifest across DERIVED stores — the cross-store
+  * transaction-log step the round-10 verdict named (item 2). Every
   * `Snapshot`-managed store commits its own versions independently,
   * so a pipeline that refreshes an inverted index AND its doc-length
   * view (RagPipeline), or a night's lake days AND their materialized
@@ -12,19 +13,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * a reader lands on the index fresh but the view stale, and BM25
   * scores against the wrong N/avgdl.
   *
-  * The fix is the same shape as Snapshot itself, one level up: a
-  * publish-set directory holds numbered manifests
-  * (`_pub_v<N>.list`, lines `name=version`) naming each member
-  * store's committed snapshot version, made current by ONE atomic
-  * step — the pointer rename (`_pub_current`, POSIX/HDFS/ABFS) or the
-  * write-once marker PUT (`_pubcommit.<n>`, honoring the same
-  * `Snapshot.MarkerCommitKey` object-store mode). Member stores keep
-  * committing as they always did; those versions are simply not
-  * PUBLISHED until the manifest lands. Readers resolve the manifest
-  * first and read every member AT ITS PINNED VERSION, so the set of
-  * stores moves all-or-nothing: a crash anywhere between member
-  * refreshes leaves the previous manifest current and the previous
-  * (consistent) pair served.
+  * A publish-set directory runs the same numbered-manifest log as a
+  * store (`Snapshot.Log`: claim, pointer-or-marker publish, tags,
+  * sweeps) under its own names — `_pub_current`, `_pub_v<n>.list`,
+  * `_pubcommit.<n>`, `_pubtag.<name>` — and what is its own is the
+  * manifest body: lines `name=version` naming each member store's
+  * committed snapshot version. Member stores keep committing as they
+  * always did; those versions are simply not PUBLISHED until the
+  * manifest lands. Readers resolve the manifest first and read every
+  * member AT ITS PINNED VERSION, so the set of stores moves
+  * all-or-nothing: a crash anywhere between member refreshes leaves
+  * the previous manifest current and the previous (consistent) pair
+  * served.
   *
   * Publish history is itself time travel: `resolveAt(v)` reproduces
   * any past cross-store state whose member versions retention still
@@ -37,33 +37,20 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 object PublishSet {
 
-  private def pointer(dir: Path) = new Path(dir, "_pub_current")
-  private def listFile(dir: Path, v: Long) = new Path(dir, s"_pub_v$v.list")
-  private def markerFile(dir: Path, v: Long) = new Path(dir, s"_pubcommit.$v")
-  private val MarkerRe = "_pubcommit\\.(\\d+)".r
+  private val PubLog =
+    new Snapshot.Log("_pub_current", "_pub_v", "_pubcommit.", "_pubtag.")
 
   /** The current published version: max(markers ∪ pointer) — the two
     * commit modes interoperate exactly as in [[Snapshot]]. A manifest
     * file above this (a crashed publish's strand) is invisible. */
-  def currentVersion(fs: FileSystem, dir: Path): Option[Long] = {
-    if (!fs.exists(dir)) return None
-    val markers: Seq[Long] =
-      fs.listStatus(dir).map(_.getPath.getName).toSeq.collect {
-        case MarkerRe(v) => v.toLong
-      }
-    val ptr: Seq[Long] =
-      if (fs.exists(pointer(dir)))
-        Seq(Snapshot.readSmall(fs, pointer(dir)).trim.toLong)
-      else Nil
-    (markers ++ ptr).maxOption
-  }
+  def currentVersion(fs: FileSystem, dir: Path): Option[Long] =
+    PubLog.currentVersion(fs, dir)
 
   /** Publish `members` (store name → committed snapshot version) as
     * the next manifest version. The manifest CLAIMS its version by a
-    * true create-fails-if-exists step ([[Snapshot.createExclusive]] —
-    * the same serialization point as [[Snapshot.commit]], round-12;
-    * O_EXCL-hardened on file:// in round 13): two publishers racing
-    * the set lose exactly one of them to a loud
+    * true create-fails-if-exists step — the same serialization point
+    * as [[Snapshot.commit]]: two publishers racing the set lose
+    * exactly one of them to a loud
     * [[Snapshot.ConcurrentCommitException]] BEFORE anything is
     * published, never a silent last-writer-wins overwrite of the
     * winner's manifest. Retry-rebase rule for the loser: re-read each
@@ -85,46 +72,10 @@ object PublishSet {
     require(members.keys.forall(k => !k.contains('\n') && k.nonEmpty),
       s"PublishSet member names must be non-empty single lines: ${members.keys}")
     fs.mkdirs(dir)
-    val next = currentVersion(fs, dir).getOrElse(0L) + 1L
-    val manifest = listFile(dir, next)
-    if (fs.exists(manifest) &&
-        System.currentTimeMillis() -
-          fs.getFileStatus(manifest).getModificationTime >
-          Snapshot.DefaultClaimGraceMs)
-      fs.delete(manifest, false)
-    val body = members.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n")
-    val marker = conf.getBoolean(Snapshot.MarkerCommitKey, false)
-    // the claim — a TRUE create-if-absent in both modes
-    // (Snapshot.createExclusive: O_EXCL on file://, atomic namespace
-    // op on HDFS, conditional PUT on an object store); nobody reads a
-    // manifest above the published version, so the in-flight write is
-    // unobservable
-    try Snapshot.createExclusive(fs, manifest, body)
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: org.apache.hadoop.fs.PathExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
-        throw Snapshot.ConcurrentCommitException(dir.toString, next,
-          currentVersion(fs, dir).getOrElse(0L))
-    }
-    if (marker) {
-      // only the claim winner reaches here — an existing marker is a
-      // protocol violation, loud like Snapshot.commit's
-      try Snapshot.createExclusive(fs, markerFile(dir, next),
-        next.toString)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException =>
-          throw Snapshot.ConcurrentCommitException(dir.toString, next,
-            currentVersion(fs, dir).getOrElse(0L))
-      }
-    } else {
-      // atomic rename-over, writer-unique tmp (Snapshot.writeAtomicOver:
-      // real rename(2) on file://, one NameNode op on HDFS — never the
-      // delete-then-rename emulation with its missing-pointer window)
-      Snapshot.writeAtomicOver(fs, conf, pointer(dir), next.toString)
-    }
+    val next = PubLog.nextClaimable(fs, dir, Snapshot.DefaultClaimGraceMs)
+    PubLog.claim(fs, dir, next, members.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"$k=$v" }.mkString("\n"))
+    PubLog.publish(fs, conf, dir, next)
     next
   }
 
@@ -158,10 +109,8 @@ object PublishSet {
     * exactly that way. A crash-looped wrapper self-heals through
     * publish's age-gated sweep within one grace window; this call is
     * the operator's explicit accelerator when restarting sooner. */
-  def recoverStrandedClaim(fs: FileSystem, dir: Path): Boolean = {
-    val strand = listFile(dir, currentVersion(fs, dir).getOrElse(0L) + 1L)
-    fs.exists(strand) && fs.delete(strand, false)
-  }
+  def recoverStrandedClaim(fs: FileSystem, dir: Path): Boolean =
+    PubLog.recoverStrandedClaim(fs, dir)
 
   /** The current published (store name → version) map, or None if
     * nothing was ever published. */
@@ -171,12 +120,11 @@ object PublishSet {
   /** A specific publish version's member map — cross-store time
     * travel (valid while member retention holds those versions). */
   def resolveAt(fs: FileSystem, dir: Path, v: Long): Map[String, Long] =
-    Snapshot.readSmall(fs, listFile(dir, v)).split("\n").map(_.trim)
-      .filter(_.nonEmpty).map { line =>
-        val i = line.lastIndexOf('=')
-        require(i > 0, s"malformed publish manifest line: $line")
-        line.substring(0, i) -> line.substring(i + 1).toLong
-      }.toMap
+    PubLog.lines(fs, dir, v).map { line =>
+      val i = line.lastIndexOf('=')
+      require(i > 0, s"malformed publish manifest line: $line")
+      line.substring(0, i) -> line.substring(i + 1).toLong
+    }.toMap
 
   /** COMPOSED named tag over a published set — the durable form of
     * the retention coupling the scaladoc above leaves to the caller:
@@ -195,48 +143,20 @@ object PublishSet {
     * mapping, exactly as it does for reads. */
   def tagPublished(fs: FileSystem, conf: Configuration, dir: Path,
       name: String, storeDir: String => Path): Long = {
-    // Same name discipline as Snapshot.tag: a ".tmp" segment would
-    // make the pubtag indistinguishable from writeAtomicOver's crash
-    // strands and silently invisible to pubTags (round 14 ADVICE).
-    require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-        !name.endsWith(".tmp") && !name.contains(".tmp."),
-      s"pubtag name must be [A-Za-z0-9][A-Za-z0-9._-]* (no .tmp segment): $name")
+    PubLog.checkTagName(name)
     val v = currentVersion(fs, dir).getOrElse(
       throw new IllegalArgumentException(s"$dir has no published set"))
     resolveAt(fs, dir, v).foreach { case (member, mv) =>
       Snapshot.tag(fs, conf, storeDir(member), s"pub.$name", mv)
     }
-    // publish the pubtag with the same discipline as Snapshot.tag
-    // (round-11 ADVICE): tmp + atomic rename in pointer mode so a
-    // crash mid-write can never leave a torn file for resolveTag to
-    // choke on; plain PUT in marker mode (atomic per object-store
-    // visibility semantics)
-    val tagFile = new Path(dir, s"_pubtag.$name")
-    if (conf.getBoolean(Snapshot.MarkerCommitKey, false))
-      Snapshot.writeSmall(fs, tagFile, v.toString)
-    else
-      Snapshot.writeAtomicOver(fs, conf, tagFile, v.toString)
+    PubLog.writeTag(fs, conf, dir, name, v)
     v
   }
 
-  /** The publish version a composed tag pins, or None. A pubtag file
-    * that exists but does not parse is a LOUD, actionable error (a
-    * torn write predating the tmp+rename discipline, or foreign
-    * content) — never a bare NumberFormatException five frames deep. */
-  def resolveTag(fs: FileSystem, dir: Path, name: String): Option[Long] = {
-    val p = new Path(dir, s"_pubtag.$name")
-    if (!fs.exists(p)) None
-    else {
-      val raw = Snapshot.readSmall(fs, p).trim
-      try Some(raw.toLong)
-      catch {
-        case _: NumberFormatException => throw new IllegalStateException(
-          s"pubtag $p is unreadable (content: '${raw.take(40)}') — a torn " +
-          "write; re-run tagPublished to rewrite it or delete the file to " +
-          "release the pin")
-      }
-    }
-  }
+  /** The publish version a composed tag pins, or None; a torn pubtag
+    * file fails loudly. */
+  def resolveTag(fs: FileSystem, dir: Path, name: String): Option[Long] =
+    PubLog.readTag(fs, dir, name)
 
   /** Release a composed tag: member tags first (their next vacuum
     * reclaims), the pubtag file last — the reverse of tagPublished,
@@ -248,20 +168,13 @@ object PublishSet {
       resolveAt(fs, dir, v).keys.foreach { member =>
         Snapshot.untag(fs, storeDir(member), s"pub.$name")
       }
-      fs.delete(new Path(dir, s"_pubtag.$name"), false)
+      PubLog.untag(fs, dir, name)
     }
   }
 
   /** All composed tags: name → pinned publish version. */
   def pubTags(fs: FileSystem, dir: Path): Map[String, Long] =
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).map(_.getPath.getName).collect {
-      // ".tmp.<uuid>" crash strands of writeAtomicOver are not tags
-      // (round 14 ADVICE — same phantom-tag guard as Snapshot.tags).
-      case n if n.startsWith("_pubtag.") && !n.endsWith(".tmp") &&
-          !n.contains(".tmp.") =>
-        n.stripPrefix("_pubtag.")
-    }.flatMap(name => resolveTag(fs, dir, name).map(name -> _)).toMap
+    PubLog.tags(fs, dir)
 
   /** Manifest retention (VERDICT r11 #8): "versions are never deleted
     * here" is fine until a years-long set has 10⁵ manifest files in
@@ -284,24 +197,11 @@ object PublishSet {
       val floor = cur - keep + 1
       val pinned = pubTags(fs, dir).values.toSet
       val st = fs.listStatus(dir).map(_.getPath)
-      st.filter(_.getName.matches("_pub_v\\d+\\.list"))
-        .filter { p =>
-          val v = p.getName.stripPrefix("_pub_v").stripSuffix(".list").toLong
-          v <= cur && v < floor && !pinned.contains(v)
-        }.foreach(fs.delete(_, false))
-      st.filter { p =>
-        p.getName match {
-          case MarkerRe(n) => n.toLong < floor
-          case _ => false
-        }
-      }.foreach(fs.delete(_, false))
-      st.filter(p => p.getName.matches("_pubtag\\..*\\.tmp") ||
-          p.getName.matches("_pubtag\\..*\\.tmp\\..*") ||
-          p.getName.matches("\\._pubtag\\..*\\.tmp\\..*") ||
-          p.getName.matches("_pub_v\\d+\\.tmp\\..*") ||
-          p.getName.matches("_pub_current\\.tmp\\..*") ||
-          p.getName.matches("\\._pub_current\\.tmp\\..*"))
+      PubLog.manifests(st)
+        .collect { case (v, p) if v <= cur && v < floor && !pinned(v) => p }
         .foreach(fs.delete(_, false))
+      PubLog.sweepMarkersBelow(fs, st, floor)
+      PubLog.sweepTmps(fs, st)
     }
   }
 }

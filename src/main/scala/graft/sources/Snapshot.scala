@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 
 /** Jar-free SNAPSHOT ISOLATION for a single-writer store directory —
   * the manifest-and-pointer protocol that retires the rename-aside
@@ -182,11 +182,6 @@ object Snapshot {
     sys.error("unreachable")
   }
 
-  private def pointer(dir: Path) = new Path(dir, "_current")
-  private def listFile(dir: Path, v: Long) = new Path(dir, s"_v$v.list")
-  private def markerFile(dir: Path, v: Long) = new Path(dir, s"_commit.$v")
-  private val MarkerRe = "_commit\\.(\\d+)".r
-
   /** Hadoop conf key selecting the OBJECT-STORE commit path: `true`
     * publishes a version by CREATING a write-once `_commit.<n>`
     * marker (one atomic object PUT — S3/ABFS visibility semantics)
@@ -202,8 +197,7 @@ object Snapshot {
     * crash before the pointer swap. */
   val MarkerCommitKey = "graft.snapshot.markerCommit"
 
-  /** Read a tiny whole file as UTF-8 (pointer / manifest). Shared
-    * with [[PublishSet]], the cross-store manifest.
+  /** Read a tiny whole file as UTF-8 (pointer / manifest / tag).
     *
     * Bounded retry on ChecksumException: Hadoop's ChecksumFileSystem
     * (the `file://` scheme this build tests on) renames a file's data
@@ -237,7 +231,7 @@ object Snapshot {
     sys.error("unreachable")
   }
 
-  private[sources] def writeSmall(fs: FileSystem, p: Path, s: String): Unit = {
+  private def writeSmall(fs: FileSystem, p: Path, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -269,7 +263,7 @@ object Snapshot {
     * FileSystem call — an atomic namespace op on HDFS, a conditional
     * PUT on a real object store. Throws (hadoop or nio)
     * FileAlreadyExistsException when already claimed. */
-  private[sources] def createExclusive(fs: FileSystem, p: Path,
+  private def createExclusive(fs: FileSystem, p: Path,
       body: String): Unit = {
     val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     if (isLocal(fs)) {
@@ -319,33 +313,250 @@ object Snapshot {
     }
   }
 
-  private def manifestLines(fs: FileSystem, dir: Path, v: Long): Seq[String] =
-    readSmall(fs, listFile(dir, v)).split("\n").map(_.trim)
-      .filter(_.nonEmpty).toSeq
+  /** One NUMBERED-MANIFEST LOG: its on-disk names and the protocol
+    * over them, written once — the shape of Structured Streaming's
+    * metadata log, which its offset log, commit log and sink manifest
+    * all share. A directory holds
+    * {{{
+    *   <pointer>            one line: <n>    (rename-mode publish)
+    *   <list><n>.list       version n's manifest (the CLAIM)
+    *   <marker><n>          write-once marker (object-store publish)
+    *   <tag><name>          one line: the version a named tag pins
+    * }}}
+    * Two logs run on it: this store's ([[Store]]) and
+    * [[PublishSet]]'s. The manifest BODY is the owner's business. */
+  private[sources] final class Log(pointerName: String, listPrefix: String,
+      markerPrefix: String, tagPrefix: String) {
+    import java.util.regex.Pattern.quote
+    private val ListRe = s"${quote(listPrefix)}(\\d+)\\.list".r
+    private val MarkerRe = s"${quote(markerPrefix)}(\\d+)".r
+    private val TagRe = s"${quote(tagPrefix)}($TagName)".r
+    // the rename tmps a crash can strand: writeAtomicOver's
+    // writer-unique pointer/tag tmps (dot-hidden on file://), a
+    // fixed-name tag tmp, and both claim-tmp shapes
+    private val TmpRe = {
+      val (p, l, t) = (quote(pointerName), quote(listPrefix), quote(tagPrefix))
+      s"\\.?$p\\.tmp\\..*|\\.?$t.*\\.tmp\\..*|$t.*\\.tmp|$l\\d+(\\.list)?\\.tmp\\..*".r
+    }
+
+    private def pointer(dir: Path) = new Path(dir, pointerName)
+    def listFile(dir: Path, v: Long) = new Path(dir, s"$listPrefix$v.list")
+    private def markerFile(dir: Path, v: Long) = new Path(dir, s"$markerPrefix$v")
+    private def tagFile(dir: Path, name: String) = new Path(dir, tagPrefix + name)
+
+    /** A published version (pointer or marker) in this listing. */
+    def isCommitted(names: Iterable[String]): Boolean =
+      names.exists(n => n == pointerName || MarkerRe.matches(n))
+
+    /** The pointer or any manifest, claimed or published. */
+    def holdsManifest(names: Iterable[String]): Boolean =
+      names.exists(n => n == pointerName || ListRe.matches(n))
+
+    /** The manifests in a listing, as (version, path). */
+    def manifests(listing: Array[Path]): Array[(Long, Path)] =
+      listing.flatMap(p => p.getName match {
+        case ListRe(v) => Some(v.toLong -> p)
+        case _ => None
+      })
+
+    /** Version `v`'s manifest lines. */
+    def lines(fs: FileSystem, dir: Path, v: Long): Seq[String] =
+      readSmall(fs, listFile(dir, v)).split("\n").map(_.trim)
+        .filter(_.nonEmpty).toSeq
+
+    /** max(pointer ∪ markers): versions are monotone across the two
+      * publish modes, so the max is the truth; None if nothing was
+      * ever published (or the directory is absent). */
+    def currentVersion(fs: FileSystem, dir: Path): Option[Long] = {
+      if (!fs.exists(dir)) return None
+      val p = pointer(dir)
+      val fromPtr =
+        if (fs.exists(p)) Some(readSmall(fs, p).trim.toLong) else None
+      val fromMarkers = fs.listStatus(dir).map(_.getPath.getName).collect {
+        case MarkerRe(n) => n.toLong
+      }
+      (fromMarkers ++ fromPtr).reduceOption(_ max _)
+    }
+
+    /** The next version to claim. A crash between a claim and its
+      * publish strands that version's manifest, which the
+      * create-fails-if-exists claim can never re-claim; it is deleted
+      * here ONLY once older than `graceMs` (round-13 ADVICE: an
+      * unconditional delete erased a LIVE racer's claim inside its
+      * claim→publish window — the racer then published a version with
+      * no manifest, or a second writer re-claimed it: the silent
+      * lost-update the claim exists to prevent). A live claim is
+      * milliseconds old; a fresh crashed strand keeps the next claim
+      * failing LOUDLY until it ages out or [[recoverStrandedClaim]]
+      * runs on restart. */
+    def nextClaimable(fs: FileSystem, dir: Path, graceMs: Long): Long = {
+      val next = currentVersion(fs, dir).getOrElse(0L) + 1L
+      val strand = listFile(dir, next)
+      if (fs.exists(strand) &&
+          System.currentTimeMillis() -
+            fs.getFileStatus(strand).getModificationTime > graceMs)
+        fs.delete(strand, false)
+      next
+    }
+
+    /** Create `p` exclusively; losing maps to the loud conflict. */
+    private def createOrConflict(fs: FileSystem, dir: Path, p: Path,
+        body: String, v: Long): Unit =
+      try createExclusive(fs, p, body)
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+             _: org.apache.hadoop.fs.PathExistsException |
+             _: java.nio.file.FileAlreadyExistsException =>
+          throw ConcurrentCommitException(dir.toString, v,
+            currentVersion(fs, dir).getOrElse(0L))
+      }
+
+    /** THE CLAIM — a true create-fails-if-exists on version `v`'s
+      * manifest, the one step two racers cannot both win
+      * ([[createExclusive]]: O_EXCL on file://, an atomic namespace op
+      * on HDFS, a conditional PUT on an object store). Nobody reads a
+      * manifest above the published version, so the in-flight write
+      * is unobservable; the loser gets [[ConcurrentCommitException]]
+      * before anything of its own is published. */
+    def claim(fs: FileSystem, dir: Path, v: Long, body: String): Unit =
+      createOrConflict(fs, dir, listFile(dir, v), body, v)
+
+    /** Make claimed version `v` current in ONE atomic step: a
+      * write-once marker PUT ([[MarkerCommitKey]]; presence, not
+      * content, is the signal — only the claim winner gets here, so
+      * an existing marker is a loud protocol violation) or the
+      * pointer rename-over ([[writeAtomicOver]]). Monotone by
+      * construction: claiming n+1 requires seeing n published. */
+    def publish(fs: FileSystem, conf: Configuration, dir: Path,
+        v: Long): Unit =
+      if (conf.getBoolean(MarkerCommitKey, false))
+        createOrConflict(fs, dir, markerFile(dir, v), v.toString, v)
+      else writeAtomicOver(fs, conf, pointer(dir), v.toString)
+
+    /** The IMMEDIATE strand reclaim: deletes `current + 1`'s
+      * manifest with no age check — restart paths only (see
+      * [[Snapshot.recoverStrandedClaim]]). */
+    def recoverStrandedClaim(fs: FileSystem, dir: Path): Boolean = {
+      val strand = listFile(dir, currentVersion(fs, dir).getOrElse(0L) + 1L)
+      fs.exists(strand) && fs.delete(strand, false)
+    }
+
+    /** A ".tmp" segment would make a tag indistinguishable from the
+      * rename tmps [[sweepTmps]] deletes (round 14 ADVICE). */
+    def checkTagName(name: String): Unit =
+      require(name.matches(TagName) &&
+          !name.endsWith(".tmp") && !name.contains(".tmp."),
+        s"tag name must be $TagName (no .tmp segment): $name")
+
+    /** Tags RETARGET, so pointer mode publishes them like the pointer
+      * (tmp + atomic rename: never torn for a concurrent reader);
+      * marker mode is a plain PUT, atomic per object-store
+      * visibility. */
+    def writeTag(fs: FileSystem, conf: Configuration, dir: Path,
+        name: String, v: Long): Unit =
+      if (conf.getBoolean(MarkerCommitKey, false))
+        writeSmall(fs, tagFile(dir, name), v.toString)
+      else writeAtomicOver(fs, conf, tagFile(dir, name), v.toString)
+
+    /** The version tag `name` pins, or None. A tag file that does not
+      * parse is a LOUD, actionable error naming the file (a torn
+      * write predating the tmp+rename discipline, or foreign content)
+      * — never a bare NumberFormatException five frames deep. */
+    def readTag(fs: FileSystem, dir: Path, name: String): Option[Long] = {
+      val p = tagFile(dir, name)
+      if (!fs.exists(p)) None
+      else {
+        val raw = readSmall(fs, p).trim
+        try Some(raw.toLong)
+        catch {
+          case _: NumberFormatException => throw new IllegalStateException(
+            s"tag file $p is unreadable (content: '${raw.take(40)}') — a " +
+            "torn write; re-tag to rewrite it or delete the file to " +
+            "release the pin")
+        }
+      }
+    }
+
+    /** All tags: name → pinned version. Rename tmps are not tags: a
+      * strand read as a phantom tag would pin versions against
+      * vacuum until the next sweep (round 14 ADVICE). */
+    def tags(fs: FileSystem, dir: Path): Map[String, Long] =
+      if (!fs.exists(dir)) Map.empty
+      else fs.listStatus(dir).map(_.getPath.getName).collect {
+        case n @ TagRe(name) if !TmpRe.matches(n) => name
+      }.flatMap(name => readTag(fs, dir, name).map(name -> _)).toMap
+
+    def untag(fs: FileSystem, dir: Path, name: String): Unit =
+      fs.delete(tagFile(dir, name), false)
+
+    /** Markers below the retention floor go with their manifests; the
+      * max marker is current ≥ floor, so resolution is unchanged. */
+    def sweepMarkersBelow(fs: FileSystem, listing: Array[Path],
+        floor: Long): Unit =
+      listing.filter(p => p.getName match {
+        case MarkerRe(n) => n.toLong < floor
+        case _ => false
+      }).foreach(fs.delete(_, false))
+
+    /** Crash-stranded rename tmps (pointer swaps, tag writes, claims):
+      * readers already ignore them, so this is accumulation cleanup,
+      * not correctness (round-11 ADVICE). */
+    def sweepTmps(fs: FileSystem, listing: Array[Path]): Unit =
+      listing.filter(p => TmpRe.matches(p.getName)).foreach(fs.delete(_, false))
+  }
+
+  private val TagName = "[A-Za-z0-9][A-Za-z0-9._-]*"
+
+  /** This store's log: `_current`, `_v<n>.list` (member dir names,
+    * plus `!<file>` lines for consumed flats), `_commit.<n>`,
+    * `_tag.<name>`. Member data dirs are `d<n>-<role>`. */
+  private val Store = new Log("_current", "_v", "_commit.", "_tag.")
+  private val MemberRe = "d(\\d+)-.*".r
+
+  private[sources] def memberDirName(v: Long, role: String): String =
+    s"d$v-$role"
 
   /** The committed version, or None if the directory is not a managed
     * store (legacy flat data, or nothing there yet). Resolution spans
     * BOTH commit modes: the `_current` pointer (POSIX rename mode)
-    * and `_commit.<n>` markers (object-store mode) — versions are
-    * monotone across modes, so the max is the truth. */
-  def currentVersion(fs: FileSystem, dir: Path): Option[Long] = {
-    if (!fs.exists(dir)) return None
-    val p = pointer(dir)
-    val fromPtr =
-      if (fs.exists(p)) Some(readSmall(fs, p).trim.toLong) else None
-    val fromMarkers = fs.listStatus(dir).map(_.getPath.getName).collect {
-      case MarkerRe(n) => n.toLong
-    }
-    (fromMarkers ++ fromPtr).reduceOption(_ max _)
-  }
+    * and `_commit.<n>` markers (object-store mode). */
+  def currentVersion(fs: FileSystem, dir: Path): Option[Long] =
+    Store.currentVersion(fs, dir)
+
+  /** Does a store dir listing hold a COMMITTED version (pointer or
+    * marker)? What a reader asks: only a committed store reads its
+    * manifest's read set. */
+  def isCommitted(listing: Array[FileStatus]): Boolean =
+    Store.isCommitted(listing.map(_.getPath.getName))
+
+  /** Does a listing hold the pointer or ANY manifest, claimed or
+    * published? What an overwrite guard asks — deliberately wider
+    * than [[isCommitted]]: a claimed but unpublished first version
+    * must be guarded against overwrite, but must not be read. */
+  def holdsManifest(listing: Array[FileStatus]): Boolean =
+    Store.holdsManifest(listing.map(_.getPath.getName))
+
+  /** A member data dir (`d<n>-<role>`), committed or stranded? */
+  def isMemberDir(s: FileStatus): Boolean =
+    s.isDirectory && MemberRe.matches(s.getPath.getName)
+
+  /** Committed versions whose manifests are still on disk (vacuum
+    * keeps the last `keep` plus tagged pins), ascending; the time
+    * travel range of `Lake.readStoreAt`. */
+  def retainedVersions(fs: FileSystem, dir: Path): Seq[Long] =
+    currentVersion(fs, dir).fold(Seq.empty[Long])(versionsUpTo(fs, dir, _))
+
+  private def versionsUpTo(fs: FileSystem, dir: Path, cur: Long): Seq[Long] =
+    Store.manifests(fs.listStatus(dir).map(_.getPath))
+      .map(_._1).filter(_ <= cur).sorted.toSeq
 
   /** Member data-dir names of version `v` (manifest order). */
   def members(fs: FileSystem, dir: Path, v: Long): Seq[String] =
-    manifestLines(fs, dir, v).filterNot(_.startsWith("!"))
+    Store.lines(fs, dir, v).filterNot(_.startsWith("!"))
 
   /** Flat top-level files version `v` consumed (names only). */
   def consumedFlats(fs: FileSystem, dir: Path, v: Long): Seq[String] =
-    manifestLines(fs, dir, v).filter(_.startsWith("!"))
+    Store.lines(fs, dir, v).filter(_.startsWith("!"))
       .map(_.stripPrefix("!"))
 
   /** Resolve the store to its current snapshot's member data-dir
@@ -372,12 +583,7 @@ object Snapshot {
     * its rows. */
   private def consumedUpTo(fs: FileSystem, dir: Path,
       cur: Long): Set[String] =
-    fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.matches("_v\\d+\\.list"))
-      .map(p => p.getName.stripPrefix("_v").stripSuffix(".list").toLong)
-      .filter(_ <= cur)
-      .flatMap(v => consumedFlats(fs, dir, v))
-      .toSet
+    versionsUpTo(fs, dir, cur).flatMap(consumedFlats(fs, dir, _)).toSet
 
   /** Flat top-level files still LIVE: present on disk and consumed by
     * no committed version (for an unmanaged dir, all of them). These
@@ -448,24 +654,10 @@ object Snapshot {
     if (base >= 0 && cur != base)
       throw ConcurrentCommitException(dir.toString, base + 1L, cur)
     val next = (if (base >= 0) base else cur) + 1L
-    // THE CLAIM — a true create-fails-if-exists on the manifest, the
-    // one step two racing writers cannot both win ([[createExclusive]]:
-    // O_EXCL on file://, an atomic namespace op on HDFS, a conditional
-    // PUT on a real object store). Nobody reads a manifest above the
-    // published version, so the claim's in-flight write is
-    // unobservable. Losing the claim aborts HERE, before any unhide —
-    // the winner's committed data is never touched by the loser.
-    val manifest = listFile(dir, next)
-    val body = (memberDirs ++ consumed.map("!" + _)).mkString("\n")
-    val marker = conf.getBoolean(MarkerCommitKey, false)
-    try createExclusive(fs, manifest, body)
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: org.apache.hadoop.fs.PathExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
-        throw ConcurrentCommitException(dir.toString, next,
-          currentVersion(fs, dir).getOrElse(0L))
-    }
+    // losing the claim aborts HERE, before any unhide — the winner's
+    // committed data is never touched by the loser
+    Store.claim(fs, dir, next,
+      (memberDirs ++ consumed.map("!" + _)).mkString("\n"))
     // unhide staged members as late as possible: on a never-managed
     // (legacy flat) store this is the only instant an uncommitted dir
     // is visible to a PLAIN reader — one rename per member, not the
@@ -482,29 +674,7 @@ object Snapshot {
       require(fs.exists(fin),
         s"snapshot commit: member dir $fin was never staged or written")
     }
-    if (marker) {
-      // object-store mode: the one atomic publish step is a single
-      // WRITE-ONCE object PUT (visible in full or not at all on
-      // S3/ABFS; on HDFS a pre-close reader sees a zero-length
-      // marker, which is equally a commit — presence, not content, is
-      // the signal). Only the claim winner reaches here, so an
-      // existing marker is a protocol violation — loud, not absorbed.
-      try createExclusive(fs, markerFile(dir, next), next.toString)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException =>
-          throw ConcurrentCommitException(dir.toString, next,
-            currentVersion(fs, dir).getOrElse(0L))
-      }
-    } else {
-      // the one atomic publish step: rename-over of the pointer file
-      // (real rename(2) on file://, one NameNode op on HDFS — see
-      // writeAtomicOver). Monotone by construction: claiming n+1
-      // requires seeing n published, so no writer can publish past an
-      // unpublished claim — the pointer never moves backward under
-      // the protocol.
-      writeAtomicOver(fs, conf, pointer(dir), next.toString)
-    }
+    Store.publish(fs, conf, dir, next)
     next
   }
 
@@ -555,30 +725,14 @@ object Snapshot {
     * crashed attempt (neither was ever committed — see crash matrix).
     * Same-role name collisions are not a live-writer hazard:
     * concurrent jobs use distinct roles by contract (merge / compact /
-    * retention / purge already do).
-    *
-    * The next version's stranded claim manifest (a crash between the
-    * claim and the publish leaves `_v<n+1>.list`, which the
-    * create-fails-if-exists claim could never re-claim) is reclaimed
-    * here ONLY once it is older than `claimGraceMs` (round-13 ADVICE:
-    * the unconditional delete erased a LIVE racer's claim during its
-    * claim→publish window — the loser's pointer swap then published a
-    * version with no manifest, or a second writer re-claimed the same
-    * version, the exact silent lost-update the claim exists to
-    * prevent). A live claim is milliseconds old — metadata ops only —
-    * so the five-minute default is a vast margin; a crashed strand
-    * younger than the grace makes the next commit fail LOUDLY
+    * retention / purge already do). The next version's stranded claim
+    * manifest is reclaimed here once older than `claimGraceMs`
+    * ([[Log.nextClaimable]]); younger, the next commit fails LOUDLY
     * (ConcurrentCommitException) until the grace passes or the
     * operator calls [[recoverStrandedClaim]] on restart. */
   def stageDirName(fs: FileSystem, dir: Path, role: String,
       claimGraceMs: Long = DefaultClaimGraceMs): String = {
-    val next = currentVersion(fs, dir).getOrElse(0L) + 1L
-    val strandList = listFile(dir, next)
-    if (fs.exists(strandList) &&
-        System.currentTimeMillis() -
-          fs.getFileStatus(strandList).getModificationTime > claimGraceMs)
-      fs.delete(strandList, false)
-    val name = s"d$next-$role"
+    val name = memberDirName(Store.nextClaimable(fs, dir, claimGraceMs), role)
     Seq(new Path(dir, name), stagePath(dir, name)).foreach { stranded =>
       if (fs.exists(stranded)) fs.delete(stranded, true)
     }
@@ -595,11 +749,9 @@ object Snapshot {
     * where the single-writer contract guarantees no live claim
     * exists; calling it while another writer is mid-commit would
     * erase that writer's live claim (the hole the round-13 age gate
-    * closed). Mirrors [[PublishSet.recoverStrandedClaim]]. */
-  def recoverStrandedClaim(fs: FileSystem, dir: Path): Boolean = {
-    val strand = listFile(dir, currentVersion(fs, dir).getOrElse(0L) + 1L)
-    fs.exists(strand) && fs.delete(strand, false)
-  }
+    * closed). */
+  def recoverStrandedClaim(fs: FileSystem, dir: Path): Boolean =
+    Store.recoverStrandedClaim(fs, dir)
 
   /** Named TAGS — Delta/Iceberg-style refs over retained versions:
     * `_tag.<name>` holds one line, the pinned version. The feature a
@@ -616,43 +768,26 @@ object Snapshot {
     * mode uses a plain PUT, atomic per object-store visibility).
     * Tag state is consulted by vacuum ONLY — resolution of `current`
     * never reads tags, so a deleted tag can't strand a reader. */
-  private def tagFile(dir: Path, name: String) = new Path(dir, s"_tag.$name")
-  private val TagRe = "_tag\\.([A-Za-z0-9][A-Za-z0-9._-]*)".r
-
   def tag(fs: FileSystem, conf: Configuration, dir: Path,
       name: String, version: Long): Unit = {
-    require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-        !name.endsWith(".tmp") && !name.contains(".tmp."),
-      s"tag name must be [A-Za-z0-9][A-Za-z0-9._-]* (no .tmp segment): $name")
+    Store.checkTagName(name)
     val cur = currentVersion(fs, dir).getOrElse(
       throw new IllegalArgumentException(s"$dir is not a managed store"))
     require(version >= 1 && version <= cur &&
-        fs.exists(listFile(dir, version)),
+        fs.exists(Store.listFile(dir, version)),
       s"tag target $version not a retained committed version of $dir (current $cur)")
-    if (conf.getBoolean(MarkerCommitKey, false))
-      writeSmall(fs, tagFile(dir, name), version.toString)
-    else
-      writeAtomicOver(fs, conf, tagFile(dir, name), version.toString)
+    Store.writeTag(fs, conf, dir, name, version)
   }
 
-  /** All tags: name → pinned version. */
+  /** All tags: name → pinned version; a torn tag file fails loudly. */
   def tags(fs: FileSystem, dir: Path): Map[String, Long] =
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).map(_.getPath.getName).collect {
-      // Also exclude ".tmp.<uuid>" — writeAtomicOver's crash strands
-      // on non-local filesystems are `_tag.<name>.tmp.<uuid>`, which
-      // TagRe fully matches; a strand parsed as a phantom tag would
-      // pin versions in vacuum until the next sweep (round 14 ADVICE).
-      case n @ TagRe(name)
-          if !n.endsWith(".tmp") && !n.contains(".tmp.") =>
-        name -> readSmall(fs, new Path(dir, n)).trim.toLong
-    }.toMap
+    Store.tags(fs, dir)
 
   def tagVersion(fs: FileSystem, dir: Path, name: String): Option[Long] =
-    tags(fs, dir).get(name)
+    Store.readTag(fs, dir, name)
 
   def untag(fs: FileSystem, dir: Path, name: String): Unit =
-    fs.delete(tagFile(dir, name), false)
+    Store.untag(fs, dir, name)
 
   /** Drop manifests older than the last `keep` versions (and stale
     * FUTURE manifests a crashed attempt left above `_current`) and
@@ -666,9 +801,8 @@ object Snapshot {
     currentVersion(fs, dir).foreach { cur =>
       val floor = cur - keep + 1
       val st = fs.listStatus(dir)
-      val lists = st.map(_.getPath).filter(_.getName.matches("_v\\d+\\.list"))
-      def vOf(p: Path): Long =
-        p.getName.stripPrefix("_v").stripSuffix(".list").toLong
+      val paths = st.map(_.getPath)
+      val lists = Store.manifests(paths)
       // flats consumed by a version STRICTLY BELOW current are one
       // version past their retention — physically delete them. The
       // current version's consumed flats stay (a reader on the
@@ -676,22 +810,20 @@ object Snapshot {
       // hides them from everyone resolving now. Deletes run BEFORE the
       // manifest drop below so a crash in between can't orphan the
       // exclusion rule.
-      val consumedOld = lists.filter(l => vOf(l) < cur)
-        .flatMap(l => manifestLines(fs, dir, vOf(l))
-          .filter(_.startsWith("!")).map(_.stripPrefix("!"))).toSet
-      st.map(_.getPath)
-        .filter(p => consumedOld.contains(p.getName))
+      val consumedOld = lists.collect { case (v, _) if v < cur => v }
+        .flatMap(consumedFlats(fs, dir, _)).toSet
+      paths.filter(p => consumedOld.contains(p.getName))
         .foreach(fs.delete(_, false))
       // a stale future manifest (crash after manifest, before swap)
       // must not pin its stranded dirs alive; a TAGGED version's
       // manifest (and, via `referenced` below, its member dirs)
       // survives past the keep window until untag releases it
       val tagged = tags(fs, dir).values.toSet
-      val (retainedLists, deadLists) =
-        lists.partition(l => (vOf(l) >= floor || tagged.contains(vOf(l))) &&
-          vOf(l) <= cur)
-      val referenced = retainedLists.flatMap(l =>
-        manifestLines(fs, dir, vOf(l)).filterNot(_.startsWith("!"))).toSet
+      val (retainedLists, deadLists) = lists.partition { case (v, _) =>
+        (v >= floor || tagged.contains(v)) && v <= cur
+      }
+      val referenced =
+        retainedLists.flatMap { case (v, _) => members(fs, dir, v) }.toSet
       // ABOVE-current artifacts may belong to a LIVE concurrent
       // writer (round 14 — concurrent merges are now in contract):
       // between its claim and its pointer swap, a committer's
@@ -708,14 +840,11 @@ object Snapshot {
         newest > 0L &&
           System.currentTimeMillis() - newest > DefaultClaimGraceMs
       }
-      val MemberRe = "d(\\d+)-.*".r
-      st.map(_.getPath)
-        .filter(p => (p.getName match {
-          case MemberRe(k) =>
-            !referenced.contains(p.getName) && (k.toLong <= cur || agedOut(p))
-          case _ => false
-        }))
-        .foreach(fs.delete(_, true))
+      paths.filter(p => p.getName match {
+        case MemberRe(k) =>
+          !referenced.contains(p.getName) && (k.toLong <= cur || agedOut(p))
+        case _ => false
+      }).foreach(fs.delete(_, true))
       // stranded hidden stage dirs from crashed attempts — but ONLY
       // those targeting an ALREADY-COMMITTED version (d<k>-* with
       // k <= current): a stage named d<current+1>-* may be another
@@ -747,36 +876,14 @@ object Snapshot {
           case _ => false
         }) && strandAgedOut(fs, p.getPath)
       }.foreach(p => fs.delete(p.getPath, true))
-      // stranded rename tmps from crashed tag writes, pointer swaps,
-      // and (legacy) manifest claims: readers already ignore them
-      // (tags() filters .tmp, dotfile tmps are hidden by convention,
-      // claims resolve only through the published manifest name), so
-      // this is accumulation cleanup, not correctness — round-11
-      // ADVICE; round-13 adds the writer-unique pointer/tag tmp
-      // shapes writeAtomicOver leaves on a crash
-      st.map(_.getPath)
-        .filter(p => p.getName.matches("_tag\\..*\\.tmp") ||
-          p.getName.matches("_tag\\..*\\.tmp\\..*") ||
-          p.getName.matches("_v\\d+\\.list\\.tmp\\..*") ||
-          p.getName.matches("_current\\.tmp\\..*") ||
-          p.getName.matches("\\._current\\.tmp\\..*") ||
-          p.getName.matches("\\._tag\\..*\\.tmp\\..*"))
+      Store.sweepTmps(fs, paths)
+      // same live-writer guard for manifests: a FUTURE list (v > cur)
+      // may be a concurrent committer's claim mid-window; only an aged
+      // one is a crash strand. Below-floor lists are committed
+      // history — immediate.
+      deadLists.collect { case (v, l) if v <= cur || agedOut(l) => l }
         .foreach(fs.delete(_, false))
-      // same live-writer guard for manifests: a FUTURE list
-      // (vOf > cur) may be a concurrent committer's claim mid-window;
-      // only an aged one is a crash strand. Below-floor lists are
-      // committed history — immediate.
-      deadLists.filter(l => vOf(l) <= cur || agedOut(l))
-        .foreach(fs.delete(_, false))
-      // markers below the retention floor go with their manifests;
-      // the max marker is >= floor by construction, so resolution
-      // (max over survivors) is unchanged
-      st.map(_.getPath).filter { p =>
-        p.getName match {
-          case MarkerRe(n) => n.toLong < floor
-          case _ => false
-        }
-      }.foreach(fs.delete(_, false))
+      Store.sweepMarkersBelow(fs, paths, floor)
     }
   }
 }

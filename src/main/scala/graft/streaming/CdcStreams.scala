@@ -171,11 +171,6 @@ object CdcStreams {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(dir)
 
-  /** Batch twin. */
-  def readEnvelopeBatchResolved(spark: SparkSession, pathOrGlob: String,
-      rowSchema: StructType): DataFrame =
-    spark.read.schema(envelopeSchemaResolved(rowSchema)).json(pathOrGlob)
-
   /** HLC ("<nanos>.<logical>") as an orderable value: decimal(38,10)
     * preserves the full 19-digit nanosecond part plus the 10-digit
     * logical counter exactly (a double would lose the low bits that

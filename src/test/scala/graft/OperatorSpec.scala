@@ -449,6 +449,15 @@ class OperatorSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.sources.Snapshot.tag(fs, conf, p, "future", cur + 9L)
     }
+    // a torn tag file is an actionable error naming the file, not a
+    // bare NumberFormatException
+    val torn = fs.create(new Path(p, "_tag.bad"), true)
+    torn.write("garbage".getBytes("UTF-8")); torn.close()
+    Seq[() => Any](() => graft.sources.Snapshot.tagVersion(fs, p, "bad"),
+        () => graft.sources.Snapshot.tags(fs, p)).foreach { read =>
+      val msg = intercept[IllegalStateException](read()).getMessage
+      assert(msg.contains("torn") && msg.contains("_tag.bad"), msg)
+    }
   }
 
   test("PublishSet composed tag pins every member store against member vacuums; untag releases") {
@@ -2753,7 +2762,8 @@ class OperatorSpec extends AnyFunSuite {
       ((col("id") * 2654435761L) % 1000).as("b"))
     val zDir = TestSpark.tmpDir("zorder") + "/z"
     val linDir = TestSpark.tmpDir("zorder-lin") + "/lin"
-    graft.sources.Lake.writeZOrdered(df, "a", "b", zDir, bits = 10, outFiles = 16)
+    graft.sources.Lake.writeZOrderedN(df, Seq("a", "b"), zDir, bits = 10,
+      outFiles = 16)
     df.repartitionByRange(16, col("a")).sortWithinPartitions("a")
       .write.parquet(linDir)
     // parquet footers: how many files could contain col = 500?
